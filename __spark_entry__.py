@@ -5629,36 +5629,29 @@ def q_scandi_keyword_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     position, with no-op normalizations deduplicated; the normalizer
     itself is pinned on the reference's complete vector set
     (tests/test_miscfilters2.py)."""
-    import numpy as np
+    from functools import partial
 
-    from lucene_solr_spark.analysis.analyzer import analyze_batch_flat
+    from lucene_solr_spark.analysis.analyzer import (
+        analyze_chain,
+        lowercase_stop,
+        standard_tokenizer,
+    )
     from lucene_solr_spark.analysis.miscfilters import (
         scandinavian_normalization,
     )
 
-    def chain(content):
-        doc_idx, terms, pos = analyze_batch_flat(content)
-        if terms.size == 0:
-            return doc_idx, terms, pos
-        od, ot, op = [], [], []
-        memo: dict[str, str] = {}
-        for di, t, p in zip(doc_idx, terms, pos):
-            od.append(di)
-            ot.append(t)
-            op.append(p)
-            n = memo.get(t)
-            if n is None:
-                n = scandinavian_normalization(t)
-                memo[t] = n
-            if n != t:
-                od.append(di)
-                ot.append(n)
-                op.append(p)
-        return (
-            np.asarray(od, dtype=doc_idx.dtype),
-            np.asarray(ot, dtype=object),
-            np.asarray(op, dtype=pos.dtype),
-        )
+    lower_stop = lowercase_stop()
+
+    def exact_and_normalized(tok):
+        t = lower_stop(tok)
+        n = None if t is None else scandinavian_normalization(t)
+        return t if n == t else [t, n]
+
+    chain = partial(
+        analyze_chain,
+        tokenizer=standard_tokenizer,
+        token_fn=exact_and_normalized,
+    )
 
     d = _table(spark, sf_dir, "documents")
     t = build_tables(

@@ -1,8 +1,7 @@
-"""Analysis chain: StandardTokenizer-equivalent + LowerCase + Stop filters."""
+"""Analysis chains: a tokenizer plus a per-token function, run by one
+batch driver (analysis/analyzer.py)."""
 
 from lucene_solr_spark.analysis.analyzer import (  # noqa: F401
-    StandardAnalyzer,
-    analyze_batch,
     analyze_batch_codes,
     analyze_batch_flat,
     analyze_text,

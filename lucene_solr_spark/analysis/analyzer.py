@@ -1,60 +1,126 @@
-"""StandardAnalyzer-equivalent chain: tokenize → lowercase → stop.
+"""Analysis chains: a tokenizer plus a per-token function, run by one
+batch driver.
 
-Ref: lucene/analysis/standard/StandardAnalyzer.java:102-108 — the chain is
-StandardTokenizer → StandardFilter (no-op in 7.0) → LowerCaseFilter →
-StopFilter(33 English stopwords).
+Lucene builds every analyzer as a Tokenizer followed by TokenFilters.
+Here a chain is a pair ``(tokenizer, token_fn)``:
 
-Position semantics: StopFilter *increments the position gap* across
-dropped tokens (analysis/FilteringTokenFilter.java:46-60), so surviving
-tokens keep their original position numbers — phrase queries must see the
-gaps.  Field length for norms counts only the tokens the final stream
-emits (FieldInvertState.length, index/DefaultIndexingChain.java:759-771),
+- A *tokenizer* maps a batch of document strings to ``(codes, vocab,
+  counts)``: one vocabulary code per emitted token in document order,
+  the distinct raw tokens, and each document's token count.  A token's
+  position is its index in its document.  A ``None`` vocabulary entry
+  is a hole: it takes its position but emits nothing.
+  :func:`per_document` lifts a ``str -> list[str]`` splitter into a
+  tokenizer.
+- A *token function* maps one raw token to ``None`` (dropped, its
+  position gap kept — FilteringTokenFilter.java:46-60), one term, or a
+  list of terms stacked at the token's position (positionIncrement 0).
+
+:func:`analyze_chain_codes` is the driver.  It calls the token function
+once per DISTINCT raw token of the batch (corpus token frequency follows
+Zipf, so per-token Python is paid per unique term) and expands the
+results back with numpy gathers.  Null or NaN content is an empty
+document.
+
+StandardAnalyzer (StandardAnalyzer.java:102-108) is
+:func:`standard_tokenizer` + :func:`lowercase_stop`.  Field length for
+norms counts only the tokens the final stream emits
+(FieldInvertState.length, index/DefaultIndexingChain.java:759-771),
 i.e. kept tokens after stop removal.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from functools import partial
+from itertools import chain
 
 import numpy as np
 import pandas as pd
 
+from lucene_solr_spark.analysis.porter import porter_stem, strip_possessive
 from lucene_solr_spark.analysis.stopwords import ENGLISH_STOP_WORDS
 from lucene_solr_spark.analysis.tokenizer import (
+    _ASCII_FULL,
     DEFAULT_MAX_TOKEN_LENGTH,
     raw_tokens,
     tokenize,
 )
 
 
-def analyze_text(
-    text: str,
-    stopwords: frozenset[str] = ENGLISH_STOP_WORDS,
-    max_token_length: int = DEFAULT_MAX_TOKEN_LENGTH,
-) -> tuple[list[str], list[int]]:
-    """Analyze one document → (terms, positions) with stop gaps preserved."""
-    tokens, positions = tokenize(text, max_token_length)
-    terms: list[str] = []
-    out_pos: list[int] = []
-    for tok, pos in zip(tokens, positions):
-        low = tok.lower()
-        if low in stopwords:
-            continue
-        terms.append(low)
-        out_pos.append(pos)
-    return terms, out_pos
+def _ragged(lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Items laid end to end with ``lens[i]`` slots each → per slot, the
+    owning item and the slot's index within it."""
+    if lens.size and lens.max() <= 1:  # one slot or none per item
+        owner = np.flatnonzero(lens)
+        return owner, np.zeros(owner.size, dtype=np.int64)
+    starts = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=starts[1:])
+    total = int(starts[-1])
+    # owner per slot without np.repeat (measured several times slower):
+    # count the item starts landing on each slot, then cumsum
+    owner = np.cumsum(np.bincount(starts[1:-1], minlength=total + 1)[:total])
+    return owner, np.arange(total, dtype=np.int64) - starts[owner]
 
 
-# Batch translate table for the whole-batch ASCII tokenize path: every
-# ASCII char that can neither appear inside a token ([A-Za-z0-9_]) nor
-# join token segments (. ' , ;) becomes a space; \x1f survives as the
-# document separator (it is mapped to itself and never occurs in ASCII
-# corpus text routed here only after an isascii() check... it IS ascii —
-# guarded by an explicit containment check below).
-# '|' is not a token/joiner char, so every natural occurrence is
-# translated to a space BEFORE the join — surviving '|' blobs are
-# exactly the document separators (and '|' is not str.split whitespace,
-# unlike \x1c–\x1f).
+def _expand(codes: np.ndarray, lens: np.ndarray, flat: np.ndarray):
+    """Unique item ``i`` owns ``lens[i]`` consecutive entries of ``flat``;
+    expand them for every occurrence ``codes[k]`` → (occurrence ``k`` of
+    each output, the output entries)."""
+    off = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    src, within = _ragged(lens[codes])
+    return src, flat[off[codes[src]] + within]
+
+
+def _factorize(values) -> tuple[np.ndarray, np.ndarray]:
+    codes, uniques = pd.factorize(pd.Series(values, dtype=object), sort=False)
+    return codes, np.asarray(uniques, dtype=object)
+
+
+def per_document(split):
+    """Tokenizer that runs ``split(text) -> list[str]`` on each document."""
+
+    def tokenizer(texts: list[str]):
+        lists = [split(t) for t in texts]
+        counts = np.fromiter(map(len, lists), dtype=np.int64, count=len(lists))
+        return (*_factorize(list(chain.from_iterable(lists))), counts)
+
+    return tokenizer
+
+
+whitespace_tokenizer = per_document(str.split)
+
+
+def analyze_chain_codes(content, tokenizer, token_fn):
+    """The batch driver → ``(doc_index, term_codes, vocab, positions)``:
+    per-token ints plus the vocabulary of emitted terms, so inverted-index
+    kernels can sort/group by code without re-factorizing strings."""
+    texts = pd.Series(content, dtype=object).fillna("").astype(str).tolist()
+    codes, vocab, counts = tokenizer(texts)
+    doc_idx, pos = _ragged(counts)
+    outs = []
+    for v in vocab:
+        o = None if v is None else token_fn(v)
+        outs.append(() if o is None else (o,) if isinstance(o, str) else o)
+    lens = np.fromiter(map(len, outs), dtype=np.int64, count=len(outs))
+    out_codes, terms = _factorize(list(chain.from_iterable(outs)))
+    src, term_codes = _expand(codes, lens, out_codes)
+    return doc_idx[src], term_codes, terms, pos[src]
+
+
+def analyze_chain(content, tokenizer, token_fn):
+    """The batch driver → flat ``(doc_index, terms, positions)``, the
+    ``build_tables(analyzer=...)`` contract."""
+    doc_idx, codes, terms, pos = analyze_chain_codes(content, tokenizer, token_fn)
+    return doc_idx, terms[codes], pos
+
+
+# ------------------------------------------------ the standard tokenizer
+# Whole-batch ASCII path: every ASCII char that can neither appear inside
+# a token ([A-Za-z0-9_]) nor join token segments (. ' , ;) becomes a
+# space.  '|' is not a token/joiner char, so every natural occurrence is
+# translated to a space BEFORE the join — surviving '|' blobs are exactly
+# the document separators (and '|' is not str.split whitespace, unlike
+# \x1c–\x1f).
 _SEP = "|"
 _BLOB_KEEP = set(
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789_.',;"
@@ -76,120 +142,85 @@ def _batch_blob_split(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
     return blobs[~is_sep], doc_of_blob[~is_sep]
 
 
-def _tokens_from_blobs(
-    blobs: np.ndarray, doc_of_blob: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Expand blobs → per-token (term code, doc index) + the term
-    vocabulary, running the ASCII UAX#29 pattern over the unique blobs
-    only.  Returning CODES (not strings) lets the caller skip a second
-    token-level factorize — the only per-token ops are int gathers."""
-    from lucene_solr_spark.analysis.tokenizer import _ASCII_FULL
+_split_blobs = per_document(
+    lambda b: [b] if _PUNCT.isdisjoint(b) else _ASCII_FULL.findall(b)
+)
+_split_docs = per_document(raw_tokens)
 
-    codes, ublobs = pd.factorize(pd.Series(blobs, dtype=object), sort=False)
-    utoks: list[list[str]] = [
-        [b] if _PUNCT.isdisjoint(b) else _ASCII_FULL.findall(b)
-        for b in np.asarray(ublobs, dtype=object)
-    ]
-    ulens = np.fromiter((len(t) for t in utoks), dtype=np.int64, count=len(utoks))
-    uflat = np.empty(int(ulens.sum()), dtype=object)
-    uoff = np.zeros(ulens.size + 1, dtype=np.int64)
-    np.cumsum(ulens, out=uoff[1:])
-    for t, o in zip(utoks, uoff[:-1].tolist()):
-        uflat[o : o + len(t)] = t
-    # term vocabulary over the (small) per-unique-blob token table
-    tcodes_u, tvocab = pd.factorize(pd.Series(uflat, dtype=object), sort=False)
-    lens = ulens[codes]
-    total = int(lens.sum())
-    # ragged gather: token i of blob j reads slot uoff[codes[j]] + i
-    starts = np.zeros(lens.size + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-    blob_of_tok = np.zeros(total, dtype=np.int64)
-    nz = starts[1:-1][starts[1:-1] < total]
-    np.add.at(blob_of_tok, nz, 1)
-    np.cumsum(blob_of_tok, out=blob_of_tok)
-    within = np.arange(total, dtype=np.int64) - starts[blob_of_tok]
-    term_codes = tcodes_u[uoff[codes[blob_of_tok]] + within]
-    return term_codes, np.asarray(tvocab, dtype=object), doc_of_blob[blob_of_tok]
+
+def standard_tokenizer(
+    texts: list[str], max_token_length: int = DEFAULT_MAX_TOKEN_LENGTH
+):
+    """StandardTokenizer over a batch (UAX#29 subset, analysis/tokenizer.py).
+
+    All-ASCII batches (the overwhelmingly common case for source code)
+    take the whole-batch path: one C-level translate + split over the
+    concatenated batch, then the ASCII UAX#29 pattern once per UNIQUE
+    blob, expanded to tokens with int gathers.  Other batches run
+    ``raw_tokens`` per document.  A token longer than
+    ``max_token_length`` becomes a hole: skipped, but it still takes its
+    position (StandardTokenizer.java:182-192)."""
+    if texts and all(t.isascii() for t in texts):
+        blobs, doc_of_blob = _batch_blob_split(texts)
+        blob_codes, ublobs = _factorize(blobs)
+        ucodes, vocab, ulens = _split_blobs(ublobs)
+        blob_of_tok, codes = _expand(blob_codes, ulens, ucodes)
+        counts = np.bincount(doc_of_blob[blob_of_tok], minlength=len(texts))
+    else:
+        codes, vocab, counts = _split_docs(texts)
+    vlen = np.fromiter(map(len, vocab), dtype=np.int64, count=vocab.size)
+    vocab[vlen > max_token_length] = None
+    return codes, vocab, counts
+
+
+# ---------------------------------------------------- token functions
+def lowercase_stop(stopwords: frozenset[str] = ENGLISH_STOP_WORDS):
+    """Token function LowerCaseFilter → StopFilter (None = stopped)."""
+
+    def token_fn(token: str):
+        low = token.lower()
+        return None if low in stopwords else low
+
+    return token_fn
+
+
+def _english_token(stopwords: frozenset[str], token: str):
+    # EnglishPossessiveFilter runs BEFORE the stop filter — chain order
+    # matters for "it's" → "it"
+    t = strip_possessive(token.lower())
+    return None if t in stopwords else porter_stem(t)
+
+
+# ------------------------------------------------------------- chains
+def analyze_text(
+    text: str,
+    stopwords: frozenset[str] = ENGLISH_STOP_WORDS,
+    max_token_length: int = DEFAULT_MAX_TOKEN_LENGTH,
+) -> tuple[list[str], list[int]]:
+    """StandardAnalyzer over one document (the query side) → (terms,
+    positions) with stop gaps preserved; no pandas on this path."""
+    token_fn = lowercase_stop(stopwords)
+    terms: list[str] = []
+    out_pos: list[int] = []
+    for tok, pos in zip(*tokenize(text, max_token_length)):
+        t = token_fn(tok)
+        if t is not None:
+            terms.append(t)
+            out_pos.append(pos)
+    return terms, out_pos
 
 
 def analyze_batch_flat(
     content: pd.Series,
     stopwords: frozenset[str] = ENGLISH_STOP_WORDS,
     max_token_length: int = DEFAULT_MAX_TOKEN_LENGTH,
-    codes_out: bool = False,
-) -> tuple[np.ndarray, ...]:
-    """Fully vectorized batch analysis → flat arrays
-    ``(doc_index, terms, positions)``.
-
-    All-ASCII batches (the overwhelmingly common case for source code)
-    take the whole-batch path: one C-level translate + split over the
-    concatenated batch, then the UAX#29 pattern once per UNIQUE blob —
-    per-token and per-doc Python disappears entirely.  Mixed batches
-    fall back to one ``findall`` per document.  Lowercase, the 255-char
-    skip rule (dropped tokens still consume their position), and the
-    stopword mask (position gaps preserved) all run as batch
-    pandas/numpy ops.  This is the shape the invert kernels consume
-    directly (they re-flatten anyway).
-    """
-    texts = content.astype(str).tolist()
-    batch_ok = all(t.isascii() for t in texts)
-    if texts and batch_ok:
-        blobs, doc_of_blob = _batch_blob_split(texts)
-        codes, vocab_arr, doc_idx_raw = _tokens_from_blobs(blobs, doc_of_blob)
-        total = codes.size
-        # per-doc token offsets from the per-token doc index
-        counts = np.bincount(doc_idx_raw, minlength=len(texts)).astype(np.int64)
-    else:
-        tok_lists = [raw_tokens(t) for t in texts]
-        counts = np.fromiter(
-            (len(l) for l in tok_lists), dtype=np.int64, count=len(tok_lists)
-        )
-        total = int(counts.sum())
-        flat = np.empty(total, dtype=object)
-        i = 0
-        for l in tok_lists:
-            flat[i : i + len(l)] = l
-            i += len(l)
-        # Factorize FIRST, then lowercase / length-skip / stop-mask on
-        # the UNIQUE vocabulary only — per-token string work collapses
-        # to per-unique-term work (measured 6× on the benchmark corpus:
-        # the per-token str.len + isin mask was 65% of the whole
-        # kernel).  The ASCII batch path above gets its codes straight
-        # from the blob expansion, skipping this factorize entirely.
-        codes, vocab = pd.factorize(pd.Series(flat, dtype=object), sort=False)
-        vocab_arr = np.asarray(vocab, dtype=object)
-    offsets = np.zeros(counts.size + 1, dtype=np.int64)
-    np.cumsum(counts, out=offsets[1:])
-    # doc index per token WITHOUT np.repeat (pathologically slow on
-    # this host — measured 130ms/1M elements): mark doc boundaries,
-    # cumsum, then gather each token's doc start for the position.
-    doc_idx = np.zeros(total, dtype=np.int64)
-    starts_nonempty = offsets[1:-1][offsets[1:-1] < total]
-    np.add.at(doc_idx, starts_nonempty, 1)
-    np.cumsum(doc_idx, out=doc_idx)
-    pos = np.arange(total, dtype=np.int64) - offsets[doc_idx]
-    low_vocab = np.array([v.lower() for v in vocab_arr], dtype=object)
-    vlen = np.fromiter(
-        (len(v) for v in vocab_arr), dtype=np.int64, count=vocab_arr.size
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """StandardAnalyzer over one batch → ``(doc_index, terms, positions)``."""
+    return analyze_chain(
+        content,
+        partial(standard_tokenizer, max_token_length=max_token_length),
+        lowercase_stop(stopwords),
     )
-    vkeep = (vlen <= max_token_length) & np.array(
-        [v not in stopwords for v in low_vocab], dtype=bool
-    )
-    keep = vkeep[codes]
-    if codes_out:
-        # merge case variants at vocab level, hand back per-token CODES —
-        # the invert kernel sorts int codes and never touches per-token
-        # strings (its own terms factorize becomes unnecessary)
-        lc_codes_u, lc_vocab = pd.factorize(
-            pd.Series(low_vocab, dtype=object), sort=False
-        )
-        return (
-            doc_idx[keep],
-            lc_codes_u[codes[keep]],
-            np.asarray(lc_vocab, dtype=object),
-            pos[keep],
-        )
-    return doc_idx[keep], low_vocab[codes[keep]], pos[keep]
 
 
 def analyze_batch_codes(
@@ -197,12 +228,12 @@ def analyze_batch_codes(
     stopwords: frozenset[str] = ENGLISH_STOP_WORDS,
     max_token_length: int = DEFAULT_MAX_TOKEN_LENGTH,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Like :func:`analyze_batch_flat` but returns
-    ``(doc_index, term_codes, vocab, positions)`` — per-token ints plus
-    the (lowercased, case-merged) vocabulary, so inverted-index kernels
-    can sort/group by code without re-factorizing term strings."""
-    return analyze_batch_flat(
-        content, stopwords, max_token_length, codes_out=True
+    """StandardAnalyzer over one batch → ``(doc_index, term_codes, vocab,
+    positions)`` (see :func:`analyze_chain_codes`)."""
+    return analyze_chain_codes(
+        content,
+        partial(standard_tokenizer, max_token_length=max_token_length),
+        lowercase_stop(stopwords),
     )
 
 
@@ -213,64 +244,9 @@ def english_analyze_batch_flat(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """EnglishAnalyzer chain (analysis/en/EnglishAnalyzer.java:99-108):
     StandardTokenizer → possessive strip → lowercase → stop → Porter
-    stem.  Same flat-array batch shape as ``analyze_batch_flat``; the
-    stem runs on the factorized VOCABULARY (unique terms), not the
-    token stream — per-word Python cost amortized by term repetition.
-    """
-    from lucene_solr_spark.analysis.porter import porter_stem
-
-    doc_idx, terms, positions = analyze_batch_flat(
-        content, frozenset(), max_token_length
+    stem."""
+    return analyze_chain(
+        content,
+        partial(standard_tokenizer, max_token_length=max_token_length),
+        partial(_english_token, stopwords),
     )
-    if terms.size == 0:
-        return doc_idx, terms, positions
-    s = pd.Series(terms, dtype=object)
-    # possessive strip (ONE suffix, like EnglishPossessiveFilter)
-    # BEFORE the stop filter — chain order matters for "it's" → "it"
-    stripped = s.str.replace(r"['’＇]s$", "", regex=True)
-    keep = ~stripped.isin(list(stopwords)).to_numpy()
-    stripped = stripped[keep]
-    codes, vocab = pd.factorize(stripped, sort=False)
-    stemmed = np.array([porter_stem(t) for t in vocab], dtype=object)
-    return doc_idx[keep], stemmed[codes], positions[keep]
-
-
-def analyze_batch(
-    content: pd.Series,
-    stopwords: frozenset[str] = ENGLISH_STOP_WORDS,
-    max_token_length: int = DEFAULT_MAX_TOKEN_LENGTH,
-) -> pd.DataFrame:
-    """Batch analysis: Series[str] → DataFrame(terms, positions, length).
-
-    List-of-lists view over :func:`analyze_batch_flat` for callers that
-    want per-document rows.
-    """
-    doc_idx, terms, pos = analyze_batch_flat(content, stopwords, max_token_length)
-    n = len(content)
-    kept_counts = np.bincount(doc_idx, minlength=n)
-    splits = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(kept_counts, out=splits[1:])
-    terms_col = [terms[splits[i] : splits[i + 1]].tolist() for i in range(n)]
-    pos_col = [pos[splits[i] : splits[i + 1]].tolist() for i in range(n)]
-    return pd.DataFrame(
-        {
-            "terms": terms_col,
-            "positions": pos_col,
-            "length": kept_counts.astype(np.int64),
-        },
-        index=content.index,
-    )
-
-
-@dataclass(frozen=True)
-class StandardAnalyzer:
-    """Config object mirroring StandardAnalyzer's two knobs."""
-
-    stopwords: frozenset[str] = field(default=ENGLISH_STOP_WORDS)
-    max_token_length: int = DEFAULT_MAX_TOKEN_LENGTH
-
-    def analyze(self, text: str) -> tuple[list[str], list[int]]:
-        return analyze_text(text, self.stopwords, self.max_token_length)
-
-    def analyze_series(self, content: pd.Series) -> pd.DataFrame:
-        return analyze_batch(content, self.stopwords, self.max_token_length)

@@ -41,6 +41,14 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import partial
+
+from lucene_solr_spark.analysis.analyzer import (
+    analyze_chain,
+    lowercase_stop,
+    standard_tokenizer,
+)
+from lucene_solr_spark.analysis.stopwords import ENGLISH_STOP_WORDS
 
 
 @dataclass(frozen=True)
@@ -516,37 +524,22 @@ def hunspell_analyze_batch_flat(
 ):
     """Analyzer-chain hook: StandardTokenizer → lowercase → stop →
     HunspellStemFilter, over one Arrow batch (the build_tables
-    ``analyzer=`` contract).  Stemming is memoized per UNIQUE term in
-    the batch (vocabulary-bounded — the dictionary walk never runs
-    per posting), and a token with several stems emits them all at its
-    position (positionIncrement 0, HunspellStemFilter.java:91-95)."""
-    import numpy as np
-
-    from lucene_solr_spark.analysis.analyzer import analyze_batch_flat
-    from lucene_solr_spark.analysis.stopwords import ENGLISH_STOP_WORDS
-
-    if stopwords is None:
-        stopwords = ENGLISH_STOP_WORDS
-    doc_idx, terms, pos = analyze_batch_flat(
-        content, stopwords, max_token_length
+    ``analyzer=`` contract).  A token with several stems emits them all
+    at its position (positionIncrement 0, HunspellStemFilter.java:91-95)."""
+    lower_stop = lowercase_stop(
+        ENGLISH_STOP_WORDS if stopwords is None else stopwords
     )
-    if terms.size == 0:
-        return doc_idx, terms, pos
-    memo: dict[str, list[str]] = {}
-    out_doc, out_terms, out_pos = [], [], []
-    for di, t, p in zip(doc_idx, terms, pos):
-        st = memo.get(t)
-        if st is None:
-            st = hunspell_stem_token(
-                t, dictionary, dedup=True, longest_only=longest_only
-            )
-            memo[t] = st
-        for s in st:
-            out_doc.append(di)
-            out_terms.append(s)
-            out_pos.append(p)
-    return (
-        np.asarray(out_doc, dtype=doc_idx.dtype),
-        np.asarray(out_terms, dtype=object),
-        np.asarray(out_pos, dtype=pos.dtype),
+
+    def token_fn(tok):
+        t = lower_stop(tok)
+        if t is None:
+            return None
+        return hunspell_stem_token(
+            t, dictionary, dedup=True, longest_only=longest_only
+        )
+
+    return analyze_chain(
+        content,
+        partial(standard_tokenizer, max_token_length=max_token_length),
+        token_fn,
     )

@@ -17,8 +17,11 @@ Stopword lists are the Snowball lists the reference loads at runtime
 
 from __future__ import annotations
 
-import numpy as np
+from functools import partial
+
 import pandas as pd
+
+from lucene_solr_spark.analysis.analyzer import analyze_chain, whitespace_tokenizer
 
 
 # --------------------------------------------------------------- Spanish
@@ -964,9 +967,8 @@ def _irish_stem_lazy(w: str) -> str:
 
 
 def _light_analyze_flat(content: pd.Series, lang: str):
-    """Flat analyzer kernel: tokenize → (elision fr) → lowercase →
-    snowball stop → light stem, with per-batch vocabulary dedup so each
-    unique surface form stems exactly once."""
+    """The light/snowball chain for ``lang``: whitespace tokenize →
+    (elision) → lowercase → (normalize) → snowball stop → stem."""
     stops = _load_stops()[lang]
     norm = None
     if lang == "sorani":
@@ -1043,7 +1045,7 @@ def _light_analyze_flat(content: pd.Series, lang: str):
         "irish": _irish_stem_lazy,
     }[lang]
 
-    tr_fold = None
+    fold = str.lower
     if lang == "turkish":
         # TurkishAnalyzer.java:103-114: ApostropheFilter then
         # TurkishLowerCaseFilter run INSTEAD of the plain lowercase
@@ -1053,7 +1055,7 @@ def _light_analyze_flat(content: pd.Series, lang: str):
             turkish_lowercase,
         )
 
-        tr_fold = lambda tok: turkish_lowercase(  # noqa: E731
+        fold = lambda tok: turkish_lowercase(  # noqa: E731
             apostrophe_strip(tok)
         )
     elif lang == "irish":
@@ -1062,7 +1064,7 @@ def _light_analyze_flat(content: pd.Series, lang: str):
         # case-sensitive (n/t + uppercase vowel -> n-/t- prefix)
         from lucene_solr_spark.analysis.irish import irish_lowercase
 
-        def tr_fold(tok):  # noqa: F811
+        def fold(tok):
             if tok.lower() in ("h", "n", "t"):
                 return ""
             for ap in ("'", "’"):
@@ -1072,60 +1074,22 @@ def _light_analyze_flat(content: pd.Series, lang: str):
                     break
             return irish_lowercase(tok)
 
-    doc_idx_parts, term_parts, pos_parts = [], [], []
-    for di, text in enumerate(content.to_numpy()):
-        toks = str(text).split()
-        terms, poss = [], []
-        for pos, tok in enumerate(toks):
-            t = tr_fold(tok) if tr_fold is not None else tok.lower()
-            if lang in ("french", "french_snowball"):
-                t = french_elision(t)
-            elif lang in ("italian", "italian_snowball"):
-                t = italian_elision(t)
-            elif lang == "catalan":
-                # CatalanAnalyzer DEFAULT_ARTICLES (ignore-case, so
-                # post-lowercase elision is equivalent)
-                t = _elision(t, ("d", "l", "m", "n", "s", "t"))
-            if norm is not None:
-                t = norm(t)
-            if not t or t in stops:
-                continue
-            terms.append(t)
-            poss.append(pos)
-        if terms:
-            doc_idx_parts.append(np.full(len(terms), di, dtype=np.int64))
-            term_parts.append(np.asarray(terms, dtype=object))
-            pos_parts.append(np.asarray(poss, dtype=np.int64))
-    if not term_parts:
-        return (
-            np.zeros(0, dtype=np.int64),
-            np.zeros(0, dtype=object),
-            np.zeros(0, dtype=np.int64),
-        )
-    doc_idx = np.concatenate(doc_idx_parts)
-    terms = np.concatenate(term_parts)
-    poss = np.concatenate(pos_parts)
-    # vocabulary-level stemming: unique surface forms stem once
-    vocab, inv = np.unique(terms.astype(str), return_inverse=True)
-    stemmed = np.array([stem(v) for v in vocab], dtype=object)
-    return doc_idx, stemmed[inv], poss
+    elide = {
+        "french": french_elision,
+        "french_snowball": french_elision,
+        "italian": italian_elision,
+        "italian_snowball": italian_elision,
+        # CatalanAnalyzer DEFAULT_ARTICLES (ignore-case, so
+        # post-lowercase elision is equivalent)
+        "catalan": partial(_elision, articles=("d", "l", "m", "n", "s", "t")),
+    }.get(lang)
 
+    def token_fn(tok):
+        t = fold(tok)
+        if elide is not None:
+            t = elide(t)
+        if norm is not None:
+            t = norm(t)
+        return stem(t) if t and t not in stops else None
 
-def french_analyze_batch_flat(content: pd.Series):
-    return _light_analyze_flat(content, "french")
-
-
-def german_analyze_batch_flat(content: pd.Series):
-    return _light_analyze_flat(content, "german")
-
-
-def spanish_analyze_batch_flat(content: pd.Series):
-    return _light_analyze_flat(content, "spanish")
-
-
-def italian_analyze_batch_flat(content: pd.Series):
-    return _light_analyze_flat(content, "italian")
-
-
-def portuguese_analyze_batch_flat(content: pd.Series):
-    return _light_analyze_flat(content, "portuguese")
+    return analyze_chain(content, whitespace_tokenizer, token_fn)

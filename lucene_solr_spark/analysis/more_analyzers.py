@@ -1,15 +1,13 @@
-"""The core analyzer family beyond Standard/English: Whitespace, Simple,
-Keyword, Stop, and CJK (bigram) analyzers in the flat-batch shape the
-invert kernels consume.
+"""The core analyzer family beyond Standard/English — Whitespace,
+Simple, Keyword, Stop and CJK (bigram) — plus ``NAMED_ANALYZERS``, the
+chains ``build_tables(analyzer=<name>)`` accepts.  Each chain is a
+tokenizer plus a token function run by the batch driver
+(analysis/analyzer.py).
 
 Ref: lucene/analysis/common/src/java/org/apache/lucene/analysis/core/
 WhitespaceAnalyzer.java, SimpleAnalyzer.java, KeywordAnalyzer.java,
 StopAnalyzer.java and lucene/analysis/common/.../cjk/CJKAnalyzer.java +
 CJKBigramFilter.java.
-
-All analyzers return ``(doc_index, terms, positions)`` flat numpy arrays
-(the `analyze_batch_flat` contract) so they plug into
-``build_tables(analyzer=<callable>)`` unchanged.
 
 CJK position semantics implemented (CJKBigramFilter, default han+
 hiragana+katakana+hangul flags): StandardTokenizer emits each CJK
@@ -19,19 +17,25 @@ sits at position ``p+j``; a lone CJK char between non-CJK tokens is
 emitted as a unigram (``outputUnigrams`` single-char case).  After a
 run of length L≥2 the next token continues at ``p+L-1`` (the last
 emitted bigram's position + 1), matching the filter's increment
-bookkeeping.
+bookkeeping.  So the bigram tokenizer's list index is the position.
 """
 
 from __future__ import annotations
 
 import re
+from functools import partial
 
-import numpy as np
 import pandas as pd
 
+from lucene_solr_spark.analysis.analyzer import (
+    analyze_chain,
+    lowercase_stop,
+    per_document,
+    whitespace_tokenizer,
+)
+from lucene_solr_spark.analysis.light_stemmers import _light_analyze_flat
 from lucene_solr_spark.analysis.stopwords import ENGLISH_STOP_WORDS
 
-_WS = re.compile(r"\S+")
 _LETTERS = re.compile(r"[^\W\d_]+", re.UNICODE)
 # CJK ranges per CJKBigramFilter defaults: Han, Hiragana, Katakana, Hangul
 _CJK = (
@@ -39,50 +43,74 @@ _CJK = (
     "぀-ゟ゠-ヿㇰ-ㇿ가-힯ᄀ-ᇿ"
 )
 _CJK_OR_WORD = re.compile(rf"([{_CJK}]+)|([0-9A-Za-z_À-ɏ]+)")
+_HAS_CJK = re.compile(rf"[{_CJK}]")
+_WORDS = re.compile(r"[0-9A-Za-z_À-ɏ]+")
 
 
-def _flatten(tok_lists: list[list[str]], pos_lists: list[list[int]]):
-    counts = np.fromiter(
-        (len(l) for l in tok_lists), dtype=np.int64, count=len(tok_lists)
-    )
-    total = int(counts.sum())
-    flat = np.empty(total, dtype=object)
-    pos = np.empty(total, dtype=np.int64)
-    i = 0
-    for tl, pl in zip(tok_lists, pos_lists):
-        flat[i : i + len(tl)] = tl
-        pos[i : i + len(pl)] = pl
-        i += len(tl)
-    offsets = np.zeros(counts.size + 1, dtype=np.int64)
-    np.cumsum(counts, out=offsets[1:])
-    doc_idx = np.zeros(total, dtype=np.int64)
-    starts = offsets[1:-1][offsets[1:-1] < total]
-    np.add.at(doc_idx, starts, 1)
-    np.cumsum(doc_idx, out=doc_idx)
-    return doc_idx, flat, pos
+def _keep(token: str) -> str:
+    return token
+
+
+def _cjk_tokens(text: str) -> list[str]:
+    """CJK runs → overlapping bigrams (a lone CJK char stays a unigram);
+    other word runs pass through."""
+    if not _HAS_CJK.search(text):
+        return _WORDS.findall(text)
+    out: list[str] = []
+    for m in _CJK_OR_WORD.finditer(text):
+        run = m.group(1)
+        if run is None or len(run) == 1:
+            out.append(m.group(0))
+        else:
+            out.extend(run[j : j + 2] for j in range(len(run) - 1))
+    return out
+
+
+_letter_tokenizer = per_document(_LETTERS.findall)
+_keyword_tokenizer = per_document(lambda t: [t] if t else [])
+_cjk_tokenizer = per_document(_cjk_tokens)
+
+
+def _metaphone(token: str) -> list[str]:
+    """PhoneticFilterFactory encoder="Metaphone" inject="true" after a
+    lowercase: the phonetic form first, then the original, both at ONE
+    position (PhoneticFilter.java:68-96; identity encodings pass
+    through once)."""
+    from lucene_solr_spark.analysis.phonetic import phonetic_tokens
+
+    return phonetic_tokens(token.lower(), inject=True, encoder="Metaphone")
+
+
+def _camel_parts(token: str) -> list[str]:
+    """PatternCaptureGroupTokenFilter camelCase configuration
+    (PatternCaptureGroupTokenFilter.java:56-67 + factory): capture
+    groups with preserveOriginal, all at ONE position, lowercased."""
+    from lucene_solr_spark.analysis.pattern import camel_case_capture
+
+    return [o.lower() for o in camel_case_capture(token, preserve_original=True)]
+
+
+def _chain(tokenizer, token_fn):
+    return partial(analyze_chain, tokenizer=tokenizer, token_fn=token_fn)
+
+
+def _light(lang: str):
+    return partial(_light_analyze_flat, lang=lang)
 
 
 def whitespace_analyze_batch_flat(content: pd.Series):
     """WhitespaceAnalyzer: split on whitespace, NO lowercase, no stop."""
-    toks = [_WS.findall(str(t)) for t in content.tolist()]
-    pos = [list(range(len(l))) for l in toks]
-    return _flatten(toks, pos)
+    return analyze_chain(content, whitespace_tokenizer, _keep)
 
 
 def simple_analyze_batch_flat(content: pd.Series):
     """SimpleAnalyzer: LetterTokenizer (maximal letter runs) + lowercase."""
-    toks = [
-        [w.lower() for w in _LETTERS.findall(str(t))] for t in content.tolist()
-    ]
-    pos = [list(range(len(l))) for l in toks]
-    return _flatten(toks, pos)
+    return analyze_chain(content, _letter_tokenizer, str.lower)
 
 
 def keyword_analyze_batch_flat(content: pd.Series):
     """KeywordAnalyzer: the whole input is ONE token (un-analyzed)."""
-    toks = [[str(t)] if str(t) else [] for t in content.tolist()]
-    pos = [[0] * len(l) for l in toks]
-    return _flatten(toks, pos)
+    return analyze_chain(content, _keyword_tokenizer, _keep)
 
 
 def stop_analyze_batch_flat(
@@ -90,177 +118,88 @@ def stop_analyze_batch_flat(
 ):
     """StopAnalyzer: LetterTokenizer + lowercase + stop (position gaps
     preserved, FilteringTokenFilter.java:46-60)."""
-    tok_lists: list[list[str]] = []
-    pos_lists: list[list[int]] = []
-    for t in content.tolist():
-        words = [w.lower() for w in _LETTERS.findall(str(t))]
-        kept = [(w, p) for p, w in enumerate(words) if w not in stopwords]
-        tok_lists.append([w for w, _ in kept])
-        pos_lists.append([p for _, p in kept])
-    return _flatten(tok_lists, pos_lists)
-
-
-def _cjk_doc(text: str) -> tuple[list[str], list[int]]:
-    terms: list[str] = []
-    positions: list[int] = []
-    p = 0
-    for m in _CJK_OR_WORD.finditer(text):
-        run = m.group(1)
-        if run is None:
-            terms.append(m.group(2).lower())
-            positions.append(p)
-            p += 1
-        elif len(run) == 1:
-            terms.append(run)
-            positions.append(p)
-            p += 1
-        else:
-            for j in range(len(run) - 1):
-                terms.append(run[j : j + 2])
-                positions.append(p + j)
-            p += len(run) - 1
-    return terms, positions
+    return analyze_chain(content, _letter_tokenizer, lowercase_stop(stopwords))
 
 
 def cjk_analyze_batch_flat(content: pd.Series):
     """CJKAnalyzer: CJK runs → overlapping bigrams, Latin → lowercase
     words (CJKBigramFilter semantics documented in the module docstring)."""
-    tok_lists: list[list[str]] = []
-    pos_lists: list[list[int]] = []
-    for t in content.tolist():
-        terms, pos = _cjk_doc(str(t))
-        tok_lists.append(terms)
-        pos_lists.append(pos)
-    return _flatten(tok_lists, pos_lists)
-
-
-def _lazy_light(lang):
-    def run(content):
-        from lucene_solr_spark.analysis.light_stemmers import (
-            _light_analyze_flat,
-        )
-
-        return _light_analyze_flat(content, lang)
-
-    return run
-
-
-def phonetic_metaphone_analyze_batch_flat(content: pd.Series):
-    """Phonetic chain (PhoneticFilterFactory encoder="Metaphone"
-    inject="true"): whitespace tokenize → lowercase → PhoneticFilter —
-    the phonetic form first, then the original, both at ONE position
-    (PhoneticFilter.java:68-96; identity encodings pass through once)."""
-    from lucene_solr_spark.analysis.phonetic import phonetic_tokens
-
-    tok_lists: list[list[str]] = []
-    pos_lists: list[list[int]] = []
-    for t in content.tolist():
-        terms: list[str] = []
-        positions: list[int] = []
-        for p, w in enumerate(str(t).split()):
-            for out in phonetic_tokens(w.lower(), inject=True,
-                                       encoder="Metaphone"):
-                terms.append(out)
-                positions.append(p)
-        tok_lists.append(terms)
-        pos_lists.append(positions)
-    return _flatten(tok_lists, pos_lists)
-
-
-def pattern_camel_analyze_batch_flat(content: pd.Series):
-    """PatternCaptureGroupTokenFilter camelCase chain (the documented
-    configuration, PatternCaptureGroupTokenFilter.java:56-67 +
-    factory): whitespace tokenize → capture groups (preserveOriginal,
-    all at ONE position) → lowercase."""
-    from lucene_solr_spark.analysis.pattern import camel_case_capture
-
-    tok_lists: list[list[str]] = []
-    pos_lists: list[list[int]] = []
-    for t in content.tolist():
-        terms: list[str] = []
-        positions: list[int] = []
-        for p, w in enumerate(str(t).split()):
-            for out in camel_case_capture(w, preserve_original=True):
-                terms.append(out.lower())
-                positions.append(p)
-        tok_lists.append(terms)
-        pos_lists.append(positions)
-    return _flatten(tok_lists, pos_lists)
+    return analyze_chain(content, _cjk_tokenizer, str.lower)
 
 
 NAMED_ANALYZERS = {
-    "pattern_camel": pattern_camel_analyze_batch_flat,
+    "pattern_camel": _chain(whitespace_tokenizer, _camel_parts),
     "whitespace": whitespace_analyze_batch_flat,
-    "phonetic_metaphone": phonetic_metaphone_analyze_batch_flat,
+    "phonetic_metaphone": _chain(whitespace_tokenizer, _metaphone),
     "simple": simple_analyze_batch_flat,
     "keyword": keyword_analyze_batch_flat,
     "stop": stop_analyze_batch_flat,
     "cjk": cjk_analyze_batch_flat,
     # UniNE light-stemming chains (FrenchAnalyzer.java:99-156 et al.):
     # tokenize -> (elision fr) -> lowercase -> snowball stop -> light stem
-    "french": _lazy_light("french"),
-    "german": _lazy_light("german"),
-    "spanish": _lazy_light("spanish"),
-    "italian": _lazy_light("italian"),
-    "portuguese": _lazy_light("portuguese"),
+    "french": _light("french"),
+    "german": _light("german"),
+    "spanish": _light("spanish"),
+    "italian": _light("italian"),
+    "portuguese": _light("portuguese"),
     # the solr.*LightStemFilterFactory chains for these five (their
     # DEFAULT analyzers end in SnowballFilter; the light-stem chain is
     # the documented lighter-weight configuration — e.g.
     # SwedishLightStemFilterFactory.java): tokenize -> lowercase ->
     # snowball stop -> UniNE light stem
-    "swedish": _lazy_light("swedish"),
-    "russian": _lazy_light("russian"),
-    "finnish": _lazy_light("finnish"),
-    "hungarian": _lazy_light("hungarian"),
-    "norwegian": _lazy_light("norwegian"),
+    "swedish": _light("swedish"),
+    "russian": _light("russian"),
+    "finnish": _light("finnish"),
+    "hungarian": _light("hungarian"),
+    "norwegian": _light("norwegian"),
     # GalicianAnalyzer.java: tokenize -> lowercase -> gl stop ->
     # GalicianStemmer (the full RSLG rule engine, analysis/rslp.py)
-    "galician": _lazy_light("galician"),
+    "galician": _light("galician"),
     # SoraniAnalyzer.java: tokenize -> normalize -> lowercase -> ckb
     # stop -> SoraniStemmer (analysis/sorani.py; DecimalDigitFilter is
     # the documented omission — the corpus carries ASCII digits)
-    "sorani": _lazy_light("sorani"),
+    "sorani": _light("sorani"),
     # ArabicAnalyzer.java: tokenize -> lowercase -> ar stop ->
     # ArabicNormalizationFilter -> ArabicStemFilter (analysis/arabic.py)
-    "arabic": _lazy_light("arabic"),
+    "arabic": _light("arabic"),
     # CzechAnalyzer.java / BulgarianAnalyzer.java: tokenize ->
     # lowercase -> stop -> {Czech,Bulgarian}Stemmer
-    "czech": _lazy_light("czech"),
-    "bulgarian": _lazy_light("bulgarian"),
+    "czech": _light("czech"),
+    "bulgarian": _light("bulgarian"),
     # Snowball-backed chains (analysis/snowball.py, pinned on the
     # reference's complete TestSnowballVocabData vocabularies):
     # DanishAnalyzer.java:105-115, DutchAnalyzer.java:122-160 (incl.
     # the 4-entry DEFAULT_STEM_DICT override), RomanianAnalyzer.java:
     # 107-117
-    "danish": _lazy_light("danish"),
-    "dutch": _lazy_light("dutch"),
-    "romanian": _lazy_light("romanian"),
+    "danish": _light("danish"),
+    "dutch": _light("dutch"),
+    "romanian": _light("romanian"),
     # TurkishAnalyzer.java:103-114: tokenize -> ApostropheFilter ->
     # TurkishLowerCaseFilter -> tr stop -> SnowballFilter(Turkish)
-    "turkish": _lazy_light("turkish"),
+    "turkish": _light("turkish"),
     # BrazilianAnalyzer.java: tokenize -> lowercase -> br stop ->
     # BrazilianStemFilter (analysis/brazilian.py, Orengo-style rules)
-    "brazilian": _lazy_light("brazilian"),
+    "brazilian": _light("brazilian"),
     # sr/SerbianNormalizationFilterFactory: lowercase -> bald-Latin
     # normalization (no reference analyzer exists; this is the
     # documented factory chain)
-    "serbian": _lazy_light("serbian"),
+    "serbian": _light("serbian"),
     # LithuanianAnalyzer.java: tokenize -> lowercase -> lt stop ->
     # SnowballFilter(Lithuanian) (analysis/lithuanian.py)
-    "lithuanian": _lazy_light("lithuanian"),
+    "lithuanian": _light("lithuanian"),
     # ArmenianAnalyzer.java / BasqueAnalyzer.java: tokenize ->
     # lowercase -> stop -> SnowballFilter
-    "armenian": _lazy_light("armenian"),
-    "basque": _lazy_light("basque"),
+    "armenian": _light("armenian"),
+    "basque": _light("basque"),
     # CatalanAnalyzer.java: tokenize -> elision(d/l/m/n/s/t) ->
     # lowercase -> ca stop -> SnowballFilter(Catalan)
-    "catalan": _lazy_light("catalan"),
+    "catalan": _light("catalan"),
     # IrishAnalyzer.java:132-142: tokenize -> hyphenation-stop(h/n/t)
     # -> elision(d/m/b) -> IrishLowerCaseFilter -> ga stop -> stem
-    "irish": _lazy_light("irish"),
+    "irish": _light("irish"),
     # solr.KStemFilterFactory chain: tokenize -> lowercase -> en stop
     # -> KStemFilter (analysis/kstem.py, Krovetz morphological stemmer)
-    "kstem": _lazy_light("kstem"),
+    "kstem": _light("kstem"),
     # the DEFAULT {Russian,Swedish,Finnish,Hungarian,Norwegian}Analyzer
     # chains end in SnowballFilter (analysis/snowball.py, each pinned
     # on its complete TestSnowballVocabData vocabulary); the plain
@@ -269,37 +208,37 @@ NAMED_ANALYZERS = {
     # language="German2" (umlaut-expanding variant) chains: tokenize ->
     # lowercase -> {en,de} stop -> SnowballFilter; each pinned on its
     # complete TestSnowballVocabData vocabulary
-    "english_snowball": _lazy_light("english_snowball"),
-    "german2_snowball": _lazy_light("german2_snowball"),
+    "english_snowball": _light("english_snowball"),
+    "german2_snowball": _light("german2_snowball"),
     # SnowballPorterFilterFactory language="German"/"French"/"Spanish"/
     # "Italian"/"Portuguese" chains (fr/it keep their analyzers'
     # ElisionFilter step); each pinned on its complete
     # TestSnowballVocabData vocabulary
-    "german_snowball": _lazy_light("german_snowball"),
-    "french_snowball": _lazy_light("french_snowball"),
-    "spanish_snowball": _lazy_light("spanish_snowball"),
-    "italian_snowball": _lazy_light("italian_snowball"),
-    "portuguese_snowball": _lazy_light("portuguese_snowball"),
-    "russian_snowball": _lazy_light("russian_snowball"),
-    "swedish_snowball": _lazy_light("swedish_snowball"),
-    "finnish_snowball": _lazy_light("finnish_snowball"),
-    "hungarian_snowball": _lazy_light("hungarian_snowball"),
-    "norwegian_snowball": _lazy_light("norwegian_snowball"),
+    "german_snowball": _light("german_snowball"),
+    "french_snowball": _light("french_snowball"),
+    "spanish_snowball": _light("spanish_snowball"),
+    "italian_snowball": _light("italian_snowball"),
+    "portuguese_snowball": _light("portuguese_snowball"),
+    "russian_snowball": _light("russian_snowball"),
+    "swedish_snowball": _light("swedish_snowball"),
+    "finnish_snowball": _light("finnish_snowball"),
+    "hungarian_snowball": _light("hungarian_snowball"),
+    "norwegian_snowball": _light("norwegian_snowball"),
     # HindiAnalyzer.java: tokenize -> lowercase -> HindiNormalizer ->
     # hi stop (on NORMALIZED forms, the reference's order) -> HindiStemmer
     # (IndicNormalizer + DecimalDigitFilter are documented omissions)
-    "hindi": _lazy_light("hindi"),
+    "hindi": _light("hindi"),
     # PersianAnalyzer.java: tokenize -> lowercase -> ArabicNormalizer ->
     # PersianNormalizer -> fa stop; no stemmer
-    "persian": _lazy_light("persian"),
+    "persian": _light("persian"),
     # IndonesianAnalyzer.java: tokenize -> lowercase -> id stop ->
     # IndonesianStemmer (derivational)
-    "indonesian": _lazy_light("indonesian"),
+    "indonesian": _light("indonesian"),
     # GreekAnalyzer.java: tokenize -> GreekLowerCaseFilter (tonos/
     # dialytika fold + final-sigma normalize) -> el stop -> Ntais
     # GreekStemmer (pinned on the reference's complete 342 goldens)
-    "greek": _lazy_light("greek"),
+    "greek": _light("greek"),
     # LatvianAnalyzer.java: tokenize -> lowercase -> lv stop ->
     # LatvianStemmer (Kreslin light; complete 172-golden pin)
-    "latvian": _lazy_light("latvian"),
+    "latvian": _light("latvian"),
 }

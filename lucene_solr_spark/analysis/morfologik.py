@@ -49,6 +49,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
+from lucene_solr_spark.analysis.analyzer import analyze_chain, whitespace_tokenizer
+
 BIT_FINAL = 1
 BIT_LAST = 2
 BIT_NEXT = 4
@@ -187,9 +189,13 @@ class MorfologikDictionary:
             k, _, v = line.partition("=")
             meta[k.strip()] = v.strip()
         self.encoding = meta.get("fsa.dict.encoding", "UTF-8")
-        self.separator = meta.get("fsa.dict.separator", "+").encode(
-            self.encoding
-        )[0]
+        sep = meta.get("fsa.dict.separator", "+").encode(self.encoding)
+        if len(sep) != 1:
+            raise ValueError(
+                f"fsa.dict.separator must encode to exactly one byte in "
+                f"{self.encoding}, got {sep!r}"
+            )
+        self.separator = sep[0]
         self.encoder = meta.get("fsa.dict.encoder", "NONE").upper()
 
     def lookup(self, word: str) -> list[tuple[str, str]]:
@@ -265,24 +271,10 @@ def morfologik_analyze_batch_flat(content, dictionary=None):
     (build_tables ``analyzer=`` contract): every lemma of a matched
     token stacks at the token's position (posIncr 0 analog); unmatched
     tokens pass through."""
-    import numpy as np
-
     if dictionary is None:
         dictionary = test_dictionary()
-    memo: dict = {}
-    out_doc, out_terms, out_pos = [], [], []
-    for di, text in enumerate(content):
-        for pos, tok in enumerate((text or "").split()):
-            lemmas = memo.get(tok)
-            if lemmas is None:
-                lemmas = morfologik_lemmas(tok, dictionary) or [tok]
-                memo[tok] = lemmas
-            for lm in lemmas:
-                out_doc.append(di)
-                out_terms.append(lm)
-                out_pos.append(pos)
-    return (
-        np.asarray(out_doc, dtype=np.int64),
-        np.asarray(out_terms, dtype=object),
-        np.asarray(out_pos, dtype=np.int64),
+    return analyze_chain(
+        content,
+        whitespace_tokenizer,
+        lambda tok: morfologik_lemmas(tok, dictionary) or tok,
     )

@@ -39,9 +39,10 @@ chain.
 from __future__ import annotations
 
 import gzip
+from functools import partial
 from pathlib import Path
 
-from lucene_solr_spark.analysis.tokenizer import raw_tokens
+from lucene_solr_spark.analysis.analyzer import analyze_chain, standard_tokenizer
 
 _EOM = "*"
 
@@ -299,34 +300,7 @@ def polish_token(tok: str, exclusions: frozenset = _EMPTY) -> "str | None":
 def polish_analyze_batch_flat(content, exclusions: frozenset = _EMPTY):
     """PolishAnalyzer over one Arrow batch (build_tables ``analyzer=``
     contract): StandardTokenizer → lowercase → pl stop (position gaps
-    preserved) → StempelFilter(min_length=3).
-
-    Vocab-level memo (the repo's batch convention): each distinct
-    token is pushed through the trie ONCE per batch — corpus token
-    frequency follows Zipf, so the per-occurrence cost collapses to a
-    dict hit and the Python trie walk is paid per unique term."""
-    import numpy as np
-
-    memo: dict = {}
-    out_doc, out_terms, out_pos = [], [], []
-    for di, text in enumerate(content):
-        pos = -1
-        for tok in raw_tokens(text or ""):
-            if len(tok) > 255:
-                continue
-            pos += 1
-            if tok in memo:
-                t = memo[tok]
-            else:
-                t = polish_token(tok, exclusions)
-                memo[tok] = t
-            if t is None:
-                continue
-            out_doc.append(di)
-            out_terms.append(t)
-            out_pos.append(pos)
-    return (
-        np.asarray(out_doc, dtype=np.int64),
-        np.asarray(out_terms, dtype=object),
-        np.asarray(out_pos, dtype=np.int64),
+    preserved) → StempelFilter(min_length=3)."""
+    return analyze_chain(
+        content, standard_tokenizer, partial(polish_token, exclusions=exclusions)
     )

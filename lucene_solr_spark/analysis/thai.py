@@ -26,7 +26,13 @@ Haruechaiyasak), complete.
 from __future__ import annotations
 
 import re
+from functools import partial
 
+from lucene_solr_spark.analysis.analyzer import (
+    analyze_chain,
+    lowercase_stop,
+    per_document,
+)
 from lucene_solr_spark.analysis.tokenizer import raw_tokens
 
 
@@ -84,7 +90,7 @@ def thai_tokenize(text: str, lexicon: frozenset = DEFAULT_THAI_LEXICON) -> list[
         pos = m.end()
     if pos < len(text):
         out.extend(raw_tokens(text[pos:]))
-    return [t for t in out if t]
+    return out
 
 
 def thai_analyze_batch_flat(
@@ -95,21 +101,8 @@ def thai_analyze_batch_flat(
     """ThaiAnalyzer over one Arrow batch (build_tables ``analyzer=``
     contract): ThaiTokenizer → lowercase → th stop (position gaps
     preserved, FilteringTokenFilter.java:46-60)."""
-    import numpy as np
-
-    out_doc, out_terms, out_pos = [], [], []
-    for di, text in enumerate(content):
-        pos = -1
-        for tok in thai_tokenize(text or "", lexicon):
-            pos += 1
-            t = tok.lower()
-            if t in stopwords:
-                continue
-            out_doc.append(di)
-            out_terms.append(t)
-            out_pos.append(pos)
-    return (
-        np.asarray(out_doc, dtype=np.int64),
-        np.asarray(out_terms, dtype=object),
-        np.asarray(out_pos, dtype=np.int64),
+    return analyze_chain(
+        content,
+        per_document(partial(thai_tokenize, lexicon=lexicon)),
+        lowercase_stop(stopwords),
     )

@@ -302,9 +302,17 @@ class _Parser:
             # outlive its SparkSession (a later session would receive
             # a DataFrame bound to a stopped context); stale-session
             # entries are tiny driver-side handles whose executor
-            # storage died with their session
+            # storage died with their session.  The input files are in
+            # the key as well: an overwrite behind the same path keeps
+            # the plan hash but writes new part-file names
             app_id = self.df.sparkSession.sparkContext.applicationId
-            memo_key = (app_id, self.df.semanticHash(), field, reverse)
+            memo_key = (
+                app_id,
+                self.df.semanticHash(),
+                tuple(sorted(self.df.inputFiles())),
+                field,
+                reverse,
+            )
             cached = _ORD_CACHE.get(memo_key)
             if cached is None:
                 # lazy purge: handles keyed to other application ids

@@ -51,12 +51,15 @@ def invert(
     One vectorized pass; output is pre-aggregated per (doc, term).
     ``analyzer``: "standard" (StandardAnalyzer chain), "english"
     (EnglishAnalyzer: + possessive strip + Porter stem), one of the
-    core-family names in ``analysis.more_analyzers.NAMED_ANALYZERS``
-    ("whitespace", "simple", "keyword", "stop", "cjk"), or any
-    picklable callable with the ``analyze_batch_flat`` signature
-    (pd.Series[str] → flat (doc_idx, terms, positions)) — the hook
-    for synonym/shingle chains (analysis/synonyms.py), mirroring
-    Solr's per-field analyzer config (schema fieldType analyzers).
+    names in ``analysis.more_analyzers.NAMED_ANALYZERS`` ("whitespace",
+    "simple", "keyword", "stop", "cjk", the language chains), or any
+    picklable callable ``(pd.Series[str]) -> (doc_idx, terms,
+    positions)`` flat arrays — the hook for synonym/shingle/hunspell/
+    polish chains, mirroring Solr's per-field analyzer config (schema
+    fieldType analyzers).  Every shipped chain is a tokenizer plus a
+    per-token function run by ``analysis.analyzer.analyze_chain``;
+    a custom chain can be ``partial(analyze_chain, tokenizer=...,
+    token_fn=...)``.
     """
     from lucene_solr_spark.analysis.more_analyzers import NAMED_ANALYZERS
 

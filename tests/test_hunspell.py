@@ -327,3 +327,24 @@ def test_oconv_output_mapping():
     )
     d = parse_dictionary(aff, "1\nbanana/X\n")
     assert stems(d, "bananas") == ["bAnAnA"]
+
+
+def test_batch_chain_positions():
+    """Every stem of a token stacks at its position (positionIncrement
+    0); stop gaps and an over-length token keep their positions."""
+    import pandas as pd
+
+    from lucene_solr_spark.analysis.hunspell import hunspell_analyze_batch_flat
+
+    d = parse_dictionary(SIMPLE_AFF, SIMPLE_DIC)
+    doc, terms, pos = hunspell_analyze_batch_flat(
+        pd.Series(["the lucene xyzzy", "x" * 256 + " foos"]), dictionary=d
+    )
+    stacked = hunspell_stem_token("lucene", d)
+    assert len(stacked) == 2
+    assert list(zip(doc.tolist(), terms, pos.tolist())) == [
+        (0, stacked[0], 1),
+        (0, stacked[1], 1),
+        (0, "xyzzy", 2),
+        (1, "foo", 1),
+    ]

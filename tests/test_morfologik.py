@@ -91,3 +91,21 @@ def test_unencodable_and_separator_words_no_match():
     d2.encoding = "iso-8859-2"
     assert d2.lookup("inflected1一") == []
     assert morfologik_lemmas("inflected1;x", d) == []
+
+
+def test_separator_must_encode_to_one_byte(tmp_path):
+    """A separator that encodes to several bytes in the dictionary
+    charset ('é' is two bytes in UTF-8) is rejected, not truncated to
+    its first byte."""
+    import shutil
+    from pathlib import Path
+
+    src = Path(__file__).resolve().parents[1] / "fixtures" / "morfologik"
+    shutil.copy(src / "custom-dictionary.dict", tmp_path / "d.dict")
+    (tmp_path / "d.info").write_text(
+        "fsa.dict.encoding=UTF-8\nfsa.dict.separator=é\n"
+        "fsa.dict.encoder=INFIX\n",
+        encoding="utf-8",
+    )
+    with pytest.raises(ValueError, match="separator"):
+        MorfologikDictionary(str(tmp_path / "d.dict"))

@@ -134,3 +134,21 @@ def test_complete_porter_vocabulary():
     bad = [(w, want, porter_stem(w)) for w, want in pairs
            if porter_stem(w) != want]
     assert bad == [], f"{len(bad)} mismatches, first: {bad[:5]}"
+
+
+def test_english_chain_positions():
+    """Possessive strip runs before stop ("it's" → "it" → stopped), stop
+    gaps are kept, and an over-length token keeps its position."""
+    import pandas as pd
+
+    from lucene_solr_spark.analysis.analyzer import english_analyze_batch_flat
+
+    doc, terms, pos = english_analyze_batch_flat(
+        pd.Series(["it's the tokenizer's merging", "x" * 256 + " merged segments"])
+    )
+    assert list(zip(doc.tolist(), terms, pos.tolist())) == [
+        (0, porter_stem("tokenizer"), 2),
+        (0, porter_stem("merging"), 3),
+        (1, porter_stem("merged"), 1),
+        (1, porter_stem("segments"), 2),
+    ]

@@ -10,10 +10,11 @@ and explore far more cases than the fixture corpus.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from lucene_solr_spark.analysis import analyze_text
+from lucene_solr_spark.analysis import analyze_batch_flat, analyze_text
 from lucene_solr_spark.analysis.tokenizer import tokenize
 from lucene_solr_spark.codecs.forutil import BLOCK_SIZE, for_decode, for_encode
 from lucene_solr_spark.codecs.postings import (
@@ -116,6 +117,34 @@ def test_analyzer_invariants(text):
     # stop removal only drops entries, never renumbers
     assert set(pos2) <= set(positions)
     assert all(t == t.lower() for t in terms)
+
+
+# ASCII documents built from words (some over the 255-char limit, some
+# joinable through . ' , ;) and separators
+_WORD = st.one_of(
+    st.text(alphabet="abXY019_", min_size=1, max_size=6),
+    st.sampled_from(["a", "the", "it's", "3.14", "1,000", "x;2"]),
+    st.text(alphabet="ab1", min_size=250, max_size=260),
+)
+_GLUE = st.sampled_from([" ", "  ", ".", "'", ",", ";", "..", "\t", "\n", "-", "!", ". "])
+_DOC = st.lists(st.tuples(_WORD, _GLUE), max_size=12).map(
+    lambda parts: "".join(w + g for w, g in parts)
+)
+
+
+@given(st.lists(_DOC, min_size=1, max_size=5))
+@settings(max_examples=300, deadline=None)
+def test_standard_tokenizer_paths_agree(texts):
+    """The whole-batch ASCII blob path, the per-document path (the same
+    batch plus one non-ASCII document) and single-document analyze_text
+    emit the same terms at the same positions."""
+    blob = analyze_batch_flat(pd.Series(texts))
+    per_doc = analyze_batch_flat(pd.Series(texts + ["é"]))
+    for i, text in enumerate(texts):
+        want = analyze_text(text)
+        for doc, terms, pos in (blob, per_doc):
+            mine = doc == i
+            assert (list(terms[mine]), pos[mine].tolist()) == want
 
 
 # ---------------------------------------------------------------- spans

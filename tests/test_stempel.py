@@ -85,3 +85,11 @@ def test_batch_handles_none_and_empty():
     doc, terms, pos = polish_analyze_batch_flat([None, "", "i aby"])
     assert len(terms) == 0
     assert doc.dtype == np.int64 and pos.dtype == np.int64
+
+
+def test_over_length_token_keeps_its_position():
+    """StandardTokenizer.java:182-192: a token over 255 chars is skipped
+    but still takes its position, so the tokens after it keep theirs."""
+    doc, terms, pos = polish_analyze_batch_flat(["x" * 256 + " kot pies"])
+    assert list(terms) == ["kot", "pies"]
+    assert list(pos) == [1, 2]

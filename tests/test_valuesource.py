@@ -363,3 +363,29 @@ def test_payload_function(spark):
         run('payload(text, "spark", 0, median)')
     with pytest.raises(ValueError, match="payloads"):
         apply_function_query(base, 'payload(text, "spark")')
+
+
+def test_ord_memo_sees_overwritten_data(spark, tmp_path):
+    """Data rewritten behind the same path by another writer keeps the
+    plan's semantic hash but has new part-file names: ord() must rank
+    the new values instead of serving the memoized dictionary of the
+    old ones.  (An overwrite through this session would also recache
+    by path; a separate writer job does not.)"""
+    import shutil
+
+    from lucene_solr_spark.functions.valuesource import apply_function_query
+
+    path = str(tmp_path / "t")
+
+    def ords():
+        d, o = apply_function_query(spark.read.parquet(path), "ord(s)")
+        return {r["s"]: r["o"] for r in d.select("s", o.alias("o")).collect()}
+
+    spark.createDataFrame([("b",), ("c",)], ["s"]).write.parquet(path)
+    assert ords() == {"b": 1.0, "c": 2.0}
+    spark.createDataFrame([("a",), ("c",)], ["s"]).write.parquet(
+        str(tmp_path / "next")
+    )
+    shutil.rmtree(path)
+    shutil.move(str(tmp_path / "next"), path)
+    assert ords() == {"a": 1.0, "c": 2.0}
