@@ -145,7 +145,7 @@ tstats AS (SELECT term, count(*) AS df FROM postings GROUP BY term)
 """
 
 # BM25 (k1=1.2, b=0.75) in exact/double mode, arithmetic ordered exactly
-# like IndexSearcher._score_col: (idf*2.2)*tf / (tf + 1.2*(0.25 + 0.75*len/avgdl))
+# like the "exact" record of SIMILARITIES: (idf*2.2)*tf / (tf + 1.2*(0.25 + 0.75*len/avgdl))
 def _bm25_sql(term: str) -> str:
     return f"""
   SELECT p.doc_id,
@@ -1103,11 +1103,16 @@ def q_unified_highlight(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible (see the oracle), so this gate is hash-checked;
     passage/format goldens live in tests/test_highlight.py."""
     from lucene_solr_spark.queries.highlight import highlight
+    from lucene_solr_spark.scoring.similarities import bm25_idf
 
     s = _searcher(spark, sf_dir)
     terms = ["spark", "window"]
     stats = s.term_statistics(terms)
-    weights = {t: s._idf(stats[t][0]) for t in terms if stats[t][0] > 0}
+    weights = {
+        t: bm25_idf(stats[t][0], s.stats.doc_count)
+        for t in terms
+        if stats[t][0] > 0
+    }
     hits = _topk(s.docs(parse_query("+spark +window")), 5)
     d = _table(spark, sf_dir, "documents")
     return highlight(hits, d, weights).orderBy(

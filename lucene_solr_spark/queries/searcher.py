@@ -22,11 +22,12 @@ postings DataFrame:
                      a constant-score disjunction like the reference's
                      MultiTermQuery CONSTANT_SCORE_REWRITE
 
-Scoring modes:
-- ``lucene`` (default): float32 arithmetic + byte315-quantized norms,
-  rank-identical to the reference (BM25Similarity.java:213-254).
-- ``exact``: double precision with exact field lengths — fully
-  ANSI-SQL-expressible, used for external SQL-oracle cross-checks.
+Scoring modes: ``scoring=`` names one record of
+``scoring.similarities.SIMILARITIES``, the one list of modes (default
+``lucene``: float32 BM25, rank-identical to the reference; ``exact``:
+double BM25 with exact lengths, for SQL-oracle cross-checks).  Every
+executor scores through ``_score(boost, stats, frame)`` with the term
+stats Lucene's weight would see.
 
 Top-k: ORDER BY score DESC, doc_id ASC LIMIT k — Spark's
 TakeOrderedAndProject implements exactly the per-partition bounded heap
@@ -36,7 +37,6 @@ tie-break (HitQueue.java:76-81).
 
 from __future__ import annotations
 
-import math
 from collections import OrderedDict
 from functools import reduce
 
@@ -77,6 +77,7 @@ from lucene_solr_spark.queries.spans import (
     span_terms,
 )
 from lucene_solr_spark.scoring.bm25 import BM25, byte315_to_float, idf as idf32
+from lucene_solr_spark.scoring.similarities import SIMILARITIES, bm25_idf
 
 MAX_EXPANSION_TERMS = 1024  # ref: BooleanQuery.java:43
 
@@ -133,13 +134,7 @@ class IndexSearcher:
         tombstones: DataFrame | None = None,
         sweetspot: dict | None = None,
     ) -> None:
-        if scoring not in (
-            "lucene", "exact", "classic", "classic_exact",
-            "lm_dirichlet", "dfr_in_l_h2", "dfr_pl2", "lm_jelinek_mercer",
-            "ib_spl_df", "axiomatic_f2exp", "boolean_sim",
-            "sweetspot_exact", "dfr_ine_b_h1", "ib_ll_df",
-            "dfi_chi2", "dfi_standardized", "dfi_saturated",
-        ):
+        if scoring not in SIMILARITIES:
             raise ValueError(f"unknown scoring mode {scoring!r}")
         # SweetSpotSimilarity tunables (lucene/misc/
         # SweetSpotSimilarity.java:42-53 defaults)
@@ -151,23 +146,9 @@ class IndexSearcher:
         self.tables = tables
         self.bm25 = BM25(k1=k1, b=b)
         self.scoring = scoring
-        # float32-faithful modes (Java float arithmetic); the *_exact
-        # modes are the ANSI-SQL-expressible double variants
-        self._f32 = scoring in (
-            "lucene", "classic", "lm_dirichlet", "dfr_in_l_h2",
-            "dfr_pl2", "lm_jelinek_mercer", "ib_spl_df",
-            "axiomatic_f2exp", "boolean_sim", "dfr_ine_b_h1",
-            "ib_ll_df", "dfi_chi2", "dfi_standardized", "dfi_saturated",
-        )
-        # SimilarityBase-family modes: per-term stats beyond docFreq
-        # feed the kernel directly (_score_col_sb); the idf/weight
-        # protocol below is TFIDF-family only
-        self._sb = scoring in (
-            "lm_dirichlet", "dfr_in_l_h2", "dfr_pl2",
-            "lm_jelinek_mercer", "ib_spl_df", "axiomatic_f2exp",
-            "boolean_sim", "dfr_ine_b_h1", "ib_ll_df",
-            "dfi_chi2", "dfi_standardized", "dfi_saturated",
-        )
+        self._sim = SIMILARITIES[scoring]
+        # float32-faithful (Java float arithmetic) or double scores
+        self._f32 = self._sim.f32
         self.stats = tables.stats
         # Denormalize norms onto postings once (the per-segment norms file
         # read of the reference); at scale this join happens at build time.
@@ -206,23 +187,19 @@ class IndexSearcher:
             target = int(min(nrows // 2_000_000 + 1, 4096))
             if target < self._postings.rdd.getNumPartitions():
                 self._postings = self._postings.coalesce(target)
-            if self.scoring == "lucene":
-                # Materialize the BM25 norm-cache value per posting row
-                # ONCE in the cached frame (the norms-file decode the
-                # reference does per segment open).  Every per-query
-                # score expression then references a plain float column
-                # instead of carrying a 256-element array literal —
-                # measured ~0.2 s of JVM plan analysis per cold boolean
-                # query at 4 clauses, pure driver overhead.  Cost: one
-                # float per cached posting row, marginal next to the
-                # positions arrays it sits beside.
+            if self._sim.cached_col is not None:
+                # Materialize the mode's per-posting norm value (the
+                # BM25 norm cache) ONCE in the cached frame (the
+                # norms-file decode the reference does per segment
+                # open).  Every per-query score expression then
+                # references a plain float column instead of carrying a
+                # 256-element array literal — measured ~0.2 s of JVM
+                # plan analysis per cold boolean query at 4 clauses,
+                # pure driver overhead.  Cost: one float per cached
+                # posting row, marginal next to the positions arrays it
+                # sits beside.
                 self._postings = self._postings.withColumn(
-                    "_c32",
-                    F.element_at(
-                        self._norm_cache_col(),
-                        F.col("norm_byte").bitwiseAND(F.lit(255))
-                        + F.lit(1),
-                    ).cast("float"),
+                    "_c32", self._sim.cached_col(self)
                 )
             self._postings = self._postings.persist()
         self._avgdl64 = (
@@ -390,7 +367,9 @@ class IndexSearcher:
         """Explanation tree for one doc (IndexSearcher.explain;
         BM25Similarity.explainScore :259-297).  CheckHits discipline:
         the root ``value`` must equal the score ``search`` produces for
-        the same doc (tests enforce it)."""
+        the same doc (tests enforce it in every mode).  TermQuery
+        leaves get the BM25 tree under the BM25 modes; any other mode
+        or leaf reports its executed score."""
         if isinstance(query, str):
             from lucene_solr_spark.queries.parser import parse_query
 
@@ -408,7 +387,8 @@ class IndexSearcher:
 
         if isinstance(q, BoostQuery):
             return self._explain(q.query, doc_id, boost * q.boost)
-        if isinstance(q, TermQuery) and not self._sb:
+        if isinstance(q, TermQuery) and self.scoring in ("lucene", "exact"):
+            # the BM25 tree; every other mode takes the fallback below
             row = (
                 self._term_postings(q.term)
                 .filter(F.col("doc_id") == doc_id)
@@ -422,7 +402,10 @@ class IndexSearcher:
             )
             df_, _ = self.term_statistics([q.term])[q.term]
             n = self.stats.doc_count
-            idf_v = self._idf(df_)
+            idf_v = (
+                float(idf32(df_, n)) if self.scoring == "lucene"
+                else bm25_idf(df_, n)
+            )
             k1, b = self.bm25.k1, self.bm25.b
             if self.scoring == "lucene":
                 tf_norm = float(
@@ -515,7 +498,8 @@ class IndexSearcher:
 
     def _norm_table_col(self) -> Column:
         """NORM_TABLE (decoded doc LENGTH, 1/byte315²) as a cached
-        array-literal Column — the wand exporter's ``dl``."""
+        array-literal Column — the SimilarityBase kernels' quantized
+        docLen and the wand exporter's ``dl``."""
         col = getattr(self, "_norm_table_col_cached", None)
         if col is None:
             from lucene_solr_spark.scoring.bm25 import NORM_TABLE
@@ -537,211 +521,14 @@ class IndexSearcher:
             self._byte315_col_cached = col
         return col
 
-    def _score_col(self, weight: float, df_in: DataFrame) -> DataFrame:
-        """Append ``score`` given per-row freq/norm columns.
-
-        ``weight`` is boost·idf (already float32 in lucene mode)."""
-        if self.scoring == "lucene":
-            # Pure-JVM float32 kernel: every float32 op is emulated as
-            # double-op-then-cast-to-float, which is bit-exact (innocuous
-            # double rounding: binary64 p=53 ≥ 2·24+2 for +,−,×,÷ on
-            # binary32 inputs).  Stays inside whole-stage codegen — no
-            # Python worker in the query hot path.  The 256-entry norm
-            # cache (BM25Similarity.java:213-217) becomes an array literal
-            # indexed by norm byte.
-            w32 = float(np.float32(np.float32(weight) * np.float32(self.bm25.k1 + 1)))
-            if "_c32" in df_in.columns:
-                # norm-cache value pre-materialized on the cached
-                # postings frame — plain column ref, tiny plan
-                c = F.col("_c32").cast("double")
-            else:
-                c = F.element_at(
-                    self._norm_cache_col(),
-                    F.col("norm_byte").bitwiseAND(F.lit(255)) + F.lit(1),
-                )
-            f = F.col("freq").cast("double")
-            num = (F.lit(w32) * f).cast("float").cast("double")
-            den = (f + c).cast("float").cast("double")
-            return df_in.withColumn("score", (num / den).cast("float"))
-        if self.scoring == "classic":
-            # ClassicSimilarity float32 kernel (TFIDFSimilarity.java:
-            # 553-569): raw = (float)sqrt(freq) · queryWeight, then
-            # raw · NORM_TABLE[norm_byte] (decodeNormValue of the
-            # byte315-encoded 1/sqrt(length)).  Same double-op-then-
-            # cast-to-float emulation as the lucene branch.
-            w32 = float(np.float32(weight))
-            norm_arr = self._byte315_col()
-            nrm = F.element_at(
-                norm_arr, F.col("norm_byte").bitwiseAND(F.lit(255)) + F.lit(1)
-            )
-            tf32 = F.sqrt(F.col("freq").cast("double")).cast("float").cast("double")
-            raw = (tf32 * F.lit(w32)).cast("float").cast("double")
-            return df_in.withColumn("score", (raw * nrm).cast("float"))
-        if self.scoring == "classic_exact":
-            # double TF-IDF with exact lengths: sqrt(tf)·idf·1/sqrt(dl)
-            return df_in.withColumn(
-                "score",
-                F.lit(float(weight))
-                * F.sqrt(F.col("freq").cast("double"))
-                / F.sqrt(F.col("length").cast("double")),
-            )
-        if self.scoring == "sweetspot_exact":
-            # SweetSpotSimilarity (lucene/misc/SweetSpotSimilarity.java):
-            # ClassicSimilarity idf · baselineTf(freq) ·
-            # computeLengthNorm(length), exact-double / exact-length
-            # variant (the byte315-quantized norm path follows the
-            # classic pipeline)
-            from lucene_solr_spark.scoring.sweetspot import (
-                baseline_tf,
-                compute_length_norm,
-            )
-
-            ss = self.sweetspot
-            return df_in.withColumn(
-                "score",
-                F.lit(float(weight))
-                * baseline_tf(F.col("freq"), ss["tf_base"], ss["tf_min"])
-                * compute_length_norm(
-                    F.col("length"), ss["ln_min"], ss["ln_max"],
-                    ss["steepness"],
-                ),
-            )
-        # exact mode: pure JVM double expression (whole-stage codegen)
-        k1, b = float(self.bm25.k1), float(self.bm25.b)
-        return df_in.withColumn(
-            "score",
-            F.lit(float(weight) * (k1 + 1))
-            * F.col("freq").cast("double")
-            / (
-                F.col("freq").cast("double")
-                + F.lit(k1)
-                * (
-                    F.lit(1.0 - b)
-                    + F.lit(b) * F.col("length").cast("double") / F.lit(self._avgdl64)
-                )
-            ),
-        )
-
-    def _sb_kernel(self, boost: float, doc_freq: int, ttf: int):
-        """One SimilarityBase kernel Column over (freq, norm_byte) rows
-        for a single term's BasicStats — the unit MultiSimScorer sums."""
-        from lucene_solr_spark.scoring.similarities import (
-            axiomatic_f2exp_score,
-            dfr_in_l_h2_score,
-            dfr_pl2_score,
-            ib_spl_df_score,
-            lm_dirichlet_score,
-            lm_jelinek_mercer_score,
-        )
-
-        if self.scoring == "lm_dirichlet":
-            col = lm_dirichlet_score(
-                F.col("freq"), F.col("norm_byte"), boost,
-                ttf, self.stats.sum_total_term_freq,
-            )
-        elif self.scoring == "lm_jelinek_mercer":
-            col = lm_jelinek_mercer_score(
-                F.col("freq"), F.col("norm_byte"), boost,
-                ttf, self.stats.sum_total_term_freq,
-            )
-        elif self.scoring == "dfr_pl2":
-            col = dfr_pl2_score(
-                F.col("freq"), F.col("norm_byte"), boost,
-                doc_freq, ttf, self.stats.doc_count,
-                self.stats.sum_total_term_freq,
-            )
-        elif self.scoring == "ib_spl_df":
-            col = ib_spl_df_score(
-                F.col("freq"), F.col("norm_byte"), boost,
-                doc_freq, self.stats.doc_count,
-                self.stats.sum_total_term_freq,
-            )
-        elif self.scoring == "dfr_ine_b_h1":
-            from lucene_solr_spark.scoring.similarities import (
-                dfr_ine_b_h1_score,
-            )
-
-            col = dfr_ine_b_h1_score(
-                F.col("freq"), F.col("norm_byte"), boost,
-                doc_freq, ttf, self.stats.doc_count,
-                self.stats.sum_total_term_freq,
-            )
-        elif self.scoring == "ib_ll_df":
-            from lucene_solr_spark.scoring.similarities import (
-                ib_ll_df_h2_score,
-            )
-
-            col = ib_ll_df_h2_score(
-                F.col("freq"), F.col("norm_byte"), boost,
-                doc_freq, self.stats.doc_count,
-                self.stats.sum_total_term_freq,
-            )
-        elif self.scoring == "axiomatic_f2exp":
-            col = axiomatic_f2exp_score(
-                F.col("freq"), F.col("norm_byte"),
-                doc_freq, self.stats.doc_count,
-                self.stats.sum_total_term_freq,
-            )
-        elif self.scoring in (
-            "dfi_chi2", "dfi_standardized", "dfi_saturated"
-        ):
-            from lucene_solr_spark.scoring.similarities import dfi_score
-
-            col = dfi_score(
-                F.col("freq"), F.col("norm_byte"), boost,
-                ttf, self.stats.sum_total_term_freq,
-                measure={
-                    "dfi_chi2": "chi_squared",
-                    "dfi_standardized": "standardized",
-                    "dfi_saturated": "saturated",
-                }[self.scoring],
-            )
-        elif self.scoring == "boolean_sim":
-            # BooleanSimilarity.java:62-75 — score is the query boost,
-            # independent of tf/norms/collection stats
-            col = F.lit(float(np.float32(boost))).cast("float")
-        else:
-            col = dfr_in_l_h2_score(
-                F.col("freq"), F.col("norm_byte"), boost,
-                doc_freq, self.stats.doc_count,
-                self.stats.sum_total_term_freq,
-            )
-        return col
-
-    def _score_col_sb(
-        self, boost: float, doc_freq: int, ttf: int, df_in: DataFrame
+    def _score(
+        self, boost: float, stats: list[tuple[int, int]], frame: DataFrame
     ) -> DataFrame:
-        """SimilarityBase-family kernels (per-term stats, quantized
-        docLen): LM-Dirichlet, LM-Jelinek-Mercer, DFR In-L-H2, DFR PL2,
-        IB SPL-D-H2, Axiomatic F2EXP, BooleanSimilarity —
-        float32-faithful, whole-stage-codegen column expressions like
-        the BM25 kernel."""
-        return df_in.withColumn(
-            "score", self._sb_kernel(boost, doc_freq, ttf)
-        )
-
-    def _score_col_sb_multi(
-        self,
-        boost: float,
-        terms: "list[str]",
-        stats: "dict[str, tuple[int, int]]",
-        df_in: DataFrame,
-    ) -> DataFrame:
-        """MultiSimilarity.MultiSimScorer (MultiSimilarity.java:70-84):
-        SimilarityBase scores a phrase with one BasicStats PER PHRASE
-        POSITION (PhraseWeight builds TermStatistics per position,
-        repeats included), each scored at the PHRASE freq, summed in
-        float32 left to right (sum += subScorer.score(doc, freq))."""
-        acc = None
-        for t in terms:
-            df_, ttf = stats[t]
-            col = self._sb_kernel(boost, df_, ttf)
-            acc = (
-                col
-                if acc is None
-                else (acc.cast("double") + col.cast("double")).cast("float")
-            )
-        return df_in.withColumn("score", acc)
+        """(doc_id, score) for one weight over ``frame``'s freq / norm
+        columns — the mode's Similarity.computeWeight over ``stats``,
+        the (df, ttf) list Lucene's weight sees for this query."""
+        col = self._sim.score(self, boost, stats, frame)
+        return frame.withColumn("score", col).select("doc_id", "score")
 
     def explain_hits(self, term: str, boost: float = 1.0) -> DataFrame:
         """Vectorized explain — Solr's ``debug=results`` over the FULL
@@ -756,7 +543,7 @@ class IndexSearcher:
             raise NotImplementedError(
                 "explain_hits implements the BM25 (lucene) explanation"
             )
-        df_, _ = self.term_statistics([term])[term]
+        df_, ttf = self.term_statistics([term])[term]
         if df_ == 0:
             spark = self._live_norms.sparkSession
             return spark.createDataFrame(
@@ -764,55 +551,21 @@ class IndexSearcher:
                 "doc_id bigint, freq bigint, dl double, cache double,"
                 " idf double, score double",
             )
-        idf_v = self._idf(df_)
-        weight = self._weight(idf_v, boost)
         rows = self._term_postings(term).select(
             "doc_id", F.col("tf").alias("freq"), "norm_byte"
         )
-        scored = self._score_col(weight, rows)
+        score = self._sim.score(self, boost, [(df_, ttf)], rows)
         norm_arr = self._norm_table_col()
         cache_arr = self._norm_cache_col()
         bidx = F.col("norm_byte").bitwiseAND(F.lit(255)) + F.lit(1)
-        return scored.select(
+        return rows.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("freq").cast("long").alias("freq"),
             F.element_at(norm_arr, bidx).alias("dl"),
             F.element_at(cache_arr, bidx).alias("cache"),
-            F.lit(float(idf_v)).alias("idf"),
-            F.col("score").cast("double").alias("score"),
+            F.lit(float(idf32(df_, self.stats.doc_count))).alias("idf"),
+            score.cast("double").alias("score"),
         )
-
-    def _idf(self, doc_freq: int) -> float:
-        n = self.stats.doc_count
-        if self._sb:
-            raise NotImplementedError(
-                f"scoring mode {self.scoring!r} uses the SimilarityBase "
-                "kernel protocol (_sb_kernel / _score_col_sb_multi), "
-                "never the TFIDF idf/weight protocol — a path calling "
-                "_idf under an SB mode is a bug"
-            )
-        if self.scoring == "lucene":
-            return float(idf32(doc_freq, n))
-        if self.scoring == "classic":
-            # ClassicSimilarity.idf: (float)(log((N+1)/(df+1)) + 1)
-            # (ClassicSimilarity.java:138-140)
-            return float(np.float32(math.log((n + 1) / float(doc_freq + 1)) + 1.0))
-        if self.scoring in ("classic_exact", "sweetspot_exact"):
-            # SweetSpotSimilarity extends ClassicSimilarity and keeps
-            # its idf (SweetSpotSimilarity.java:40)
-            return math.log((n + 1) / float(doc_freq + 1)) + 1.0
-        return math.log(1.0 + (n - doc_freq + 0.5) / (doc_freq + 0.5))
-
-    def _weight(self, idf_value: float, boost: float) -> float:
-        """Query weight from an (already mode-appropriate) idf value:
-        BM25Similarity weight = boost·idf (·(k1+1) applied in the score
-        kernel); TFIDFSimilarity IDFStats.queryWeight = boost·idf
-        (TFIDFSimilarity.java:594-599)."""
-        if self.scoring == "lucene":
-            return float(self.bm25.weight(np.float32(idf_value), boost))
-        if self.scoring == "classic":
-            return float(np.float32(np.float32(boost) * np.float32(idf_value)))
-        return boost * float(idf_value)
 
     def _sum_scores(self, col):
         """float32(Σ_double subscores) in lucene mode (DisjunctionSumScorer
@@ -843,14 +596,14 @@ class IndexSearcher:
             return self._empty_scored()
         if isinstance(q, MatchAllDocsQuery):
             return self._live_norms.select(
-                "doc_id", F.lit(float(np.float32(boost))).alias("score")
+                "doc_id", self._const_score(float(np.float32(boost)))
             )
         if isinstance(q, BoostQuery):
             return self._exec(q.query, boost * q.boost)
         if isinstance(q, ConstantScoreQuery):
             score = float(np.float32(boost * q.score)) if self._f32 else boost * q.score
             return self._match(q.query).select(
-                "doc_id", F.lit(score).alias("score")
+                "doc_id", self._const_score(score)
             )
         if isinstance(q, TermQuery):
             df_, ttf = self.term_statistics([q.term])[q.term]
@@ -864,12 +617,7 @@ class IndexSearcher:
                 "length",
                 *(["_c32"] if "_c32" in tp.columns else []),
             )
-            if self._sb:
-                return self._score_col_sb(boost, df_, ttf, pl).select(
-                    "doc_id", "score"
-                )
-            weight = self._weight(self._idf(df_), boost)
-            return self._score_col(weight, pl).select("doc_id", "score")
+            return self._score(boost, [(df_, ttf)], pl)
         if isinstance(q, SynonymQuery):
             return self._exec_synonym(q, boost)
         if isinstance(q, DisjunctionMaxQuery):
@@ -918,6 +666,11 @@ class IndexSearcher:
         return scored.join(ctx, "doc_id", "left").select(
             "doc_id", new_score.alias("score")
         )
+
+    def _const_score(self, value: float) -> Column:
+        """A constant ``score`` column in the mode's score type."""
+        lit = F.lit(value)
+        return (lit.cast("float") if self._f32 else lit).alias("score")
 
     def _empty_scored(self) -> DataFrame:
         spark = self.tables.postings.sparkSession
@@ -1091,15 +844,10 @@ class IndexSearcher:
                 F.first("length").alias("length"),
             )
         )
-        if self._sb:
-            # one pseudo-term BasicStats: df = max(df_i), ttf = Σ ttf_i
-            # (SynonymQuery.java:130-147)
-            ttf_sum = sum(s[1] for s in stats.values())
-            return self._score_col_sb(boost, df_max, ttf_sum, pl).select(
-                "doc_id", "score"
-            )
-        weight = self._weight(self._idf(df_max), boost)
-        return self._score_col(weight, pl).select("doc_id", "score")
+        # one pseudo-term: df = max(df_i), ttf = Σ ttf_i
+        # (SynonymQuery.java:130-147)
+        ttf_sum = sum(s[1] for s in stats.values())
+        return self._score(boost, [(df_max, ttf_sum)], pl)
 
     def _exec_dismax(self, q: DisjunctionMaxQuery, boost: float) -> DataFrame:
         """DisjunctionMaxQuery: max(subscores) + tie·(sum − max)
@@ -1130,20 +878,9 @@ class IndexSearcher:
         for slot in q.slots:
             if all(stats[t][0] == 0 for t in slot):
                 return self._empty_scored()
-        if self._sb:
-            # MultiPhraseQuery under SimilarityBase: MultiStats over the
-            # flattened slot terms (MultiPhraseQuery.createWeight builds
-            # TermStatistics per term), summed at the phrase freq
-            live_terms = [t for t in all_terms if stats[t][0] > 0]
-            _score = lambda d: self._score_col_sb_multi(  # noqa: E731
-                boost, live_terms, stats, d
-            )
-        else:
-            idf_sum = sum(
-                self._idf(stats[t][0]) for t in all_terms if stats[t][0] > 0
-            )
-            weight = self._weight(idf_sum, boost)
-            _score = lambda d: self._score_col(weight, d)  # noqa: E731
+        # MultiPhraseQuery.createWeight builds TermStatistics per live
+        # term of the flattened slots
+        live_stats = [stats[t] for t in all_terms if stats[t][0] > 0]
         # one union-postings frame per DISTINCT slot key — a repeated
         # slot (same term set) reuses the first frame instead of
         # joining an identical aggregation again
@@ -1234,7 +971,7 @@ class IndexSearcher:
             out = base.withColumn("freq", msloppy_udf(*cols_in)).filter(
                 F.col("freq") > 0
             )
-            return _score(out).select("doc_id", "score")
+            return self._score(boost, live_stats, out)
 
         def _shift(col_name: str, off: int):
             # NB: F.transform dispatches on lambda arity — bind via closure
@@ -1246,7 +983,7 @@ class IndexSearcher:
         ]
         inter = reduce(lambda a, b: F.array_intersect(a, b), shifted)
         out = base.withColumn("freq", F.size(inter)).filter(F.col("freq") > 0)
-        return _score(out).select("doc_id", "score")
+        return self._score(boost, live_stats, out)
 
     def _exec_phrase(self, q: PhraseQuery, boost: float) -> DataFrame:
         """Two-phase exact phrase: docID conjunction, then JVM-side
@@ -1259,20 +996,9 @@ class IndexSearcher:
         stats = self.term_statistics(uniq)
         if any(stats[t][0] == 0 for t in uniq):
             return self._empty_scored()
-        if self._sb:
-            # SimilarityBase: no idf/weight protocol — MultiStats sums
-            # per-position kernels at the phrase freq (_score_col_sb_multi)
-            weight = None
-            _score = lambda d: self._score_col_sb_multi(  # noqa: E731
-                boost, list(q.terms), stats, d
-            )
-        else:
-            # weight: summed idf over ALL phrase terms incl. repeats,
-            # summed in double then cast
-            # (BM25Similarity.idfExplain(termStats[]):196-205)
-            idf_sum = sum(self._idf(stats[t][0]) for t in q.terms)
-            weight = self._weight(idf_sum, boost)
-            _score = lambda d: self._score_col(weight, d)  # noqa: E731
+        # PhraseWeight builds TermStatistics per phrase position,
+        # repeats included
+        term_stats = [stats[t] for t in q.terms]
         # join rarest-first; broadcast the accumulated (rarest-bounded)
         # side when the lead term is selective enough
         order = sorted(range(len(uniq)), key=lambda i: stats[uniq[i]][0])
@@ -1321,7 +1047,7 @@ class IndexSearcher:
             out = base.withColumn(
                 "freq", sloppy_udf(*[F.col(f"_p{i}") for i in range(len(uniq))])
             ).filter(F.col("freq") > 0)
-            return _score(out).select("doc_id", "score")
+            return self._score(boost, term_stats, out)
 
         def _shift(col_name: str, off: int):
             # NB: F.transform dispatches on lambda arity — a 2-arg lambda
@@ -1334,7 +1060,7 @@ class IndexSearcher:
         ]
         inter = reduce(lambda a, b: F.array_intersect(a, b), shifted)
         out = base.withColumn("freq", F.size(inter)).filter(F.col("freq") > 0)
-        return _score(out).select("doc_id", "score")
+        return self._score(boost, term_stats, out)
 
     # --------------------------------------------------------- spans
     def _span_candidates(self, q: SpanQuery) -> DataFrame:
@@ -1364,51 +1090,58 @@ class IndexSearcher:
         raise TypeError(f"not a span query: {type(q).__name__}")
 
     def _exec_span(self, q: SpanQuery, boost: float) -> DataFrame:
-        """Span execution: candidate doc-set (two-phase approximation),
-        per-term position arrays joined on, then one Arrow-batched
-        kernel runs the reference span-iterator traversal per doc
-        (spans/SpanScorer.java:84-115).  Weight = BM25 over the idf sum
-        of the tree's distinct terms (spans/SpanWeight.java)."""
-        terms = span_terms(q)
-        stats = self.term_statistics(terms)
-        live = [t for t in terms if stats[t][0] > 0]
-        if not live:
-            return self._empty_scored()
-        # SpanWeight.buildSimWeight builds termStats over ALL termContexts,
-        # including docFreq=0 terms (idf is well-defined at df=0); only the
-        # postings joins skip dead terms (spans/SpanWeight.java:126-140).
-        idf_sum = sum(self._idf(stats[t][0]) for t in terms)
-        weight = self._weight(idf_sum, boost)
-        base = self._span_candidates(q).join(self._live_norms, "doc_id")
-        for i, t in enumerate(live):
-            pl = self._term_postings(t).select(
-                "doc_id", F.col("positions").alias(f"_p{i}")
-            )
-            base = base.join(pl, "doc_id", "left")
-        term_order = list(live)
+        """Span execution: the span tree's candidate doc-set, then the
+        reference span-iterator traversal per doc
+        (spans/SpanScorer.java:84-115) as the positional freq kernel."""
         # float32 freq accumulation in lucene mode (SpanScorer's Java
         # float +=); float64 in exact mode so the SQL oracle's double
         # arithmetic agrees bit-for-bit on dyadic slop factors.
         exact = self.scoring == "exact"
 
-        @F.pandas_udf("double")
-        def span_udf(*pcols: pd.Series) -> pd.Series:
+        def span_kernel(lists: dict, n: int):
             from lucene_solr_spark.queries.spans import (
                 batch_from_position_lists,
                 span_freqs_batch,
             )
 
-            n = len(pcols[0])
-            batches = {
-                t: batch_from_position_lists(c.to_numpy())
-                for t, c in zip(term_order, pcols)
-            }
-            return pd.Series(span_freqs_batch(q, batches, n, exact))
+            batches = {t: batch_from_position_lists(a) for t, a in lists.items()}
+            return span_freqs_batch(q, batches, n, exact)
+
+        return self._exec_positional(
+            span_terms(q), lambda live: self._span_candidates(q), span_kernel,
+            boost,
+        )
+
+    def _exec_positional(
+        self, terms: list[str], candidates, kernel, boost: float
+    ) -> DataFrame:
+        """Positional execution shared by spans and TermAutomatonQuery:
+        ``candidates(live_terms)`` is the two-phase approximation doc
+        set; each live term's positions are left-joined on, and one
+        Arrow-batched ``kernel({term: positions array}, rows) -> freqs``
+        verifies them.  The weight sees ALL terms' stats, docFreq=0
+        included; only the postings joins skip dead terms
+        (spans/SpanWeight.java:126-140)."""
+        stats = self.term_statistics(terms)
+        live = [t for t in terms if stats[t][0] > 0]
+        if not live:
+            return self._empty_scored()
+        base = candidates(live).join(self._live_norms, "doc_id")
+        for i, t in enumerate(live):
+            pl = self._term_postings(t).select(
+                "doc_id", F.col("positions").alias(f"_p{i}")
+            )
+            base = base.join(pl, "doc_id", "left")
+
+        @F.pandas_udf("double")
+        def freq_udf(*pcols: pd.Series) -> pd.Series:
+            lists = {t: c.to_numpy() for t, c in zip(live, pcols)}
+            return pd.Series(kernel(lists, len(pcols[0])))
 
         out = base.withColumn(
-            "freq", span_udf(*[F.col(f"_p{i}") for i in range(len(live))])
+            "freq", freq_udf(*[F.col(f"_p{i}") for i in range(len(live))])
         ).filter(F.col("freq") > 0)
-        return self._score_col(weight, out).select("doc_id", "score")
+        return self._score(boost, [stats[t] for t in terms], out)
 
     # --------------------------------------------------------- match-only
     def _expand_terms(self, q: Query) -> list[str]:

@@ -81,7 +81,6 @@ class SegmentSearcher(IndexSearcher):
         k1: float = 1.2,
         b: float = 0.75,
         scoring: str = "lucene",
-        cache_encoded: bool = True,
         sweetspot: dict | None = None,
     ) -> None:
         self.index = index
@@ -106,11 +105,7 @@ class SegmentSearcher(IndexSearcher):
             tables = index.to_tables()
             cache = {
                 "norms": tables.doc_norms.persist(),
-                "enc": (
-                    index.postings().persist()
-                    if cache_encoded
-                    else index.postings()
-                ),
+                "enc": index.postings().persist(),
                 "term_stats": tables.term_stats.persist(),
                 "stats": tables.stats,
                 "postings": tables.postings,

@@ -18,18 +18,19 @@ ports exactly:
   seed, :320);
 - after determinization state multiplicities equal distinct start
   offsets, so ``freq`` = number of accepted (start, end) token spans;
-- score = the similarity over that freq with the idf SUM of all the
-  automaton's terms (TermAutomatonQuery.TermAutomatonWeight builds one
-  SimWeight over every term's TermStatistics, :341-393) — the same
-  shape as PhraseQuery/span scoring.
+- score = the searcher's similarity over that freq and the stats of
+  all the automaton's terms (TermAutomatonQuery.TermAutomatonWeight
+  builds one SimWeight over every term's TermStatistics, :341-393) —
+  the same shape as PhraseQuery/span scoring.
 
 Spark-first restatement: the automaton itself is request-sized and
 determinizes on the driver; matching is the span-kernel shape — a
 sargable candidate scan (docs holding ≥1 automaton term, a correct
 superset since every counted match ends on a term step), per-term
 position arrays joined on, one Arrow-batched kernel running the sweep
-per doc, then the JVM-side BM25 column kernel.  Nothing corpus-sized
-leaves the executors.
+per doc, then the JVM-side score column — the searcher's positional
+executor, shared with spans.  Nothing corpus-sized leaves the
+executors.
 """
 
 from __future__ import annotations
@@ -38,9 +39,7 @@ from dataclasses import dataclass, field
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 ANY = "*"  # anyTermID analog (TermAutomatonQuery.java ANY transitions)
 
@@ -329,44 +328,20 @@ def automaton_freqs_batch(
 def term_automaton_docs(
     searcher, taq: TermAutomatonQuery, boost: float = 1.0
 ) -> DataFrame:
-    """All matching (doc_id, score) — the _exec_span execution shape
-    (candidates → position join → kernel → JVM score column)."""
+    """All matching (doc_id, score): the searcher's positional executor
+    with the union of the live terms' docs as candidates and the
+    countMatches port as the freq kernel (TermAutomatonWeight builds
+    its weight over ALL terms' statistics, df=0 included)."""
     if taq._dfa is None:
         taq.finish()
-    terms = taq.terms
-    stats = searcher.term_statistics(terms)
-    live = [t for t in terms if stats[t][0] > 0]
-    if not live:
-        return searcher._empty_scored()
-    # TermAutomatonWeight builds the SimWeight over ALL terms'
-    # statistics (df=0 included — idf(0) is well-defined)
-    idf_sum = sum(searcher._idf(stats[t][0]) for t in terms)
-    weight = searcher._weight(idf_sum, boost)
-    cands = reduce(
-        DataFrame.unionByName,
-        (
-            searcher._term_postings(t).select("doc_id")
-            for t in live
-        ),
-    ).distinct()
-    base = cands.join(searcher._live_norms, "doc_id")
-    for i, t in enumerate(live):
-        pl = searcher._term_postings(t).select(
-            "doc_id", F.col("positions").alias(f"_p{i}")
-        )
-        base = base.join(pl, "doc_id", "left")
-    term_order = list(live)
 
-    @F.pandas_udf("double")
-    def auto_udf(*pcols: pd.Series) -> pd.Series:
-        lists = {
-            t: c.to_numpy() for t, c in zip(term_order, pcols)
-        }
-        return pd.Series(
-            automaton_freqs_batch(taq, lists, len(pcols[0]))
-        )
+    def candidates(live: list[str]) -> DataFrame:
+        return reduce(
+            DataFrame.unionByName,
+            (searcher._term_postings(t).select("doc_id") for t in live),
+        ).distinct()
 
-    out = base.withColumn(
-        "freq", auto_udf(*[F.col(f"_p{i}") for i in range(len(live))])
-    ).filter(F.col("freq") > 0)
-    return searcher._score_col(weight, out).select("doc_id", "score")
+    return searcher._exec_positional(
+        taq.terms, candidates,
+        lambda lists, n: automaton_freqs_batch(taq, lists, n), boost,
+    )

@@ -41,6 +41,25 @@ def searcher(tables):
 
 
 @pytest.fixture(scope="session")
+def mode_searcher(tables, searcher):
+    """Scoring mode name -> an IndexSearcher over the shared tables,
+    built on first use (the default ``searcher`` serves ``lucene``)."""
+    from lucene_solr_spark.queries import IndexSearcher
+
+    built = {"lucene": searcher}
+
+    def get(mode: str) -> IndexSearcher:
+        if mode not in built:
+            built[mode] = IndexSearcher(tables, scoring=mode)
+        return built[mode]
+
+    yield get
+    for mode, s in built.items():
+        if mode != "lucene":
+            s._postings.unpersist()
+
+
+@pytest.fixture(scope="session")
 def oracle(docs_df):
     from oracle import OracleIndex
 

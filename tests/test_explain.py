@@ -7,13 +7,21 @@ from __future__ import annotations
 import pytest
 
 from lucene_solr_spark.queries.parser import parse_query
+from lucene_solr_spark.scoring.similarities import SIMILARITIES
 
 
 QUERIES = ["spark", "+spark +window", "spark vector hash", "+table -vector"]
+CASES = [(qs, mode) for mode in sorted(SIMILARITIES) for qs in QUERIES]
 
 
-@pytest.mark.parametrize("qs", QUERIES)
-def test_explain_matches_score(searcher, qs):
+@pytest.mark.parametrize(
+    "qs,mode",
+    CASES,
+    # the default mode keeps the bare query id
+    ids=[qs if mode == "lucene" else f"{qs}-{mode}" for qs, mode in CASES],
+)
+def test_explain_matches_score(mode_searcher, qs, mode):
+    searcher = mode_searcher(mode)
     hits = searcher.search(parse_query(qs), k=5).collect()
     assert hits
     for r in hits:

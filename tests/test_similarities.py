@@ -282,13 +282,16 @@ def test_sb_phrase_multistats(spark, docs_df):
         )
         .filter(F.col("freq") > 0)
     )
+    dl = F.element_at(
+        s._norm_table_col(), F.col("norm_byte").bitwiseAND(255) + 1
+    )
     k1 = dfr_in_l_h2_score(
-        F.col("freq"), F.col("norm_byte"), 1.0,
-        st["spark"][0], t.stats.doc_count, t.stats.sum_total_term_freq,
+        F.col("freq"), dl, 1.0, *st["spark"],
+        t.stats.doc_count, t.stats.sum_total_term_freq,
     )
     k2 = dfr_in_l_h2_score(
-        F.col("freq"), F.col("norm_byte"), 1.0,
-        st["window"][0], t.stats.doc_count, t.stats.sum_total_term_freq,
+        F.col("freq"), dl, 1.0, *st["window"],
+        t.stats.doc_count, t.stats.sum_total_term_freq,
     )
     want = {
         r["doc_id"]: r["w"]
@@ -325,7 +328,7 @@ def test_sb_synonym_pseudostats(spark, docs_df):
     )
     want = {
         r["doc_id"]: r["score"]
-        for r in s._score_col_sb(1.0, df_max, ttf_sum, pl).collect()
+        for r in s._score(1.0, [(df_max, ttf_sum)], pl).collect()
     }
     assert {r["doc_id"]: r["score"] for r in got} == want
 
