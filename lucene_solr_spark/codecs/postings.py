@@ -20,7 +20,10 @@ upper-bound source.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
+import pyarrow as pa
 
 from lucene_solr_spark.codecs.forutil import BLOCK_SIZE, for_decode, for_encode
 from lucene_solr_spark.codecs.vbyte import vbyte_decode, vbyte_encode, vbyte_lengths
@@ -355,3 +358,154 @@ def decode_posting_block(
                 i += 1
     docs = np.cumsum(gaps, dtype=np.uint64) + np.uint64(base_docid)
     return docs, tfs
+
+
+class DecodedBlocks(NamedTuple):
+    """A batch of blocks decoded to columns, in block order: posting
+    ``i`` is in block ``block[i]`` and its positions are
+    ``positions[pos_offsets[i]:pos_offsets[i + 1]]``.  Streams that were
+    not asked for are None."""
+
+    block: np.ndarray
+    doc_id: np.ndarray
+    tf: np.ndarray
+    pos_offsets: np.ndarray | None
+    positions: np.ndarray | None
+    length: np.ndarray | None
+
+
+def concat_ranges(starts, lens) -> np.ndarray:
+    """Concatenated ``arange(s, s + l)`` over the (start, length) pairs."""
+    lens = np.asarray(lens, dtype=np.int64)
+    shift = np.asarray(starts, dtype=np.int64) - (np.cumsum(lens) - lens)
+    return np.repeat(shift, lens) + np.arange(int(lens.sum()), dtype=np.int64)
+
+
+def _seg_cumsum(vals: np.ndarray, offsets: np.ndarray) -> np.ndarray:
+    """uint64 cumsum restarted at each of ``offsets`` (wrapping like the
+    per-block ``np.cumsum(..., dtype=np.uint64)``)."""
+    cs = np.zeros(vals.size + 1, dtype=np.uint64)
+    np.cumsum(vals, dtype=np.uint64, out=cs[1:])
+    return cs[1:] - np.repeat(cs[offsets[:-1]], np.diff(offsets))
+
+
+def _binary(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A binary column → (all rows' bytes joined, row offsets, null mask),
+    read from its Arrow buffers."""
+    if not isinstance(col, pa.Array):  # numpy/pandas/list: skip pandas' Arrow hooks
+        col = np.asarray(col, dtype=object)
+    arr = pa.array(col, type=pa.large_binary())  # int64 offsets: no 2 GiB cap
+    _, offs, data = arr.buffers()
+    off = np.frombuffer(offs, dtype=np.int64)[arr.offset : arr.offset + len(arr) + 1]
+    raw = np.frombuffer(data if data is not None else b"", dtype=np.uint8)
+    return raw[off[0] : off[-1]], off - off[0], arr.is_null().to_numpy(False)
+
+
+def decode_blocks(
+    base_docid, count, docs_bin, tfs_bin, pos_bin=None, lens_bin=None, terms=None
+) -> DecodedBlocks:
+    """Decode a batch of block rows (numpy, pandas or Arrow columns) in
+    whole-batch calls: the inverse of :func:`encode_segment_blocks`, and
+    array-equal to the per-block ``decode_posting_block`` /
+    ``decode_block_positions`` / ``decode_block_lens``.
+
+    VByte tails are one joined ``vbyte_decode``: a value is a tf exactly
+    when it sits at an odd offset within its run, and a run starts at a
+    block start or just after an odd value.  FOR blocks take one
+    ``unpackbits`` per (width, count) group.  Positions and lengths are
+    one joined decode each; positions then take one segmented cumsum.
+
+    One bad block would shift every block after it in a joined decode,
+    so values are counted per block, and a mismatch raises
+    ``ValueError`` naming the block and its term (from ``terms``)."""
+    base = np.asarray(base_docid, dtype=np.int64)
+    cnt = np.asarray(count, dtype=np.int64)
+
+    def check(bad: np.ndarray, what: str, rows=None):
+        # raise naming the first bad block (``rows`` maps to block index)
+        if bad.any():
+            i = int(np.flatnonzero(bad)[0] if rows is None else rows[bad][0])
+            term = pa.array(terms)[i].as_py() if terms is not None else None
+            raise ValueError(f"corrupt posting block {i} of term {term!r}: {what}")
+
+    def vbyte(raw, lo, hi, rows, what):
+        # one decode over the joined byte spans [lo, hi) + values per span
+        b = raw[concat_ranges(lo, hi - lo)]
+        stops = np.concatenate(([0], np.cumsum(b < 0x80)))
+        ends = np.cumsum(hi - lo)
+        check((hi > lo) & (stops[ends] == stops[ends - 1]), f"{what} stream ends mid-value", rows)
+        return vbyte_decode(b), stops[ends] - stops[ends - (hi - lo)]
+
+    def for_rows(raw, off, rows, what):
+        # [width][VByte count][packed bits] or [0][VByte value][VByte count]
+        s, e, c = off[rows], off[rows + 1], cnt[rows]
+        check(e <= s, f"{what} stream is empty", rows)
+        w = raw[s].astype(np.int64)
+        same = w == 0
+        head_end = np.minimum(e, np.where(same, e, s + 1 + vbyte_lengths(c)))
+        head, per = vbyte(raw, s + 1, head_end, rows, what)
+        head, last = np.append(head, np.uint64(0)), np.cumsum(per) - 1
+        bad = (per != 1 + same) | (head[last] != c) | (w > 64)
+        bad |= ~same & (e - head_end != (c * w + 7) // 8)
+        check(bad, f"{what} FOR header disagrees with count", rows)
+        first = np.cumsum(c) - c
+        out = np.zeros(int(c.sum()), dtype=np.uint64)
+        out[concat_ranges(first[same], c[same])] = np.repeat(head[last - 1][same], c[same])
+        for wk, ck in set(zip(w[~same].tolist(), c[~same].tolist())):
+            sel = (w == wk) & (c == ck)
+            bits = np.unpackbits(
+                raw[head_end[sel][:, None] + np.arange((ck * wk + 7) // 8)], axis=1
+            )[:, : ck * wk].reshape(-1, ck, wk).astype(np.uint64)
+            shifts = np.arange(wk - 1, -1, -1, dtype=np.uint64)
+            out[concat_ranges(first[sel], c[sel])] = (
+                (bits << shifts).sum(axis=2, dtype=np.uint64).ravel()
+            )
+        return out
+
+    check(cnt < 1, "count < 1")
+    post_off = np.concatenate(([0], np.cumsum(cnt)))
+    gaps = np.zeros(int(post_off[-1]), dtype=np.uint64)
+    tf = np.zeros(gaps.size, dtype=np.uint64)
+    draw, doff, _ = _binary(docs_bin)
+    traw, toff, is_tail = _binary(tfs_bin)
+    full, tail = np.flatnonzero(~is_tail), np.flatnonzero(is_tail)
+    if full.size:
+        dst = concat_ranges(post_off[full], cnt[full])
+        gaps[dst] = for_rows(draw, doff, full, "doc")
+        tf[dst] = for_rows(traw, toff, full, "tf")
+    if tail.size:
+        vals, per = vbyte(draw, doff[tail], doff[tail + 1], tail, "doc")
+        vblock = np.repeat(np.arange(tail.size), per)
+        odd = (vals & np.uint64(1)).astype(bool)
+        run = np.ones(vals.size, dtype=bool)
+        run[1:] = odd[:-1] | (vblock[1:] != vblock[:-1])
+        run_at = np.flatnonzero(run)
+        is_tf = ((np.arange(vals.size) - run_at[np.cumsum(run) - 1]) & 1).astype(bool)
+        g = np.flatnonzero(~is_tf)
+        ngaps = np.bincount(vblock[g], minlength=tail.size)
+        check(ngaps != cnt[tail], "gap count differs from count", tail)
+        even = g[~odd[g]]
+        no_tf = ~np.append(is_tf, False)[even + 1]
+        check(no_tf, "last gap is even and has no tf after it", tail[vblock[even]])
+        dst = concat_ranges(post_off[tail], cnt[tail])
+        gaps[dst] = vals[g] >> np.uint64(1)
+        tf[dst[~odd[g]]] = vals[even + 1]
+        tf[dst[odd[g]]] = 1
+    doc_id = _seg_cumsum(gaps, post_off) + np.repeat(base.astype(np.uint64), cnt)
+    tf = tf.astype(np.int64)
+    tf_off = np.concatenate(([0], np.cumsum(tf)))
+    rows = np.arange(cnt.size)
+    pos_offsets = positions = length = None
+    if pos_bin is not None:
+        raw, off, _ = _binary(pos_bin)
+        deltas, per = vbyte(raw, off[:-1], off[1:], rows, "position")
+        check(per != np.diff(tf_off[post_off]), "position count differs from Σtf")
+        pos_offsets, positions = tf_off, _seg_cumsum(deltas, tf_off).view(np.int64)
+    if lens_bin is not None:
+        raw, off, _ = _binary(lens_bin)
+        length, per = vbyte(raw, off[:-1], off[1:], rows, "length")
+        check(per != cnt, "length count differs from count")
+        length = length.astype(np.int64)
+    return DecodedBlocks(
+        np.repeat(rows, cnt), doc_id.view(np.int64), tf, pos_offsets, positions, length
+    )

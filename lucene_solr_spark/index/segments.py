@@ -41,43 +41,71 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.analysis import analyze_batch_codes
 from lucene_solr_spark.codecs.postings import (
-    encode_posting_blocks,
+    concat_ranges,
+    decode_blocks,
     encode_segment_blocks,
 )
 from lucene_solr_spark.scoring.bm25 import encode_norm
 
+# one encoded posting block of one term
+BLOCK_ROWS_SCHEMA = (
+    "term string, block_id int, base_docid long, count int, max_docid long, "
+    "max_tf int, sum_tf long, docs_bin binary, tfs_bin binary, "
+    "pos_bin binary, lens_bin binary"
+)
+_BLOCK_ROW_COLS = [f.split()[0] for f in BLOCK_ROWS_SCHEMA.split(", ")]
 # unified kernel output: posting-block rows (kind=0) + norm rows (kind=1)
 SEGMENT_ROWS_SCHEMA = (
-    "kind int, segment int, term string, block_id int, base_docid long, "
-    "count int, max_docid long, max_tf int, sum_tf long, "
-    "docs_bin binary, tfs_bin binary, pos_bin binary, lens_bin binary, "
+    f"kind int, segment int, {BLOCK_ROWS_SCHEMA}, "
     "doc_id long, length int, norm_byte int, sum_len long"
 )
 
-_EMPTY = {
-    "kind": pd.Series([], dtype="int32"),
-    "segment": pd.Series([], dtype="int32"),
-    "term": pd.Series([], dtype="object"),
-    "block_id": pd.Series([], dtype="int32"),
-    "base_docid": pd.Series([], dtype="int64"),
-    "count": pd.Series([], dtype="int32"),
-    "max_docid": pd.Series([], dtype="int64"),
-    "max_tf": pd.Series([], dtype="int32"),
-    "sum_tf": pd.Series([], dtype="int64"),
-    "docs_bin": pd.Series([], dtype="object"),
-    "tfs_bin": pd.Series([], dtype="object"),
-    "pos_bin": pd.Series([], dtype="object"),
-    "lens_bin": pd.Series([], dtype="object"),
-    "doc_id": pd.Series([], dtype="int64"),
-    "length": pd.Series([], dtype="int32"),
-    "norm_byte": pd.Series([], dtype="int32"),
-    "sum_len": pd.Series([], dtype="int64"),
+_EMPTY = {  # an empty frame of SEGMENT_ROWS_SCHEMA, column by column
+    name: pd.Series([], dtype={"int": "int32", "long": "int64"}.get(typ, "object"))
+    for name, typ in (f.split() for f in SEGMENT_ROWS_SCHEMA.split(", "))
 }
+
+# decoded postings: one row per (term, doc)
+DECODED_SCHEMA = (
+    "doc_id long, term string, tf int, positions array<int>, "
+    "length int, norm_byte int"
+)
+_DECODE_COLS = ("base_docid", "count", "docs_bin", "tfs_bin", "pos_bin", "lens_bin")
+# blocks one merge task decodes in one call (about 0.5 M postings at most)
+_MERGE_GROUP_BLOCKS = 4096
+
+
+def _decode_kernel(batches):
+    """mapInArrow body: encoded block rows → decoded posting rows, each
+    batch in one :func:`decode_blocks` call; positions become one Arrow
+    list array built from the decoder's offsets and values."""
+
+    def i32(a):
+        return pa.array(a.astype(np.int32))
+
+    for batch in batches:
+        col = dict(zip(batch.schema.names, batch.columns))
+        d = decode_blocks(*(col[c] for c in _DECODE_COLS), terms=col["term"])
+        positions = pa.ListArray.from_arrays(i32(d.pos_offsets), i32(d.positions))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(d.doc_id), col["term"].take(pa.array(d.block)), i32(d.tf),
+             positions, i32(d.length), i32(encode_norm(d.length))],
+            names=["doc_id", "term", "tf", "positions", "length", "norm_byte"],
+        )
+
+
+def decode_postings(enc: DataFrame) -> DataFrame:
+    """Encoded block rows (``SegmentedIndex.postings()``, filtered or
+    not) → decoded ``DECODED_SCHEMA`` rows."""
+    return enc.select("term", *_DECODE_COLS).mapInArrow(
+        _decode_kernel, schema=DECODED_SCHEMA
+    )
 
 
 def _encode_segment(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -275,10 +303,11 @@ class SegmentedIndex:
         The corpus must already carry stable docIDs (assign_doc_ids —
         dense 0..N−1).  Segment id = floor(doc_id / ceil(N/num_segments)):
         a pure function of the data (resume reproduces identical
-        segments) AND contiguous per segment, so segment docID ranges are
-        disjoint — which is what lets merge concatenate decoded blocks in
-        base_docid order with no remap (MergeState.java's docBase offsets
-        are pre-baked into the global docIDs).
+        segments), and each docID lands in exactly one segment, so merge
+        needs no docID remap (MergeState.java's docBase offsets are
+        pre-baked into the global docIDs).  The built segments cover
+        contiguous ranges, but a merge of non-adjacent segments covers a
+        range that spans the segments between them.
         """
         done = set(self.manifest()) if resume else set()
         if total_docs is not None:
@@ -380,9 +409,7 @@ class SegmentedIndex:
 
     def postings(self, segments: list[int] | None = None) -> DataFrame:
         return self._rows(segments).filter(F.col("kind") == 0).select(
-            "segment", "term", "block_id", "base_docid", "count",
-            "max_docid", "max_tf", "sum_tf", "docs_bin", "tfs_bin", "pos_bin",
-            "lens_bin",
+            "segment", *_BLOCK_ROW_COLS
         )
 
     def norms(self, segments: list[int] | None = None) -> DataFrame:
@@ -400,73 +427,17 @@ class SegmentedIndex:
     def to_tables(self) -> "IndexTables":
         """Open the on-disk index for the full query surface.
 
-        Decodes block rows back to row-per-(term, doc) postings via a
-        vectorized kernel (the SegmentReader analog: a searcher over a
-        committed index, independent of the writer that produced it)
-        and assembles IndexTables for IndexSearcher.  Term filters
-        applied by the searcher push down to the parquet scan BEFORE
-        decode (Catalyst pushes the filter through mapInPandas? it does
-        not — so the searcher's term filter is applied on the encoded
-        rows first via a projection-level filter pattern: postings here
-        stay lazy and small filters prune segment partitions + row
-        groups on `term`).
+        Decodes block rows back to row-per-(term, doc) postings via
+        :func:`decode_postings` (the SegmentReader analog: a searcher
+        over a committed index, independent of the writer that produced
+        it) and assembles IndexTables for IndexSearcher.  The decode is
+        opaque to Catalyst, so a term filter on the decoded frame does
+        not reach the scan; ``SegmentSearcher`` filters the encoded rows
+        first and decodes only the surviving blocks.
         """
         from lucene_solr_spark.index.builder import CollectionStats, IndexTables
 
-        enc = self.postings()
-
-        def decode_kernel(batches):
-            from lucene_solr_spark.codecs.postings import (
-                decode_block_lens,
-                decode_block_positions,
-                decode_posting_block,
-            )
-
-            for pdf in batches:
-                out_doc, out_term, out_tf, out_pos, out_len = [], [], [], [], []
-                for term, base, cnt, db, tb, pb, lb in zip(
-                    pdf["term"], pdf["base_docid"], pdf["count"],
-                    pdf["docs_bin"], pdf["tfs_bin"], pdf["pos_bin"],
-                    pdf["lens_bin"],
-                ):
-                    d, t = decode_posting_block(base, cnt, db, tb)
-                    pos = decode_block_positions(t, pb)
-                    out_doc.append(d.astype(np.int64))
-                    out_term.extend([term] * d.size)
-                    out_tf.append(t.astype(np.int32))
-                    out_pos.extend(p.astype(np.int32) for p in pos)
-                    out_len.append(decode_block_lens(lb).astype(np.int32))
-                if not out_doc:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": pd.Series([], dtype="int64"),
-                            "term": pd.Series([], dtype="object"),
-                            "tf": pd.Series([], dtype="int32"),
-                            "positions": pd.Series([], dtype="object"),
-                            "length": pd.Series([], dtype="int32"),
-                            "norm_byte": pd.Series([], dtype="int32"),
-                        }
-                    )
-                    continue
-                lens = np.concatenate(out_len)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(out_doc),
-                        "term": np.asarray(out_term, dtype=object),
-                        "tf": np.concatenate(out_tf),
-                        "positions": out_pos,
-                        "length": lens,
-                        "norm_byte": encode_norm(lens).astype(np.int32),
-                    }
-                )
-
-        postings = enc.mapInPandas(
-            decode_kernel,
-            schema=(
-                "doc_id long, term string, tf int, positions array<int>, "
-                "length int, norm_byte int"
-            ),
-        )
+        postings = decode_postings(self.postings())
         norms = self.norms().select("doc_id", "length", "norm_byte")
         term_stats = self.term_stats()
         agg = self.norms().agg(
@@ -518,120 +489,86 @@ class SegmentedIndex:
     ) -> SegmentInfo:
         """Merge segments into one new segment (SegmentMerger.merge analog).
 
-        Term shuffle of the *encoded block rows*, then per-group decode →
-        concat (docID ranges are disjoint, so ordering by base_docid is a
-        true merge — no remap needed) → re-encode.
+        Term shuffle of the *encoded block rows*, then per group of
+        whole terms one batched decode → order postings by (term, docID),
+        positions riding along → one batched re-encode.  DocIDs are
+        global, so no remap is needed; but the merged segments' docID
+        ranges may interleave (after a merge of non-adjacent segments),
+        so block order is not docID order.
 
         Skew (north rule): a term with more than ``hot_blocks`` block
         rows (e.g. 'import'/'return'-class stopword-heavy terms, whose
         posting lists would otherwise land on ONE task) is salted into
         ``salts`` contiguous docID ranges — each (term, salt) re-encodes
-        independently, valid because every block is independently
-        decodable (absolute base_docid per block); interior salt chunks
-        may end in a short tail block, which the format permits.  Readers
-        order a term's blocks by base_docid, never block_id.
+        the term's docs in its range, valid because every block is
+        independently decodable (absolute base_docid per block); interior
+        salt chunks may end in a short tail block, which the format
+        permits.  Readers order a term's blocks by base_docid, never
+        block_id.
         """
         t0 = time.time()
         man = self.manifest()
         rows = self.postings(seg_ids)
-        infos_pre = [man[s] for s in seg_ids]
-        lo_doc = min(i.min_docid for i in infos_pre)
-        span = max(i.max_docid for i in infos_pre) - lo_doc + 1
+        infos = [man[s] for s in seg_ids]
+        lo_doc = min(i.min_docid for i in infos)
+        span = max(i.max_docid for i in infos) - lo_doc + 1
         salt_range = max(1, -(-span // max(salts, 1)))
         hot = (
             rows.groupBy("term")
             .agg(F.count("*").alias("nblocks"))
             .filter(F.col("nblocks") > hot_blocks)
-            .select("term", F.lit(1).alias("_hot"))
+            .select("term", F.lit(True).alias("hot"))
         )
-        rows = rows.join(F.broadcast(hot), "term", "left").withColumn(
-            "salt",
-            F.when(
-                F.col("_hot").isNotNull(),
-                F.floor((F.col("base_docid") - F.lit(lo_doc)) / F.lit(salt_range)),
-            )
-            .otherwise(0)
-            .cast("int"),
-        )
+        # a hot term's block goes to every salt its docID range touches
+        # (the merged segments' ranges may interleave, so a block can
+        # cross a salt boundary); each salt keeps only its own docs.
+        # Integer division, so the kernel's salt of a docID agrees.
+        salt = "int(({} - %d) div %d)" % (lo_doc, salt_range)
+        rows = rows.join(F.broadcast(hot), "term", "left").withColumn("salt", F.expr(
+            f"explode(if(hot, sequence({salt.format('base_docid')}, "
+            f"{salt.format('max_docid')}), array(0)))"
+        ))
 
         def _remerge(pdf: pd.DataFrame) -> pd.DataFrame:
-            from lucene_solr_spark.codecs.postings import (
-                decode_block_lens,
-                decode_block_positions,
-                decode_posting_block,
+            # whole terms of one salt: one batched decode, postings
+            # ordered by (term, docID) with their positions, one batched
+            # encode — the flush's encode over many terms at once
+            codes, terms = pd.factorize(pdf["term"], sort=True)
+            d = decode_blocks(*(pdf[c] for c in _DECODE_COLS), terms=pdf["term"])
+            own = pdf["hot"].isna().to_numpy()[d.block] | (
+                (d.doc_id - lo_doc) // salt_range == pdf["salt"].iloc[0]
             )
+            tcode = codes[d.block]
+            order = np.lexsort((d.doc_id, tcode))
+            order = order[own[order]]
+            tf = d.tf[order]
+            pos = d.positions[concat_ranges(d.pos_offsets[order], tf)]
+            tids, t_starts = np.unique(tcode[order], return_index=True)
+            enc = encode_segment_blocks(
+                d.doc_id[order], tf, pos, t_starts, np.append(t_starts[1:], tf.size),
+                run_lens=d.length[order],
+            )
+            term = np.asarray(terms, dtype=object)[tids[enc.pop("term_index")]]
+            return pd.DataFrame({"term": term, **enc})
 
-            out_rows: list[dict] = []
-            for term, g in pdf.groupby("term", sort=False):
-                g = g.sort_values(["base_docid", "block_id"])
-                docs_l, tfs_l, pos_l, lens_l = [], [], [], []
-                for base, cnt, db, tb, pb, lb in zip(
-                    g["base_docid"], g["count"], g["docs_bin"], g["tfs_bin"],
-                    g["pos_bin"], g["lens_bin"],
-                ):
-                    d, t = decode_posting_block(base, cnt, db, tb)
-                    docs_l.append(d)
-                    tfs_l.append(t)
-                    pos_l.extend(decode_block_positions(t, pb))
-                    lens_l.append(decode_block_lens(lb))
-                docs = np.concatenate(docs_l)
-                tfs = np.concatenate(tfs_l)
-                pos = np.concatenate(pos_l) if pos_l else np.array([], dtype=np.uint64)
-                lens = np.concatenate(lens_l)
-                for rec in encode_posting_blocks(docs, tfs, pos, doc_lens=lens):
-                    rec["term"] = term
-                    out_rows.append(rec)
-            if not out_rows:
-                return pd.DataFrame(
-                    {k: _EMPTY[k] for k in (
-                        "term", "block_id", "base_docid", "count", "max_docid",
-                        "max_tf", "sum_tf", "docs_bin", "tfs_bin", "pos_bin",
-                        "lens_bin",
-                    )}
-                )
-            out = pd.DataFrame(out_rows)
-            return out[
-                [
-                    "term", "block_id", "base_docid", "count", "max_docid",
-                    "max_tf", "sum_tf", "docs_bin", "tfs_bin", "pos_bin",
-                    "lens_bin",
-                ]
-            ]
-
-        merged = (
-            rows.groupBy("term", "salt")
-            .applyInPandas(
-                _remerge,
-                schema=(
-                    "term string, block_id int, base_docid long, count int, "
-                    "max_docid long, max_tf int, sum_tf long, "
-                    "docs_bin binary, tfs_bin binary, pos_bin binary, "
-                    "lens_bin binary"
-                ),
-            )
-            .select(
-                F.lit(0).alias("kind"),
-                F.lit(new_segment).alias("segment"),
-                "term", "block_id", "base_docid", "count", "max_docid",
-                "max_tf", "sum_tf", "docs_bin", "tfs_bin", "pos_bin",
-                "lens_bin",
-                F.lit(None).cast("long").alias("doc_id"),
-                F.lit(None).cast("int").alias("length"),
-                F.lit(None).cast("int").alias("norm_byte"),
-                F.lit(None).cast("long").alias("sum_len"),
-            )
-        )
+        # a group per (term hash bucket, salt), with the bucket count
+        # sized from the merged block count, so each _remerge call
+        # decodes about _MERGE_GROUP_BLOCKS blocks whatever the merge size
+        merged = rows.groupBy(
+            F.pmod(F.hash("term"), F.lit(_merge_buckets(infos))).alias("bucket"), "salt"
+        ).applyInPandas(_remerge, schema=BLOCK_ROWS_SCHEMA)
         norm_rows = (
             self._rows(seg_ids)
             .filter(F.col("kind").isin([1, 2]))
-            .drop("segment")
             .withColumn("segment", F.lit(new_segment))
-            .select(*merged.columns)
         )
-        merged.unionByName(norm_rows).write.partitionBy("segment").option(
+        merged.select(
+            F.lit(0).alias("kind"), F.lit(new_segment).alias("segment"), "*"
+        ).unionByName(norm_rows, allowMissingColumns=True).select(
+            *norm_rows.columns
+        ).write.partitionBy("segment").option(
             "partitionOverwriteMode", "dynamic"
         ).mode("overwrite").parquet(self._data_dir)
-        infos = infos_pre
         # one cheap stats job over just the written partition (term column
         # only — pruned scan) so the merged SegmentInfo carries the same
         # metrics the flush path records (SegmentInfo knows its term count)
@@ -667,45 +604,23 @@ class SegmentedIndex:
 
     # ----------------------------------------------------------- validate
     def check_index(self) -> dict:
-        """CheckIndex analog (index/CheckIndex.java): block invariants,
-        df/ttf consistency between block metadata and decoded content,
-        docID-range disjointness across segments."""
-        from lucene_solr_spark.codecs.postings import decode_posting_block
-
+        """CheckIndex analog (index/CheckIndex.java): every block decodes
+        and agrees with its metadata, and no docID is in two live
+        segments (read from the norms rows)."""
         problems: list[str] = []
         man = self.manifest()
         if not man:
             return {"segments": 0, "problems": ["empty manifest"]}
 
         @F.pandas_udf("int")
-        def bad_blocks(
-            base: pd.Series, count: pd.Series, docs_bin: pd.Series,
-            tfs_bin: pd.Series, max_docid: pd.Series, max_tf: pd.Series,
-            sum_tf: pd.Series,
-        ) -> pd.Series:
-            out = np.zeros(len(base), dtype=np.int32)
-            for i in range(len(base)):
-                d, t = decode_posting_block(
-                    base.iloc[i], count.iloc[i], docs_bin.iloc[i], tfs_bin.iloc[i]
-                )
-                ok = (
-                    d.size == count.iloc[i]
-                    and (np.diff(d.astype(np.int64)) > 0).all()
-                    and int(d[-1]) == max_docid.iloc[i]
-                    and int(d[0]) == base.iloc[i]
-                    and int(t.max(initial=0)) == max_tf.iloc[i]
-                    and int(t.sum()) == sum_tf.iloc[i]
-                    and (t >= 1).all()
-                )
-                out[i] = 0 if ok else 1
-            return pd.Series(out)
+        def bad_blocks(*cols: pd.Series) -> pd.Series:
+            return pd.Series(_block_faults(*(c.to_numpy() for c in cols)))
 
-        p = self.postings()
         nbad = (
-            p.select(
+            self.postings()
+            .select(
                 bad_blocks(
-                    "base_docid", "count", "docs_bin", "tfs_bin",
-                    "max_docid", "max_tf", "sum_tf",
+                    "term", *_DECODE_COLS, "max_docid", "max_tf", "sum_tf"
                 ).alias("bad")
             )
             .agg(F.sum("bad"))
@@ -713,19 +628,77 @@ class SegmentedIndex:
         )
         if nbad:
             problems.append(f"{nbad} corrupt blocks")
-        # segment doc ranges must be disjoint
-        ranges = sorted(
-            (i.min_docid, i.max_docid, s) for s, i in man.items() if i.num_docs
+        # readers union every live segment, so a docID in two of them
+        # would be matched and scored twice
+        dup = F.col("n") > 1
+        r = (
+            self.norms()
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").alias("n"),
+                F.min("segment").alias("s1"),
+                F.max("segment").alias("s2"),
+            )
+            .agg(
+                F.sum("n").alias("rows"),
+                F.count(F.when(dup, 1)).alias("dups"),
+                F.min(F.when(dup, F.struct("doc_id", "s1", "s2"))).alias("first"),
+            )
+            .collect()[0]
         )
-        for (lo1, hi1, s1), (lo2, hi2, s2) in zip(ranges, ranges[1:]):
-            if hi1 >= lo2:
-                problems.append(f"overlapping docID ranges: seg {s1} and {s2}")
+        if r["dups"]:
+            f = r["first"]
+            problems.append(
+                f"{r['dups']} docIDs in more than one segment "
+                f"(doc {f['doc_id']} in segments {f['s1']} and {f['s2']})"
+            )
         # norms docs == manifest num_docs
-        ndocs = self.norms().count()
+        ndocs = int(r["rows"] or 0)
         mdocs = sum(i.num_docs for i in man.values())
         if ndocs != mdocs:
             problems.append(f"norms rows {ndocs} != manifest docs {mdocs}")
         return {"segments": len(man), "problems": problems}
+
+
+def _merge_buckets(infos: list[SegmentInfo]) -> int:
+    """Term-hash buckets of a merge: one per ``_MERGE_GROUP_BLOCKS``
+    blocks of the merged segments."""
+    return max(1, -(-sum(i.num_blocks for i in infos) // _MERGE_GROUP_BLOCKS))
+
+
+def _block_faults(*cols) -> np.ndarray:
+    """Block rows as columns (term, the ``_DECODE_COLS``, max_docid,
+    max_tf, sum_tf) → 1 for each row that does not decode, or whose
+    postings break an invariant (docIDs strictly increasing from
+    ``base_docid`` to ``max_docid``; tfs ≥ 1, matching ``max_tf`` and
+    ``sum_tf``), else 0."""
+    term, base_docid, count = cols[:3]
+    max_docid, max_tf, sum_tf = cols[7:]
+    try:
+        d = decode_blocks(*cols[1:7], terms=term)
+    except ValueError:
+        # one corrupt stream fails the whole batch: halve it until each
+        # failing batch is one block, so the report counts bad blocks
+        if len(term) == 1:
+            return np.ones(1, dtype=np.int32)
+        h = len(term) // 2
+        return np.concatenate(
+            [_block_faults(*(c[:h] for c in cols)), _block_faults(*(c[h:] for c in cols))]
+        )
+    cnt = np.asarray(count, dtype=np.int64)
+    if cnt.size == 0:
+        return np.zeros(0, dtype=np.int32)
+    first = np.cumsum(cnt) - cnt
+    bad = (
+        (d.doc_id[first] != base_docid)
+        | (d.doc_id[first + cnt - 1] != max_docid)
+        | (np.maximum.reduceat(d.tf, first) != max_tf)
+        | (np.add.reduceat(d.tf, first) != sum_tf)
+        | (np.minimum.reduceat(d.tf, first) < 1)
+    )
+    step = (np.diff(d.doc_id) <= 0) & (d.block[1:] == d.block[:-1])
+    bad[d.block[1:][step]] = True
+    return bad.astype(np.int32)
 
 
 # ---------------------------------------------------------------------------

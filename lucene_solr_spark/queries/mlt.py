@@ -15,6 +15,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lucene_solr_spark.index.segments import decode_postings
 from lucene_solr_spark.queries.query import (
     BooleanClause,
     BooleanQuery,
@@ -169,7 +170,7 @@ def term_vector(searcher: IndexSearcher, doc_id: int) -> DataFrame:
     docID range covers the target are ever decoded."""
     enc = getattr(searcher, "_enc", None)
     if enc is not None:
-        dec = searcher._decode(
+        dec = decode_postings(
             enc.filter(
                 (F.col("base_docid") <= doc_id)
                 & (F.col("max_docid") >= doc_id)

@@ -316,16 +316,18 @@ class IndexSearcher:
         ).limit(k)
 
     def search_batch(self, queries: dict[str, Query | str], k: int = 10) -> DataFrame:
-        """Execute MANY queries as one Spark job → (query_id, doc_id,
-        score) top-k per query.
+        """Execute MANY queries in one call → (query_id, doc_id, score)
+        top-k per query.
 
         The reference benchmark measures throughput by repeating
         searches over a warm reader (micro-standard.alg:50-60, 5000×
-        "SearchSameRdr"); the Spark-idiomatic equivalent amortizes the
-        per-job scheduling cost by tagging each query's scored plan
-        with its id, unioning them over the SHARED cached postings, and
-        ranking per query with one window — one job, one scan set, N
-        queries.  Per-query top-k keeps the HitQueue tie-break."""
+        "SearchSameRdr").  Here each query's scored plan is tagged with
+        its id, the plans are unioned over the shared cached postings,
+        and one window ranks per query.  It is not one Spark job: every
+        query still runs its own stats round and postings jobs while its
+        plan is built (a term, a ``+a +b`` and a phrase query fire 13
+        jobs in all), so a batch costs about what its queries cost run
+        singly.  Per-query top-k keeps the HitQueue tie-break."""
         from pyspark.sql import Window
 
         from lucene_solr_spark.queries.parser import parse_query

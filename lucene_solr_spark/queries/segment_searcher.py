@@ -12,64 +12,11 @@ on-disk index queryable at 10^12 docs.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.segments import SegmentedIndex
+from lucene_solr_spark.index.segments import SegmentedIndex, decode_postings
 from lucene_solr_spark.queries.searcher import IndexSearcher
-
-_DECODED_SCHEMA = (
-    "doc_id long, term string, tf int, positions array<int>, "
-    "length int, norm_byte int"
-)
-
-
-def _decode_batches(batches):
-    from lucene_solr_spark.codecs.postings import (
-        decode_block_lens,
-        decode_block_positions,
-        decode_posting_block,
-    )
-    from lucene_solr_spark.scoring.bm25 import encode_norm
-
-    for pdf in batches:
-        out_doc, out_term, out_tf, out_pos, out_len = [], [], [], [], []
-        for term, base, cnt, db, tb, pb, lb in zip(
-            pdf["term"], pdf["base_docid"], pdf["count"],
-            pdf["docs_bin"], pdf["tfs_bin"], pdf["pos_bin"], pdf["lens_bin"],
-        ):
-            d, t = decode_posting_block(base, cnt, db, tb)
-            pos = decode_block_positions(t, pb)
-            out_doc.append(d.astype(np.int64))
-            out_term.extend([term] * d.size)
-            out_tf.append(t.astype(np.int32))
-            out_pos.extend(p.astype(np.int32) for p in pos)
-            out_len.append(decode_block_lens(lb).astype(np.int32))
-        if not out_doc:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series([], dtype="int64"),
-                    "term": pd.Series([], dtype="object"),
-                    "tf": pd.Series([], dtype="int32"),
-                    "positions": pd.Series([], dtype="object"),
-                    "length": pd.Series([], dtype="int32"),
-                    "norm_byte": pd.Series([], dtype="int32"),
-                }
-            )
-            continue
-        lens = np.concatenate(out_len)
-        yield pd.DataFrame(
-            {
-                "doc_id": np.concatenate(out_doc),
-                "term": np.asarray(out_term, dtype=object),
-                "tf": np.concatenate(out_tf),
-                "positions": out_pos,
-                "length": lens,
-                "norm_byte": encode_norm(lens).astype(np.int32),
-            }
-        )
 
 
 class SegmentSearcher(IndexSearcher):
@@ -156,9 +103,6 @@ class SegmentSearcher(IndexSearcher):
             cache[key] = df
         return df
 
-    def _decode(self, enc: DataFrame) -> DataFrame:
-        return enc.mapInPandas(_decode_batches, schema=_DECODED_SCHEMA)
-
     def _postings_for_terms(
         self, terms: list[str], bulk: bool = False
     ) -> DataFrame:
@@ -175,18 +119,14 @@ class SegmentSearcher(IndexSearcher):
                 # block's lens_bin payload — the per-segment reader of
                 # the reference holds .nvd alongside .doc the same way;
                 # no doc_id join at all, cold or warm
-                decoded = self._decode(
-                    self._enc.filter(F.col("term").isin(terms))
-                ).persist()
+                decoded = decode_postings(self._enc.filter(F.col("term").isin(terms))).persist()
                 self._cache_put(self._exp, key, decoded, self._EXP_CACHE_MAX)
             return decoded
         parts = []
         for t in terms:
             df = self._cache_get(self._dec, t)
             if df is None:
-                df = self._decode(
-                    self._enc.filter(F.col("term") == t)
-                ).persist()
+                df = decode_postings(self._enc.filter(F.col("term") == t)).persist()
                 self._cache_put(self._dec, t, df, self._DEC_CACHE_MAX)
             parts.append(df)
         out = parts[0]

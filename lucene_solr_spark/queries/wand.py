@@ -11,7 +11,7 @@ doubles as the upper-bound source:
 (b-term lower-bounded at zero doc length — a valid upper bound for any
 norm byte, since cache[n] = k1·((1−b)+b·NORM_TABLE[n]/avgdl) ≥ k1·(1−b)).
 
-Execution model: each segment owns a disjoint docID range, so segments
+Execution model: each docID lives in exactly one segment, so segments
 run WAND independently (one applyInPandas group per segment = the
 per-leaf scoring loop of IndexSearcher.search, IndexSearcher.java:
 640-655), each emitting its local top-k; the driver-side merge is
@@ -69,113 +69,90 @@ def _segment_wand(
     every query shuffled the whole collection's norm rows into every
     segment group).
     """
-    from lucene_solr_spark.codecs.postings import (
-        decode_block_lens,
-        decode_posting_block,
-    )
+    from lucene_solr_spark.codecs import postings
     from lucene_solr_spark.scoring.bm25 import encode_norm
 
     exact = cache is None
+    ft = np.float64 if exact else np.float32  # the scoring precision
 
-    terms = sorted(term_weights)
-    blocks: list[dict] = []  # flat block table across terms
-    for ti, term in enumerate(terms):
-        g = pdf[pdf["term"] == term]
-        if g.empty:
-            continue
-        if exact:
-            wv = np.float64(term_weights[term]) * np.float64(k1 + 1)
-        else:
-            wv = np.float32(np.float32(term_weights[term]) * np.float32(k1 + 1))
-        g = g.sort_values("base_docid")
-        for base, cnt, mx, mtf, db, tb, lb in zip(
-            g["base_docid"], g["count"], g["max_docid"], g["max_tf"],
-            g["docs_bin"], g["tfs_bin"], g["lens_bin"],
-        ):
-            mtf64 = float(mtf)
-            ub = float(wv) * mtf64 / (mtf64 + k1 * (1.0 - b))
-            blocks.append(
-                {
-                    "term_i": ti,
-                    "wv": wv,
-                    "lo": int(base),
-                    "hi": int(mx),
-                    "ub": ub * (1.0 + 1e-6),  # guard float32 rounding
-                    "count": int(cnt),
-                    "docs_bin": db,
-                    "tfs_bin": tb,
-                    "lens_bin": lb,
-                    "decoded": None,
-                }
-            )
-    score_dtype = "float64" if exact else "float32"
-    if not blocks:
+    # the block table: one entry per block, in (term, base_docid) order
+    pdf = (
+        pdf[pdf["term"].isin(list(term_weights))]
+        .sort_values(["term", "base_docid"])
+        .reset_index(drop=True)
+    )
+    if pdf.empty:
         return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype=score_dtype)})
+                             "score": pd.Series([], dtype=ft)})
+    wv = pdf["term"].map(term_weights).to_numpy(np.float64).astype(ft) * ft(k1 + 1)
+    mtf = pdf["max_tf"].to_numpy(np.float64)
+    # ×(1 + 1e-6) guards float32 rounding
+    ub = (wv.astype(np.float64) * mtf / (mtf + k1 * (1.0 - b)) * (1.0 + 1e-6)).tolist()
+    lo_b = pdf["base_docid"].to_numpy(np.int64)
+    hi_b = pdf["max_docid"].to_numpy(np.int64)
+    cnt = pdf["count"].to_numpy(np.int64)
+    # the block columns as arrays once, so each interval's decode call
+    # takes plain numpy slices of its new rows
+    cols = {c: pdf[c].to_numpy() for c in ("term", "docs_bin", "tfs_bin", "lens_bin")}
 
     # elementary intervals from all block boundaries; blocks enter/leave
     # the active set via an O(#blocks) event sweep, never a rescan
-    bounds = np.array(
-        sorted({blk["lo"] for blk in blocks} | {blk["hi"] + 1 for blk in blocks}),
-        dtype=np.int64,
-    )
+    bounds = np.unique(np.concatenate([lo_b, hi_b + 1]))
     n_iv = len(bounds) - 1
-    add_ev: list[list[dict]] = [[] for _ in range(n_iv + 1)]
-    rem_ev: list[list[dict]] = [[] for _ in range(n_iv + 1)]
-    for blk in blocks:
-        si = int(np.searchsorted(bounds, blk["lo"]))
-        ei = int(np.searchsorted(bounds, blk["hi"] + 1))
-        add_ev[si].append(blk)
-        rem_ev[ei].append(blk)
+    add_ev: list[list[int]] = [[] for _ in range(n_iv + 1)]
+    rem_ev: list[list[int]] = [[] for _ in range(n_iv + 1)]
+    for j, (si, ei) in enumerate(zip(
+        np.searchsorted(bounds, lo_b).tolist(), np.searchsorted(bounds, hi_b + 1).tolist()
+    )):
+        add_ev[si].append(j)
+        rem_ev[ei].append(j)
     heap: list[tuple[np.float32, int]] = []  # (score, -doc_id), size ≤ k
 
     def theta() -> float:
         return float(heap[0][0]) if len(heap) == k else -np.inf
 
-    active: dict[int, dict] = {}
+    decoded: list = [None] * len(pdf)  # (docs, float64 scores) per block
+    active: dict[int, None] = {}  # insertion-ordered set of block numbers
     ub_run = 0.0
     for i in range(n_iv):
-        for blk in rem_ev[i]:
-            del active[id(blk)]
-            ub_run -= blk["ub"]
-        for blk in add_ev[i]:
-            active[id(blk)] = blk
-            ub_run += blk["ub"]
+        for j in rem_ev[i]:
+            del active[j]
+            ub_run -= ub[j]
+        for j in add_ev[i]:
+            active[j] = None
+            ub_run += ub[j]
         if not active:
             continue
         lo, hi = int(bounds[i]), int(bounds[i + 1]) - 1
         if ub_run <= theta():
             continue  # equality-safe: later docIDs lose ties (HitQueue)
-        active_list = list(active.values())
-        # decode + gather candidate docs in [lo, hi]
+        # decode and score the newly active blocks in one call, then
+        # gather candidate docs in [lo, hi]
+        new = [j for j in active if decoded[j] is None]
+        if new:
+            dec = postings.decode_blocks(
+                lo_b[new], cnt[new], cols["docs_bin"][new], cols["tfs_bin"][new],
+                lens_bin=cols["lens_bin"][new], terms=cols["term"][new],
+            )
+            tfs = dec.tf.astype(ft)
+            norm_add = (
+                k1 * ((1.0 - b) + b * dec.length.astype(np.float64) / avgdl) if exact
+                else cache[encode_norm(dec.length) & 0xFF]
+            )
+            # float64 accumulate
+            s = (wv[new][dec.block] * tfs / (tfs + norm_add)).astype(np.float64)
+            ends = np.cumsum(cnt[new])
+            for j, a, z in zip(new, ends - cnt[new], ends):
+                decoded[j] = (dec.doc_id[a:z], s[a:z])
         seg_docs: list[np.ndarray] = []
         seg_scores: list[np.ndarray] = []
-        for blk in active_list:
-            if blk["decoded"] is None:
-                d_, t_ = decode_posting_block(
-                    blk["lo"], blk["count"], blk["docs_bin"], blk["tfs_bin"]
-                )
-                lens_ = decode_block_lens(blk["lens_bin"]).astype(np.int64)
-                blk["decoded"] = (d_, t_, lens_)
-            d, t, lens = blk["decoded"]
+        for j in active:
+            d, sc = decoded[j]
             a = np.searchsorted(d, lo, side="left")
             z = np.searchsorted(d, hi, side="right")
-            if a == z:
-                continue
-            docs = d[a:z].astype(np.int64)
-            if exact:
-                tfs = t[a:z].astype(np.float64)
-                dl = lens[a:z].astype(np.float64)
-                norm_add = k1 * ((1.0 - b) + b * dl / avgdl)
-                s = blk["wv"] * tfs / (tfs + norm_add)
-            else:
-                tfs = t[a:z].astype(np.float32)
-                nb = encode_norm(lens[a:z])
-                s = (blk["wv"] * tfs / (tfs + cache[nb & 0xFF])).astype(
-                    np.float32
-                )
-            seg_docs.append(docs)
-            seg_scores.append(s.astype(np.float64))  # float64 accumulate
+            if a < z:
+                seg_docs.append(d[a:z])
+                seg_scores.append(sc[a:z])
         if not seg_docs:
             continue
         # vectorized per-doc accumulation: unique docIDs (sorted — the
@@ -184,14 +161,14 @@ def _segment_wand(
         uniq_docs, inv = np.unique(np.concatenate(seg_docs), return_inverse=True)
         sums = np.zeros(len(uniq_docs), dtype=np.float64)
         np.add.at(sums, inv, np.concatenate(seg_scores))
-        sc32s = sums if exact else sums.astype(np.float32)
+        sc32s = sums.astype(ft)
         # θ only grows, so docs strictly below the current threshold can
         # never enter the heap — drop them before the Python heap loop
         if len(heap) == k:
             keep = sc32s >= heap[0][0]
             uniq_docs, sc32s = uniq_docs[keep], sc32s[keep]
         for doc, sc32 in zip(uniq_docs.tolist(), sc32s.tolist()):
-            item = (sc32 if exact else np.float32(sc32), -doc)
+            item = (ft(sc32), -doc)
             if len(heap) < k:
                 heapq.heappush(heap, item)
             elif item > heap[0]:
@@ -200,7 +177,7 @@ def _segment_wand(
     return pd.DataFrame(
         {
             "doc_id": pd.Series([-d for _, d in out], dtype="int64"),
-            "score": pd.Series([s for s, _ in out], dtype=score_dtype),
+            "score": pd.Series([s for s, _ in out], dtype=ft),
         }
     )
 
@@ -265,15 +242,7 @@ def wand_topk(
     # term-pruned block rows ONLY — norms ride inside each block's
     # lens_bin payload, so the shuffle into the per-segment WAND groups
     # is O(matching blocks), independent of collection size
-    posts = (
-        index.postings()
-        .filter(F.col("term").isin(list(weights)))
-        .select(
-            "segment", "term", "block_id", "base_docid",
-            "count", "max_docid", "max_tf", "docs_bin", "tfs_bin",
-            "lens_bin",
-        )
-    )
+    posts = index.postings().filter(F.col("term").isin(list(weights))).drop("sum_tf", "pos_bin")
 
     def kernel(pdf):
         return _segment_wand(pdf, weights, cache, k, k1, b, avgdl=float(avgdl))

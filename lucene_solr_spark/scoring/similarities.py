@@ -279,7 +279,10 @@ def axiomatic_f2exp_score(
         + _f32(_f32(F.lit(float(s32)) * dl) / F.lit(float(avgdl)))
     )
     tfln = _f32(fre / denom)
-    idf = np.float32(math.pow((num_docs + 1.0) / doc_freq, float(np.float32(k))))
+    # a docFreq=0 term (a span/automaton weight holds one) divides by
+    # zero; Java's double division gives +Infinity
+    ratio = (num_docs + 1.0) / doc_freq if doc_freq else math.inf
+    idf = np.float32(math.pow(ratio, float(np.float32(k))))
     return _f32(tfln * F.lit(float(idf))).cast("float")
 
 
@@ -317,7 +320,9 @@ def dfr_ine_b_h1_score(
     f_plus_1 = float(np.float32(ttf + 1))  # long→float conversion
     n_f = float(np.float32(doc_freq))
     den = _f32(F.lit(n_f) * _f32(tfn + F.lit(1.0)))
-    ae = _f32(F.lit(f_plus_1) / den)
+    # n = docFreq = 0 makes den 0: Java's float division gives
+    # +Infinity where Spark would raise DIVIDE_BY_ZERO
+    ae = F.lit(math.inf) if doc_freq == 0 else _f32(F.lit(f_plus_1) / den)
     score = _f32(_f32(F.lit(float(np.float32(boost))) * basic) * ae)
     return score.cast("float")
 

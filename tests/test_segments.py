@@ -141,13 +141,37 @@ def test_merged_blocks_sorted(spark, corpus, tmp_path):
         assert (np.diff(docs) > 0).all(), f"unsorted merged postings for {term}"
 
 
-def test_salted_merge_preserves_postings(spark, corpus, tmp_path):
+def test_merge_buckets_grow_with_block_count():
+    """A merge's term-hash buckets follow the merged segments' block
+    count, so each bucket decodes about _MERGE_GROUP_BLOCKS blocks."""
+    from lucene_solr_spark.index.segments import (
+        _MERGE_GROUP_BLOCKS as G,
+        SegmentInfo,
+        _merge_buckets,
+    )
+
+    def infos(*blocks):
+        return [SegmentInfo(i, 1, 1, 1, b, 0, 0, 1, 0.0) for i, b in enumerate(blocks)]
+
+    assert _merge_buckets(infos(0, 0)) == 1
+    assert _merge_buckets(infos(1, G - 1)) == 1
+    assert _merge_buckets(infos(G, 1)) == 2
+    assert _merge_buckets(infos(*[G] * 10)) == 10
+    assert _merge_buckets(infos(100 * G, 3 * G + 1)) == 104
+
+
+def test_salted_merge_preserves_postings(spark, corpus, tmp_path, monkeypatch):
     """Hot-term salting (north rule): force salting with a tiny
-    hot_blocks threshold; merged index must be identical and blocks of
-    each term strictly sorted when ordered by base_docid."""
+    hot_blocks threshold, and many term-hash buckets with a tiny bucket
+    size; merged index must be identical and blocks of each term
+    strictly sorted when ordered by base_docid."""
+    from lucene_solr_spark.index import segments
+
     idx = SegmentedIndex(spark, str(tmp_path))
     idx.build(corpus, num_segments=6)
     before = _decoded_postings(idx)
+    monkeypatch.setattr(segments, "_MERGE_GROUP_BLOCKS", 20)
+    assert segments._merge_buckets(list(idx.manifest().values())) > 4
     idx.merge(sorted(idx.manifest()), new_segment=100, salts=3, hot_blocks=1)
     after = _decoded_postings(idx)
     a = after.sort_values(["term", "doc_id"]).reset_index(drop=True)
@@ -200,3 +224,59 @@ def test_commit_points_survive_merge(spark, tmp_path):
     assert stats(g1) == stats(g2)
     with pytest.raises(FileNotFoundError):
         manifest_at(idx, 99)
+
+
+@pytest.fixture()
+def thirty(spark, tmp_path):
+    """30 docs in 3 segments (docs 0–9, 10–19, 20–29).  "common" is in
+    every doc, repeated i % 3 + 1 times before a per-doc word; "edge"
+    is in docs 0 and 29 only."""
+    rows = [
+        (i, "common " * (i % 3 + 1) + f"w{i}" + (" edge" if i in (0, 29) else ""))
+        for i in range(30)
+    ]
+    idx = SegmentedIndex(spark, str(tmp_path / "thirty"))
+    idx.build(spark.createDataFrame(rows, "doc_id long, content string"), num_segments=3)
+    return idx
+
+
+def test_non_adjacent_merges_keep_postings_sorted(thirty):
+    """Merging segments 0 and 2 gives a segment whose docID range spans
+    segment 1; merging that with segment 1 must still write each term's
+    postings in docID order, positions carried along."""
+    from lucene_solr_spark.queries.query import PhraseQuery, TermQuery
+    from lucene_solr_spark.queries.segment_searcher import SegmentSearcher
+
+    thirty.merge([0, 2], 10)
+    assert thirty.check_index()["problems"] == []
+    # salting every term into docs 0–9, 10–19, 20–29: segment 10's
+    # blocks (docs 0–9 and 20–29) go to all three salts, and salt 1
+    # keeps none of their docs
+    thirty.merge([10, 1], 11, salts=3, hot_blocks=0)
+    assert thirty.check_index()["problems"] == []
+    blocks = thirty.postings().toPandas().sort_values(["term", "base_docid"])
+    for term, g in blocks.groupby("term"):
+        docs = np.concatenate([
+            decode_posting_block(*r)[0]
+            for r in zip(g["base_docid"], g["count"], g["docs_bin"], g["tfs_bin"])
+        ]).astype(np.int64)
+        assert (np.diff(docs) > 0).all(), term
+    assert blocks.loc[blocks["term"] == "common", "base_docid"].tolist() == [0, 10, 20]
+    s = SegmentSearcher(thirty)
+    assert sorted(r["doc_id"] for r in s.docs(TermQuery("common")).collect()) == list(range(30))
+    assert sorted(r["doc_id"] for r in s.docs(TermQuery("edge")).collect()) == [0, 29]
+    assert [r["doc_id"] for r in s.docs(PhraseQuery(("common", "w17"))).collect()] == [17]
+    got = {
+        r["doc_id"]: (r["tf"], list(r["positions"]))
+        for r in thirty.to_tables().postings.filter(F.col("term") == "common").collect()
+    }
+    assert got == {i: (i % 3 + 1, list(range(i % 3 + 1))) for i in range(30)}
+
+
+def test_check_index_reports_doc_in_two_segments(thirty):
+    """Doc 5 written again as its own segment is in two live segments."""
+    spark = thirty.spark
+    src = spark.createDataFrame([(5, "common w5", 7)], "doc_id long, content string, segment int")
+    thirty.write_encoded(src, expected_segments=[7])
+    problems = thirty.check_index()["problems"]
+    assert problems == ["1 docIDs in more than one segment (doc 5 in segments 0 and 7)"]

@@ -456,3 +456,34 @@ def test_dfi_spot_values(spark, docs_df, mode, measure):
     # the corpus must exercise BOTH branches for the clamp to be pinned
     if measure == "chi_squared":
         assert 0 < clamped < len(rows) or clamped == 0
+
+
+@pytest.mark.parametrize("mode", ["axiomatic_f2exp", "dfr_ine_b_h1"])
+def test_docfreq_zero_term_scores_infinity(lm_searcher, mode):
+    """Span and TermAutomaton weights hold every term's stats, docFreq=0
+    included.  Lucene 7.0's Java arithmetic makes that term's score
+    +Infinity (Axiomatic's (N+1)/df double division, AfterEffectB's
+    float (F+1)/(n·(tfn+1))); it must not raise here."""
+    from lucene_solr_spark.queries.spans import SpanOrQuery, SpanTermQuery
+    from lucene_solr_spark.queries.term_automaton import (
+        TermAutomatonQuery,
+        term_automaton_docs,
+    )
+
+    _, t = lm_searcher
+    s = IndexSearcher(t, scoring=mode)
+    want = {r["doc_id"] for r in s.docs(TermQuery("spark")).collect()}
+    assert want
+    span = SpanOrQuery((SpanTermQuery("spark"), SpanTermQuery("zzznotaterm")))
+    taq = TermAutomatonQuery()
+    taq.add_transition(0, 1, "spark")
+    taq.add_transition(0, 1, "zzznotaterm")
+    taq.set_accept(1)
+    taq.finish()
+    for rows in (s.docs(span).collect(), term_automaton_docs(s, taq).collect()):
+        assert {r["doc_id"] for r in rows} == want
+        assert all(r["score"] == math.inf for r in rows)
+    # BM25's idf is finite at docFreq=0, so its span scores stay finite
+    bm25 = IndexSearcher(t).docs(span).collect()
+    assert {r["doc_id"] for r in bm25} == want
+    assert all(math.isfinite(r["score"]) for r in bm25)

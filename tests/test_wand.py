@@ -100,14 +100,14 @@ def test_wand_actually_skips_blocks(monkeypatch):
     n_blocks = len(rows)
     pdf = pd.DataFrame(rows)
 
-    calls = {"n": 0}
-    orig = cp.decode_posting_block
+    calls = {"n": 0}  # block rows handed to the decoder
+    orig = cp.decode_blocks
 
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return orig(*a, **kw)
+    def counting(base_docid, *a, **kw):
+        calls["n"] += len(base_docid)
+        return orig(base_docid, *a, **kw)
 
-    monkeypatch.setattr(cp, "decode_posting_block", counting)
+    monkeypatch.setattr(cp, "decode_blocks", counting)
     bm25 = BM25()
     n = 2003
     weights = {
