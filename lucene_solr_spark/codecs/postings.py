@@ -324,10 +324,13 @@ def decode_block_lens(lens_bin: bytes) -> np.ndarray:
 def decode_block_positions(
     tfs: np.ndarray, pos_bin: bytes
 ) -> list[np.ndarray]:
-    """Decode one block's ``pos_bin`` back to per-doc position arrays."""
+    """Decode one block's ``pos_bin`` back to per-doc position arrays;
+    ``ValueError`` unless it holds exactly Σtf values."""
     deltas = vbyte_decode(pos_bin)
     offsets = np.zeros(tfs.size + 1, dtype=np.int64)
     np.cumsum(np.asarray(tfs, dtype=np.int64), out=offsets[1:])
+    if deltas.size != offsets[-1] or pos_bin[-1:] >= b"\x80":
+        raise ValueError("corrupt posting block: position count differs from Σtf")
     out = []
     for i in range(tfs.size):
         d = deltas[offsets[i] : offsets[i + 1]]
@@ -338,24 +341,33 @@ def decode_block_positions(
 def decode_posting_block(
     base_docid: int, count: int, docs_bin: bytes, tfs_bin: bytes | None
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one block row back to (doc_ids, tfs)."""
+    """Decode one block row back to (doc_ids, tfs); ``ValueError`` when
+    the streams do not hold exactly ``count`` postings."""
     if tfs_bin is not None:
         gaps = for_decode(docs_bin)
         tfs = for_decode(tfs_bin)
+        ok = gaps.size == tfs.size == count
     else:
         vals = vbyte_decode(docs_bin)
         gaps = np.zeros(count, dtype=np.uint64)
         tfs = np.zeros(count, dtype=np.uint64)
         i = 0
-        for k in range(count):
-            v = vals[i]
-            i += 1
-            gaps[k] = v >> np.uint64(1)
-            if v & np.uint64(1):
-                tfs[k] = 1
-            else:
-                tfs[k] = vals[i]
+        try:
+            for k in range(count):
+                v = vals[i]
                 i += 1
+                gaps[k] = v >> np.uint64(1)
+                if v & np.uint64(1):
+                    tfs[k] = 1
+                else:
+                    tfs[k] = vals[i]
+                    i += 1
+        except IndexError:  # the stream ran out before the last posting
+            i = -1
+        # every value used, and no value cut off mid-way at the end
+        ok = i == vals.size and docs_bin[-1:] < b"\x80"
+    if not ok:
+        raise ValueError(f"corrupt posting block: streams do not hold {count} postings")
     docs = np.cumsum(gaps, dtype=np.uint64) + np.uint64(base_docid)
     return docs, tfs
 

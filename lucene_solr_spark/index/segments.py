@@ -37,6 +37,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Collection
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -51,6 +52,7 @@ from lucene_solr_spark.codecs.postings import (
     decode_blocks,
     encode_segment_blocks,
 )
+from lucene_solr_spark.index.builder import CollectionStats, IndexTables
 from lucene_solr_spark.scoring.bm25 import encode_norm
 
 # one encoded posting block of one term
@@ -353,9 +355,9 @@ class SegmentedIndex:
         # `kind = 2` down to parquet and collects one row per segment
         # instead of re-aggregating every posting block (~40% of a clean
         # 60k-doc build before)
-        written = self.spark.read.parquet(self._data_dir).filter(
-            F.col("kind") == 2
-        )
+        written = self.spark.read.schema(SEGMENT_ROWS_SCHEMA).parquet(
+            self._data_dir
+        ).filter(F.col("kind") == 2)
         if expected_segments is not None:
             written = written.filter(
                 F.col("segment").isin([int(s) for s in expected_segments])
@@ -403,7 +405,9 @@ class SegmentedIndex:
         return os.path.join(self.path, "data")
 
     def _rows(self, segments: list[int] | None = None) -> DataFrame:
-        df = self.spark.read.parquet(self._data_dir)
+        """The rows of ``segments`` (default: every live one), read with
+        their known schema: a bare read infers it in a Spark job."""
+        df = self.spark.read.schema(SEGMENT_ROWS_SCHEMA).parquet(self._data_dir)
         live = sorted(self.manifest()) if segments is None else segments
         return df.filter(F.col("segment").isin([int(s) for s in live]))
 
@@ -417,39 +421,29 @@ class SegmentedIndex:
             "segment", "doc_id", "length", "norm_byte"
         )
 
-    def term_stats(self) -> DataFrame:
+    def term_stats(self, segments: list[int] | None = None) -> DataFrame:
         """Global (df, ttf) per term from block metadata only — no block
         decode needed (the .tim term-stats analog)."""
-        return self.postings().groupBy("term").agg(
+        return self.postings(segments).groupBy("term").agg(
             F.sum("count").alias("df"), F.sum("sum_tf").alias("ttf")
         )
 
-    def to_tables(self) -> "IndexTables":
-        """Open the on-disk index for the full query surface.
-
-        Decodes block rows back to row-per-(term, doc) postings via
-        :func:`decode_postings` (the SegmentReader analog: a searcher
-        over a committed index, independent of the writer that produced
-        it) and assembles IndexTables for IndexSearcher.  The decode is
-        opaque to Catalyst, so a term filter on the decoded frame does
-        not reach the scan; ``SegmentSearcher`` filters the encoded rows
-        first and decodes only the surviving blocks.
-        """
-        from lucene_solr_spark.index.builder import CollectionStats, IndexTables
-
-        postings = decode_postings(self.postings())
-        norms = self.norms().select("doc_id", "length", "norm_byte")
-        term_stats = self.term_stats()
-        agg = self.norms().agg(
-            F.count("*").alias("dc"), F.sum("length").alias("sttf")
-        ).collect()[0]
-        sdf = sum(i.num_postings for i in self.manifest().values())
-        stats = CollectionStats(
-            doc_count=int(agg["dc"] or 0),
-            sum_total_term_freq=int(agg["sttf"] or 0),
-            sum_doc_freq=int(sdf),
+    def to_tables(self) -> IndexTables:
+        """Open one commit of the on-disk index for the full query
+        surface (the SegmentReader analog): the manifest is read once,
+        every table is filtered to its segments, and the collection stats
+        are summed from it.  Postings are decoded by
+        :func:`decode_postings`, which is opaque to Catalyst, so a term
+        filter on them does not reach the scan; ``SegmentSearcher``
+        filters the encoded rows first and decodes only what survives."""
+        man = self.manifest()
+        segs = sorted(man)
+        return IndexTables(
+            decode_postings(self.postings(segs)),
+            self.term_stats(segs),
+            self.norms(segs).select("doc_id", "length", "norm_byte"),
+            collection_stats(man.values()),
         )
-        return IndexTables(postings, term_stats, norms, stats)
 
     # --------------------------------------------------------------- merge
     def plan_merges(
@@ -573,8 +567,7 @@ class SegmentedIndex:
         # only — pruned scan) so the merged SegmentInfo carries the same
         # metrics the flush path records (SegmentInfo knows its term count)
         seg_stats = (
-            self.spark.read.parquet(f"{self._data_dir}/segment={new_segment}")
-            .filter(F.col("kind") == 0)
+            self.postings([new_segment])
             .agg(
                 F.count_distinct(F.col("term")).alias("num_terms"),
                 F.count("*").alias("num_blocks"),
@@ -658,6 +651,17 @@ class SegmentedIndex:
         if ndocs != mdocs:
             problems.append(f"norms rows {ndocs} != manifest docs {mdocs}")
         return {"segments": len(man), "problems": problems}
+
+
+def collection_stats(infos: Collection[SegmentInfo]) -> CollectionStats:
+    """Collection statistics of a commit, summed from its manifest rows
+    (each SegmentInfo carries its docs, tokens and postings), so no
+    data is read: Lucene's CollectionStatistics from SegmentInfos."""
+    return CollectionStats(
+        doc_count=sum(i.num_docs for i in infos),
+        sum_total_term_freq=sum(i.sum_len for i in infos),
+        sum_doc_freq=sum(i.num_postings for i in infos),
+    )
 
 
 def _merge_buckets(infos: list[SegmentInfo]) -> int:

@@ -37,6 +37,7 @@ tie-break (HitQueue.java:76-81).
 
 from __future__ import annotations
 
+import warnings
 from collections import OrderedDict
 from functools import reduce
 
@@ -119,6 +120,41 @@ BROADCAST_DOC_LIMIT = 2_000_000
 QUERY_RESULT_CACHE_SIZE = 512
 QUERY_RESULT_WINDOW = 20  # solrconfig.xml:549
 FILTER_CACHE_SIZE = 512
+# per-term (docFreq, totalTermFreq): a few hundred bytes an entry, and
+# far more than one query's terms (expansions stop at 1024)
+STATS_CACHE_SIZE = 65536
+
+
+class LRU(OrderedDict):
+    """The one type of every searcher cache: a size-bounded LRU map, as
+    Solr's searcher caches are (solrconfig.xml:443-459).  Evicting an
+    entry unpersists it, so a long-lived searcher does not pile up
+    executor storage."""
+
+    def __init__(self, max_size: int) -> None:
+        super().__init__()
+        self.max_size = max_size
+
+    def get(self, key, make=None):
+        """The entry of ``key``, made the most recent; on a miss, the
+        result of ``make()`` stored under ``key`` (None without it)."""
+        if key in self:
+            self.move_to_end(key)
+            return self[key]
+        value = make() if make is not None else None
+        if value is not None:
+            self.put(key, value)
+        return value
+
+    def put(self, key, value) -> None:
+        self[key] = value
+        self.move_to_end(key)
+        while len(self) > self.max_size:
+            _, old = self.popitem(last=False)
+            try:
+                getattr(old, "unpersist", lambda: None)()
+            except Exception as e:  # noqa: BLE001 — eviction must never fail a query
+                warnings.warn(f"an evicted cache entry did not unpersist: {e!r}", RuntimeWarning)
 
 
 class IndexSearcher:
@@ -207,21 +243,22 @@ class IndexSearcher:
             if self.stats.doc_count
             else 1.0
         )
-        self._stats_cache: dict[str, tuple[int, int]] = {}
+        self._stats_cache = LRU(STATS_CACHE_SIZE)
         # queryResultCache: (query repr, rounded window) → top rows; the
         # DocList analog (ordered ids+scores, materialized — Solr caches
         # the collected DocSlice, not a plan)
-        self._qr_cache: OrderedDict[tuple, list] = OrderedDict()
+        self._qr_cache = LRU(QUERY_RESULT_CACHE_SIZE)
         # filterCache: filter-query repr → persisted doc_id set (the
         # DocSet bitset analog; at 10^12 docs a persisted doc-set frame
         # spills where Solr's bitset would OOM)
-        self._filter_cache: OrderedDict[str, DataFrame] = OrderedDict()
+        self._filter_cache = LRU(FILTER_CACHE_SIZE)
 
     # ------------------------------------------------------------ stats
     def term_statistics(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """Global (docFreq, totalTermFreq) per term — the stats round of
         a distributed query (ExactStatsCache; QueryComponent.java:313-319)."""
-        missing = [t for t in terms if t not in self._stats_cache]
+        out = {t: v for t in terms if (v := self._stats_cache.get(t)) is not None}
+        missing = [t for t in terms if t not in out]
         if missing:
             rows = (
                 self.tables.term_stats.filter(F.col("term").isin(missing))
@@ -230,8 +267,9 @@ class IndexSearcher:
             )
             found = {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows}
             for t in missing:
-                self._stats_cache[t] = found.get(t, (0, 0))
-        return {t: self._stats_cache[t] for t in terms}
+                out[t] = found.get(t, (0, 0))
+                self._stats_cache.put(t, out[t])
+        return {t: out[t] for t in terms}
 
     # ------------------------------------------------------------ public
     def search(self, query: Query | str, k: int = 10, use_cache: bool = True) -> DataFrame:
@@ -251,38 +289,25 @@ class IndexSearcher:
 
             query = parse_query(query)
         q = rewrite(query)
+
+        def top(n: int) -> DataFrame:
+            return self._exec(q, boost=1.0).orderBy(
+                F.col("score").desc(), F.col("doc_id").asc()
+            ).limit(n)
+
         if not use_cache:
-            return (
-                self._exec(q, boost=1.0)
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-            )
+            return top(k)
         window = (
             QUERY_RESULT_WINDOW
             if k < QUERY_RESULT_WINDOW
             else ((k - 1) // QUERY_RESULT_WINDOW + 1) * QUERY_RESULT_WINDOW
         )
-        key = (repr(q), window)
-        entry = self._qr_cache.get(key)
-        if entry is None:
-            rows = (
-                self._exec(q, boost=1.0)
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(window)
-                .collect()
-            )
-            entry = (rows, {})
-            self._qr_cache[key] = entry
-            if len(self._qr_cache) > QUERY_RESULT_CACHE_SIZE:
-                self._qr_cache.popitem(last=False)
-        else:
-            self._qr_cache.move_to_end(key)
-        rows, dfs = entry
-        df = dfs.get(k)
-        if df is None:
-            df = self._local_result(rows[:k])
-            dfs[k] = df
-        return df
+        rows, dfs = self._qr_cache.get(
+            (repr(q), window), lambda: (top(window).collect(), {})
+        )
+        if k not in dfs:
+            dfs[k] = self._local_result(rows[:k])
+        return dfs[k]
 
     def _local_result(self, rows: list) -> DataFrame:
         """(doc_id, score) rows → a LocalRelation DataFrame.  VALUES
@@ -1289,17 +1314,7 @@ class IndexSearcher:
         a persisted doc_id frame (the DocSet bitset analog — persist
         spills to disk where a 10^12-doc bitset could not sit in RAM);
         LRU-bounded with unpersist on eviction."""
-        key = repr(q)
-        df = self._filter_cache.get(key)
-        if df is None:
-            df = self._match(q).persist()
-            self._filter_cache[key] = df
-            if len(self._filter_cache) > FILTER_CACHE_SIZE:
-                _, old = self._filter_cache.popitem(last=False)
-                old.unpersist()
-        else:
-            self._filter_cache.move_to_end(key)
-        return df
+        return self._filter_cache.get(repr(q), lambda: self._match(q).persist())
 
     def _match(self, q: Query) -> DataFrame:
         """Non-scoring doc-set execution → DataFrame(doc_id)."""

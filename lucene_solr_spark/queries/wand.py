@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.segments import SegmentedIndex
+from lucene_solr_spark.index.segments import SegmentedIndex, collection_stats
 from lucene_solr_spark.scoring.bm25 import BM25, idf as idf32
 
 
@@ -206,14 +206,14 @@ def wand_topk(
 
     spark = index.spark
     uniq = sorted(set(terms))
-    stats_rows = index.term_stats().filter(F.col("term").isin(uniq)).collect()
+    # one manifest read: term stats, collection stats (summed from the
+    # SegmentInfos, no data scan) and block rows all come from that commit
+    man = index.manifest()
+    segs = sorted(man)
+    stats_rows = index.term_stats(segs).filter(F.col("term").isin(uniq)).collect()
     df_by_term = {r["term"]: int(r["df"]) for r in stats_rows}
-    # collection stats straight from the manifest (SegmentInfos carries
-    # num_docs + sum_len per segment) — no data scan, the role of
-    # Lucene's in-memory SegmentInfos + CollectionStatistics
-    man = index.manifest().values()
-    doc_count = sum(i.num_docs for i in man)
-    sum_len = sum(i.sum_len for i in man)
+    cs = collection_stats(man.values())
+    doc_count, sum_len = cs.doc_count, cs.sum_total_term_freq
     bm25 = BM25(k1=k1, b=b)
     if exact:
         avgdl = float(sum_len) / doc_count if doc_count else 1.0
@@ -242,7 +242,7 @@ def wand_topk(
     # term-pruned block rows ONLY — norms ride inside each block's
     # lens_bin payload, so the shuffle into the per-segment WAND groups
     # is O(matching blocks), independent of collection size
-    posts = index.postings().filter(F.col("term").isin(list(weights))).drop("sum_tf", "pos_bin")
+    posts = index.postings(segs).filter(F.col("term").isin(list(weights))).drop("sum_tf", "pos_bin")
 
     def kernel(pdf):
         return _segment_wand(pdf, weights, cache, k, k1, b, avgdl=float(avgdl))

@@ -120,13 +120,30 @@ def test_decode_blocks_reads_arrow_columns_and_empty_batches():
 
 # -- corruptions --------------------------------------------------------
 # "x": docs 3, 7, 9 with tfs 1, 2, 3 — one VByte tail block whose docs
-# stream is 01 08 02 04 03 (gap 0 flagged tf=1; gap 4, tf 2; gap 2, tf 3)
+# stream is 01 08 02 04 03 (gap 0 flagged tf=1; gap 4, tf 2; gap 2, tf 3).
+# Each corruption maps to what decode_blocks says about it.
 CORRUPTIONS = {
-    "ends mid-value": lambda r: {**r, "docs_bin": r["docs_bin"][:-1] + bytes([r["docs_bin"][-1] | 0x80])},
-    "gap count differs from count": lambda r: {**r, "count": r["count"] + 1},
-    "last gap is even and has no tf after it": lambda r: {**r, "docs_bin": r["docs_bin"][:-1]},
-    "position count differs": lambda r: {**r, "pos_bin": r["pos_bin"][:-1]},
-    "length count differs from count": lambda r: {**r, "lens_bin": r["lens_bin"] + b"\x05"},
+    "ends mid-value": (
+        lambda r: {**r, "docs_bin": r["docs_bin"][:-1] + bytes([r["docs_bin"][-1] | 0x80])},
+        "ends mid-value",
+    ),
+    "gap count differs from count": (
+        lambda r: {**r, "count": r["count"] + 1}, "gap count differs from count"
+    ),
+    "last gap is even and has no tf after it": (
+        lambda r: {**r, "docs_bin": r["docs_bin"][:-1]},
+        "last gap is even and has no tf after it",
+    ),
+    "value after the last posting": (
+        lambda r: {**r, "docs_bin": r["docs_bin"] + b"\x05"}, "gap count differs from count"
+    ),
+    "position count differs": (
+        lambda r: {**r, "pos_bin": r["pos_bin"][:-1]}, "position count differs"
+    ),
+    "length count differs from count": (
+        lambda r: {**r, "lens_bin": r["lens_bin"] + b"\x05"},
+        "length count differs from count",
+    ),
 }
 
 
@@ -138,16 +155,45 @@ def _block(docs, tfs, pos, lens):
     return rec
 
 
+def _reference_decode(r):
+    """The per-block reference decoders over one block row."""
+    _, tfs = decode_posting_block(r["base_docid"], r["count"], r["docs_bin"], r["tfs_bin"])
+    decode_block_positions(tfs, r["pos_bin"])
+
+
 @pytest.mark.parametrize("what", sorted(CORRUPTIONS))
 def test_decode_blocks_raises_on_corrupt_block(what):
     x = _block([3, 7, 9], [1, 2, 3], [0, 1, 4, 0, 1, 2], [4, 6, 3])
     assert x["docs_bin"] == bytes([1, 8, 2, 4, 3])
+    _reference_decode(x)
     ok = _block([1, 2], [1, 1], [0, 5], [2, 9])
-    recs = [ok, CORRUPTIONS[what](x), ok]
+    corrupt, says = CORRUPTIONS[what]
+    recs = [ok, corrupt(x), ok]
     cols = [[r[c] for r in recs] for c in
             ("base_docid", "count", "docs_bin", "tfs_bin", "pos_bin", "lens_bin")]
-    with pytest.raises(ValueError, match=f"block 1 of term 'x': .*{what}"):
+    with pytest.raises(ValueError, match=f"block 1 of term 'x': .*{says}"):
         decode_blocks(*cols, terms=["a", "x", "b"])
+    # the reference decoders refuse it too; decode_block_lens is given no
+    # count, so a lengths stream of the wrong size is decode_blocks' alone
+    if what != "length count differs from count":
+        with pytest.raises(ValueError, match="corrupt posting block"):
+            _reference_decode(recs[1])
+
+
+def test_for_block_whose_count_disagrees_raises():
+    """A full FOR block read with a row count that is not its header's."""
+    (f,) = encode_posting_blocks(
+        np.arange(0, 256, 2, dtype=np.uint64), np.ones(128, dtype=np.uint64),
+        np.zeros(128, dtype=np.uint64), np.ones(128),
+    )
+    assert f["tfs_bin"] is not None and f["count"] == 128
+    _reference_decode(f)
+    bad = {**f, "count": 129}
+    cols = [[bad[c]] for c in ("base_docid", "count", "docs_bin", "tfs_bin", "pos_bin")]
+    with pytest.raises(ValueError, match="FOR header disagrees with count"):
+        decode_blocks(*cols)
+    with pytest.raises(ValueError, match="do not hold 129 postings"):
+        decode_posting_block(bad["base_docid"], bad["count"], bad["docs_bin"], bad["tfs_bin"])
 
 
 @pytest.fixture(scope="module")
@@ -177,7 +223,7 @@ def test_check_index_counts_a_corrupt_block(spark, small_index, tmp_path, what):
     table = pq.read_table(part)
     rows = table.to_pylist()
     i = next(j for j, r in enumerate(rows) if r["kind"] == 0 and r["term"] == "beta")
-    rows[i] = CORRUPTIONS[what](rows[i])
+    rows[i] = CORRUPTIONS[what][0](rows[i])
     pq.write_table(pa.Table.from_pylist(rows, schema=table.schema), part)
     crc = os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc")
     os.remove(crc)  # the Hadoop checksum of the old bytes

@@ -3,22 +3,29 @@ searcher, plus pushdown-before-decode plan checks."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.index.segments import SegmentedIndex
+from lucene_solr_spark.index.segments import SegmentedIndex, collection_stats
 from lucene_solr_spark.queries.parser import parse_query
 from lucene_solr_spark.queries.segment_searcher import SegmentSearcher
 
 
 @pytest.fixture(scope="module")
-def seg_searcher(spark, docs_df, tmp_path_factory):
+def seg_index(spark, docs_df, tmp_path_factory):
     idx = SegmentedIndex(spark, str(tmp_path_factory.mktemp("ssidx")))
     idx.build(
         docs_df.select("doc_id", F.col("text").alias("content")),
         num_segments=6,
     )
-    return SegmentSearcher(idx)
+    return idx
+
+
+@pytest.fixture(scope="module")
+def seg_searcher(seg_index):
+    return SegmentSearcher(seg_index)
 
 
 QUERIES = [
@@ -49,31 +56,95 @@ def test_segment_searcher_count(searcher, seg_searcher):
     assert seg_searcher.count("window") == searcher.count("window")
 
 
-def test_decoded_cache_lru_eviction(spark):
-    """The per-term decoded cache is a bounded LRU: overflowing it
-    evicts + unpersists the least-recently-used frame (the reference's
-    searcher caches are size-bounded, solrconfig.xml:443-459)."""
-    from lucene_solr_spark.queries.segment_searcher import SegmentSearcher
+class _SameHash(str):
+    """A term whose hash collides with every other term's."""
 
-    cache: dict = {}
-    frames = []
+    def __hash__(self):
+        return 0
 
-    class _FakeDF:
-        def __init__(self, i):
-            self.i = i
-            self.persisted = True
 
-        def unpersist(self):
-            self.persisted = False
+def test_expansion_cache_keys_by_terms_not_hash(seg_searcher):
+    """Two expansions whose term tuples hash equal get their own
+    postings, not each other's."""
+    a, b = [_SameHash("spark")], [_SameHash("window")]
+    assert hash(tuple(a)) == hash(tuple(b))
+    seg_searcher._postings_for_terms(a, bulk=True).collect()
+    got = seg_searcher._postings_for_terms(b, bulk=True)
+    assert {r["term"] for r in got.select("term").distinct().collect()} == {"window"}
 
-    for i in range(5):
-        df = _FakeDF(i)
-        frames.append(df)
-        SegmentSearcher._cache_put(cache, f"t{i}", df, max_size=3)
-    # 0 and 1 evicted and unpersisted, 2..4 resident
-    assert [f.persisted for f in frames] == [False, False, True, True, True]
-    assert list(cache) == ["t2", "t3", "t4"]
-    # touching t2 refreshes recency: t3 is now the LRU
-    assert SegmentSearcher._cache_get(cache, "t2") is frames[2]
-    SegmentSearcher._cache_put(cache, "t5", _FakeDF(5), max_size=3)
-    assert not frames[3].persisted and list(cache) == ["t4", "t2", "t5"]
+
+_groups = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """The Spark jobs ``fn()`` fires, counted in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_open_and_block_reads_fire_no_spark_job(spark, seg_index):
+    """The data directory is read with its known schema (a bare read
+    infers it in a job) and the collection stats come from the manifest,
+    so opening a searcher over a 6-segment index fires no job."""
+    assert _jobs(spark, seg_index.postings) == 0
+    assert _jobs(spark, lambda: SegmentSearcher(SegmentedIndex(spark, seg_index.path))) == 0
+
+
+TEXTS = [
+    "alpha beta", "beta gamma", "alpha gamma delta",
+    "omega alpha", "omega beta omega", "gamma omega",
+]
+
+
+def _corpus(spark, n: int):
+    return spark.createDataFrame(
+        [(i, TEXTS[i]) for i in range(n)], "doc_id long, content string"
+    )
+
+
+def _hits(s: SegmentSearcher, q: str) -> list:
+    return [(r["doc_id"], r["score"]) for r in s.search(q, k=10, use_cache=False).collect()]
+
+
+def test_searcher_opened_after_rebuild_scores_the_new_commit(spark, tmp_path):
+    """A rebuild adds doc 3 ("omega alpha"): a searcher opened after it
+    scores omega with the rebuilt commit's stats (N=4), exactly as one
+    over a fresh index object does."""
+    idx = SegmentedIndex(spark, str(tmp_path))
+    idx.build(_corpus(spark, 3), num_segments=2)
+    assert _hits(SegmentSearcher(idx), "alpha")
+    idx.build(_corpus(spark, 4), num_segments=2, resume=False)
+    new = SegmentSearcher(idx)
+    fresh = SegmentSearcher(SegmentedIndex(spark, str(tmp_path)))
+    assert new.stats == fresh.stats and new.stats.doc_count == 4
+    assert _hits(new, "omega") == _hits(fresh, "omega") != []
+
+
+def test_searcher_keeps_its_commit_across_write_and_merge(spark, tmp_path):
+    """A searcher opened before ``write_encoded`` of a new segment, or
+    before a merge, answers as it did; one opened after sees the new
+    manifest."""
+    idx = SegmentedIndex(spark, str(tmp_path))
+    idx.build(_corpus(spark, 4), num_segments=2)
+    queries = ["omega", "alpha beta", "+gamma +omega"]
+    before = SegmentSearcher(idx)
+    want, stats = {q: _hits(before, q) for q in queries}, before.stats
+    src = spark.createDataFrame(
+        [(i, TEXTS[i], 2) for i in (4, 5)], "doc_id long, content string, segment int"
+    )
+    idx.write_encoded(src, expected_segments=[2])
+    after_write = SegmentSearcher(idx)
+    written = {q: _hits(after_write, q) for q in queries}
+    idx.merge([0, 1, 2], new_segment=3)
+    after_merge = SegmentSearcher(idx)
+    assert {q: _hits(before, q) for q in queries} == want and before.stats == stats
+    assert {q: _hits(after_write, q) for q in queries} == written
+    assert after_merge.stats == after_write.stats == collection_stats(idx.manifest().values())
+    assert after_merge.stats.doc_count == 6 and stats.doc_count == 4
+    assert {q: _hits(after_merge, q) for q in queries} == written != want
