@@ -50,8 +50,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # with a large, rarely-collected heap the ContextCleaner (which
         # rides on GC) never reclaims old shuffle/broadcast state, and
-        # long query sessions degrade (measured: p50 drifting 2s→60s
-        # over ~40 queries); force its periodic GC often
+        # long query sessions degrade (measured at local[32]: p50
+        # drifting 2s→60s over ~40 queries); force its periodic GC often.
+        # A 600 s perfbench query-cold soak (seed 7) at local[4] with
+        # this setting did not reproduce the drift: 590 queries, per-
+        # minute p50 0.58–0.78 s in minutes 2–9, 1.1–1.6 s in the first
+        # and last, and 2.9 MB of persisted frames at the end
         .config("spark.cleaner.periodicGC.interval", "45s")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
