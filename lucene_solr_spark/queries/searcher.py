@@ -284,16 +284,10 @@ class IndexSearcher:
         query, and a repeat — or a smaller k of the same query — is
         served without touching the index.  ``use_cache=False`` bypasses
         both lookup and insert (the NO_CHECK_QCACHE flag)."""
-        if isinstance(query, str):
-            from lucene_solr_spark.queries.parser import parse_query
-
-            query = parse_query(query)
-        q = rewrite(query)
+        q = self._rewritten(query)
 
         def top(n: int) -> DataFrame:
-            return self._exec(q, boost=1.0).orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
-            ).limit(n)
+            return self._top(q, n)
 
         if not use_cache:
             return top(k)
@@ -308,6 +302,19 @@ class IndexSearcher:
         if k not in dfs:
             dfs[k] = self._local_result(rows[:k])
         return dfs[k]
+
+    def _rewritten(self, query: Query | str) -> Query:
+        if isinstance(query, str):
+            from lucene_solr_spark.queries.parser import parse_query
+
+            query = parse_query(query)
+        return rewrite(query)
+
+    def _top(self, q: Query, n: int) -> DataFrame:
+        """The top ``n`` of a rewritten query, as a lazy frame."""
+        return self._exec(q, boost=1.0).orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        ).limit(n)
 
     def _local_result(self, rows: list) -> DataFrame:
         """(doc_id, score) rows → a LocalRelation DataFrame.  VALUES
@@ -348,21 +355,19 @@ class IndexSearcher:
         searches over a warm reader (micro-standard.alg:50-60, 5000×
         "SearchSameRdr").  Here each query's scored plan is tagged with
         its id, the plans are unioned over the shared cached postings,
-        and one window ranks per query.  It is not one Spark job: every
-        query still runs its own stats round and postings jobs while its
-        plan is built (a term, a ``+a +b`` and a phrase query fire 13
-        jobs in all), so a batch costs about what its queries cost run
-        singly.  Per-query top-k keeps the HitQueue tie-break."""
+        and one window ranks per query.  On this plan path it is not one
+        Spark job: every query still runs its own stats round and
+        postings jobs while its plan is built, so a batch costs about
+        what its queries cost run singly.  ``SegmentSearcher`` sends
+        every term, exact phrase and flat boolean query of the batch,
+        tagged with its query id, through ONE fused kernel call (one
+        job, then the per-query ranking), and only the rest take the
+        plan path.  Per-query top-k keeps the HitQueue tie-break."""
         from pyspark.sql import Window
 
-        from lucene_solr_spark.queries.parser import parse_query
-
-        parts = []
-        for qid, q in queries.items():
-            if isinstance(q, str):
-                q = parse_query(q)
-            df = self._exec(rewrite(q), 1.0).withColumn("query_id", F.lit(qid))
-            parts.append(df.select("query_id", "doc_id", "score"))
+        parts = self._batch_parts(
+            {qid: self._rewritten(q) for qid, q in queries.items()}, k
+        )
         union = reduce(DataFrame.unionByName, parts)
         w = Window.partitionBy("query_id").orderBy(
             F.col("score").desc(), F.col("doc_id").asc()
@@ -373,14 +378,21 @@ class IndexSearcher:
             .drop("_rn")
         )
 
+    def _batch_parts(self, queries: dict[str, Query], k: int) -> list[DataFrame]:
+        """(query_id, doc_id, score) frames holding at least each
+        rewritten query's top ``k``."""
+        return [
+            self._exec(q, 1.0).select(F.lit(qid).alias("query_id"), "doc_id", "score")
+            for qid, q in queries.items()
+        ]
+
     def docs(self, query: Query | str) -> DataFrame:
         """All matching (doc_id, score) — exhaustive scoring."""
-        if isinstance(query, str):
-            from lucene_solr_spark.queries.parser import parse_query
+        return self._scored(self._rewritten(query))
 
-            query = parse_query(query)
-        query = rewrite(query)
-        return self._exec(query, boost=1.0)
+    def _scored(self, q: Query) -> DataFrame:
+        """All matching (doc_id, score) of a rewritten query."""
+        return self._exec(q, boost=1.0)
 
     def count(self, query: Query | str) -> int:
         """TotalHitCountCollector analog."""

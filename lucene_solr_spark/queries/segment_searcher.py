@@ -9,12 +9,38 @@ row-group stats + segment partition pruning) — and only surviving
 blocks are FOR/VByte-decoded, inside one vectorized kernel.  A query
 never decodes postings it does not touch, which is what makes the
 on-disk index queryable at 10^12 docs.
+
+Two plans answer a query:
+
+- **The fused per-segment kernel** (``queries/wand.py``) answers
+  ``search``, ``docs`` and ``search_batch`` for a term query, an exact
+  phrase (slop 0), and a flat BooleanQuery whose clauses are terms or
+  exact phrases — MUST / FILTER / SHOULD / MUST_NOT,
+  ``minimum_number_should_match`` and boosts — under the ``lucene`` and
+  ``exact`` scoring modes.  The encoded rows are persisted range-
+  partitioned by segment, so one ``isin`` over the query's terms, one
+  decode + score + top-k kernel per partition and a driver-side merge
+  by ``score DESC, doc_id ASC`` run as one Spark job, bit-identical to
+  the plan path.
+- **The plan path** (``IndexSearcher``'s relational algebra over
+  decoded postings) answers everything else: other shapes (nested
+  booleans, sloppy phrases, multi-term, spans, …), other scoring modes,
+  ``count`` and ``explain``.
+
+Term statistics come from a term dictionary held on the driver — sorted
+``(term, df, ttf)`` arrays read once, on the first lookup, from the
+blocks' metadata (the BlockTree terms index ``.tip`` is held on the heap
+the same way) — so a query fires no stats job.  Prefix and term-range
+expansion are ``searchsorted`` ranges over it.  An index with more than
+``DICTIONARY_MAX_TERMS`` (segment, term) entries keeps the per-query
+stats collect and the Spark expansion instead.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -24,9 +50,26 @@ from lucene_solr_spark.index.segments import (
     collection_stats,
     decode_postings,
 )
-from lucene_solr_spark.queries.searcher import LRU, IndexSearcher
+from lucene_solr_spark.queries.query import (
+    BooleanQuery,
+    BoostQuery,
+    Occur,
+    PhraseQuery,
+    PrefixQuery,
+    Query,
+    TermQuery,
+    TermRangeQuery,
+)
+from lucene_solr_spark.queries.searcher import LRU, MAX_EXPANSION_TERMS, IndexSearcher
+from lucene_solr_spark.queries.wand import Clause, TopKQuery, topk_by_partition
 
 _CACHE_MAX_TERMS = 8  # multi-term expansions decode in one pass instead
+# Σ manifest num_terms (one entry per (segment, term)) up to which the
+# term dictionary is held on the driver: three arrays of about 100 bytes
+# an entry before the per-segment entries are summed
+DICTIONARY_MAX_TERMS = 2_000_000
+# encoded blocks (about 1 KB each) per partition of the persisted rows
+BLOCKS_PER_PARTITION = 65_536
 
 
 class SegmentSearcher(IndexSearcher):
@@ -49,13 +92,25 @@ class SegmentSearcher(IndexSearcher):
         self.index = index
         man = index.manifest()
         segs = sorted(man)
+        self._segments = segs
+        self._num_terms = sum(i.num_terms for i in man.values())
+        self._dictionary: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
         # the ENCODED block rows — compact (FOR/VByte binaries ≈ on-disk
         # index size), filtered columnar-in-memory per query with
         # pushdown-before-decode intact; MEMORY_AND_DISK persist degrades
-        # gracefully when the index outgrows memory
-        self._enc = index.postings(segs).persist()
+        # gracefully when the index outgrows memory.  Range-partitioned
+        # by segment, so each partition holds whole segments and the
+        # fused kernel needs no shuffle (the partitioning runs once, on
+        # first use).  Every task of a query pays a fixed Python-worker
+        # cost, so a small index takes fewer partitions than segments.
+        parts = max(1, min(
+            len(segs),
+            index.spark.sparkContext.defaultParallelism,
+            -(-sum(i.num_blocks for i in man.values()) // BLOCKS_PER_PARTITION),
+        ))
+        self._enc = index.postings(segs).repartitionByRange(parts, "segment").persist()
         # per-term and per-expansion DECODED postings (scoring-independent),
-        # populated on first touch
+        # populated on first touch by the plan path
         self._dec = LRU(256)
         self._exp = LRU(32)
         tables = IndexTables(
@@ -69,6 +124,118 @@ class SegmentSearcher(IndexSearcher):
             sweetspot=sweetspot,
         )
 
+    # ------------------------------------------------------ dictionary
+    def _term_dictionary(self) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+        """Sorted (term, df, ttf) arrays, loaded on first use; None when
+        the index is past ``DICTIONARY_MAX_TERMS``."""
+        if self._dictionary is None and self._num_terms <= DICTIONARY_MAX_TERMS:
+            self._dictionary = self.index.term_stat_arrays(self._segments)
+        return self._dictionary
+
+    def term_statistics(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        d = self._term_dictionary()
+        if d is None:
+            return super().term_statistics(terms)
+        keys, df, ttf = d
+        at = np.searchsorted(keys, np.array(terms, dtype=object)) if len(terms) else []
+        return {
+            t: (int(df[i]), int(ttf[i])) if i < len(keys) and keys[i] == t else (0, 0)
+            for t, i in zip(terms, at)
+        }
+
+    def _expand_terms(self, q: Query) -> list[str]:
+        d = self._term_dictionary()
+        if d is None or not isinstance(q, (PrefixQuery, TermRangeQuery)):
+            return super()._expand_terms(q)
+        keys = d[0]
+        if isinstance(q, PrefixQuery):
+            above = _successor(q.prefix)
+            lo = np.searchsorted(keys, q.prefix, "left")
+            hi = len(keys) if above is None else np.searchsorted(keys, above, "left")
+        else:
+            lo = 0 if q.lower is None else np.searchsorted(
+                keys, q.lower, "left" if q.include_lower else "right"
+            )
+            hi = len(keys) if q.upper is None else np.searchsorted(
+                keys, q.upper, "right" if q.include_upper else "left"
+            )
+        return keys[lo : max(lo, min(hi, lo + MAX_EXPANSION_TERMS))].tolist()
+
+    # ------------------------------------------------------ fused kernel
+    def _topk_query(self, q: Query) -> TopKQuery | None:
+        """The fused kernel's form of a rewritten query, or None when
+        the plan path answers it."""
+        if self.scoring not in ("lucene", "exact"):
+            return None
+        q, boost = _unboost(q, 1.0)
+        if isinstance(q, (TermQuery, PhraseQuery)):
+            leaf = self._clause(Occur.SHOULD, q, boost)
+            return None if leaf is None else TopKQuery((leaf,))
+        if not isinstance(q, BooleanQuery):
+            return None
+        musts, rest = [], []
+        for c in q.clauses:
+            sub, b = _unboost(c.query, boost)
+            leaf = self._clause(c.occur, sub, b)
+            if leaf is None:
+                return None
+            (musts if c.occur == Occur.MUST else rest).append((c.query, leaf))
+        # MUST scores sum in the plan path's conjunction order: rarest first
+        musts.sort(key=lambda m: self._cost(m[0]))
+        return TopKQuery(
+            tuple(leaf for _, leaf in musts + rest), q.minimum_number_should_match
+        )
+
+    def _clause(self, occur: Occur, q: Query, boost: float) -> Clause | None:
+        if isinstance(q, TermQuery):
+            terms, offsets = (q.term,), None
+        elif isinstance(q, PhraseQuery) and q.slop == 0 and q.terms:
+            terms, offsets = q.terms, tuple(q.positions)
+        else:
+            return None
+        stats = self.term_statistics(list(terms))
+        weight = 0.0
+        if occur in (Occur.MUST, Occur.SHOULD) and all(stats[t][0] > 0 for t in terms):
+            # a phrase's weight sees every position's stats, repeats included
+            weight = self._sim.weight(
+                self.bm25, self.stats.doc_count, boost, [stats[t] for t in terms]
+            )
+        return Clause(occur, tuple(terms), offsets, weight)
+
+    def _fused(self, queries: dict[str, TopKQuery], k: int | None) -> DataFrame:
+        cache, avgdl = (None, self._avgdl64) if self.scoring == "exact" else (
+            self._cache32, float(self._avgdl32)
+        )
+        return topk_by_partition(
+            self._enc, queries, k, self.bm25.k1, self.bm25.b, cache, avgdl
+        )
+
+    def _top(self, q: Query, n: int) -> DataFrame:
+        tq = self._topk_query(q)
+        if tq is None:
+            return super()._top(q, n)
+        return self._fused({"q": tq}, n).select("doc_id", "score").orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        ).limit(n)
+
+    def _scored(self, q: Query) -> DataFrame:
+        tq = self._topk_query(q)
+        if tq is None:
+            return super()._scored(q)
+        return self._fused({"q": tq}, None).select("doc_id", "score")
+
+    def _batch_parts(self, queries: dict[str, Query], k: int) -> list[DataFrame]:
+        """Every covered query of the batch, tagged with its id, runs
+        through ONE fused kernel call — one ``isin`` over all their
+        terms and one narrow stage that emits each partition's top-k per
+        query — so a batch of covered queries is one kernel job plus the
+        per-query ranking.  The rest take the plan path."""
+        fused = {qid: tq for qid, q in queries.items() if (tq := self._topk_query(q))}
+        rest = {qid: q for qid, q in queries.items() if qid not in fused}
+        parts = super()._batch_parts(rest, k) if rest else []
+        return ([self._fused(fused, k)] if fused else []) + parts
+
+    # ------------------------------------------------------ plan path
     def _postings_for_terms(
         self, terms: list[str], bulk: bool = False
     ) -> DataFrame:
@@ -86,3 +253,20 @@ class SegmentSearcher(IndexSearcher):
             return self._exp.get(tuple(sorted(terms)), decoded(terms))
         parts = [self._dec.get(t, decoded([t])) for t in terms]
         return reduce(lambda a, b: a.unionByName(b), parts)
+
+
+def _unboost(q: Query, boost: float) -> tuple[Query, float]:
+    """Strip BoostQuery wrappers, multiplying their boosts in as the
+    plan path's ``_exec`` does."""
+    while isinstance(q, BoostQuery):
+        q, boost = q.query, boost * q.boost
+    return q, boost
+
+
+def _successor(prefix: str) -> str | None:
+    """The least string above every string that starts with ``prefix``
+    (code-point order, which is the UTF-8 byte order Spark compares in);
+    None when no string is."""
+    while prefix and ord(prefix[-1]) == 0x10FFFF:
+        prefix = prefix[:-1]
+    return prefix[:-1] + chr(ord(prefix[-1]) + 1) if prefix else None

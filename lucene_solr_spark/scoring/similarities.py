@@ -415,11 +415,15 @@ class Similarity:
     score Column for one weight over ``stats = [(df, ttf), ...]``;
     ``frame`` is only read for which columns it carries.
     ``cached_col(searcher)``, when set, is a per-posting Column the
-    searcher materializes once as ``_c32`` on its cached postings."""
+    searcher materializes once as ``_c32`` on its cached postings.
+    ``weight(bm25, doc_count, boost, stats)``, set on the TF-IDF
+    records, is the query weight their kernels scale by, so a scorer
+    outside Spark (the per-segment top-k kernel) takes the same one."""
 
     f32: bool
     score: Callable[..., Column]
     cached_col: Callable[..., Column] | None = None
+    weight: Callable[..., float] | None = None
 
 
 def bm25_idf(doc_freq: int, num_docs: int) -> float:
@@ -521,14 +525,16 @@ def _tfidf(f32, idf, weight, kernel, cached_col=None) -> Similarity:
     list order, the query weight boost·idf from that sum (BM25Stats /
     TFIDFSimilarity IDFStats.queryWeight :594-599), then the kernel."""
 
+    def query_weight(bm25, doc_count, boost, stats):
+        return weight(bm25, sum(idf(df, doc_count) for df, _ in stats), boost)
+
     def score(s, boost, stats, frame):
-        idf_sum = sum(idf(df, s.stats.doc_count) for df, _ in stats)
-        return kernel(s, weight(s, idf_sum, boost), frame)
+        return kernel(s, query_weight(s.bm25, s.stats.doc_count, boost, stats), frame)
 
-    return Similarity(f32, score, cached_col)
+    return Similarity(f32, score, cached_col, query_weight)
 
 
-def _double_weight(s, idf_sum: float, boost: float) -> float:
+def _double_weight(bm25, idf_sum: float, boost: float) -> float:
     return boost * float(idf_sum)
 
 
@@ -554,7 +560,7 @@ SIMILARITIES: dict[str, Similarity] = {
     "lucene": _tfidf(
         True,
         lambda df, n: float(idf32(df, n)),
-        lambda s, idf_sum, boost: float(s.bm25.weight(np.float32(idf_sum), boost)),
+        lambda bm25, idf_sum, boost: float(bm25.weight(np.float32(idf_sum), boost)),
         _bm25_f32_kernel,
         cached_col=_c32,
     ),
@@ -563,7 +569,7 @@ SIMILARITIES: dict[str, Similarity] = {
     "classic": _tfidf(
         True,
         lambda df, n: float(np.float32(_classic_idf(df, n))),
-        lambda s, idf_sum, boost: float(np.float32(np.float32(boost) * np.float32(idf_sum))),
+        lambda bm25, idf_sum, boost: float(np.float32(np.float32(boost) * np.float32(idf_sum))),
         _classic_f32_kernel,
     ),
     "classic_exact": _tfidf(False, _classic_idf, _double_weight, _classic_kernel),

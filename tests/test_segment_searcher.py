@@ -148,3 +148,40 @@ def test_searcher_keeps_its_commit_across_write_and_merge(spark, tmp_path):
     assert after_merge.stats == after_write.stats == collection_stats(idx.manifest().values())
     assert after_merge.stats.doc_count == 6 and stats.doc_count == 4
     assert {q: _hits(after_merge, q) for q in queries} == written != want
+
+
+def test_warm_searcher_fires_one_job_per_query(spark, seg_index):
+    """On a warm searcher a never-seen term, ``+a +b``, ``a b c`` and
+    ``"a b"`` each run as one fused Spark job with no stats job, and a
+    batch of the four runs as one kernel job plus its per-query ranking."""
+    s = SegmentSearcher(seg_index)
+    s.search("spark", use_cache=False).collect()  # loads the dictionary, co-locates the rows
+    queries = {
+        "term": "window",
+        "and": "+table +query",
+        "or": "merge scan hash",
+        "phrase": '"window function"',
+    }
+    for kind, q in queries.items():
+        terms = q.replace('"', "").replace("+", "").split()
+        assert _jobs(spark, lambda: s.term_statistics(terms)) == 0, kind
+        assert _jobs(spark, lambda: s.search(q, use_cache=False).collect()) <= 1, kind
+    batch = {k: q.upper() for k, q in queries.items()}  # never-seen queries
+    assert _jobs(spark, lambda: s.search_batch(batch, k=10).collect()) <= 2
+
+
+def test_wand_stats_round_is_one_single_stage_read(spark, seg_index):
+    """``wand_topk`` reads its term statistics in one job with one stage
+    (the blocks' term counts, summed on the driver), not a groupBy."""
+    from lucene_solr_spark.queries.wand import wand_topk
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        wand_topk(seg_index, ["spark", "window"], k=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
