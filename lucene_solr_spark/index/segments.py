@@ -430,21 +430,25 @@ class SegmentedIndex:
 
     def term_stat_arrays(
         self, segments: list[int], terms: Collection[str] | None = None
-    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(term, df, ttf) as arrays sorted by term, for ``terms`` (default:
-        every term).  One single-stage read of the blocks' ``(term,
-        count, sum_tf)`` columns, summed on the driver — no shuffle, and
-        no block payload leaves the scan."""
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+        """(term, df, ttf, blocks) as arrays sorted by term, for ``terms``
+        (default: every term); ``blocks`` is the term's number of encoded
+        blocks over the segments.  One single-stage read of the blocks'
+        ``(term, count, sum_tf)`` columns, summed on the driver — no
+        shuffle, and no block payload leaves the scan."""
         rows = self.postings(segments).select("term", "count", "sum_tf")
         if terms is not None:
             rows = rows.filter(F.col("term").isin(list(terms)))
         # pandas sorts object strings by code point, which is the UTF-8
         # byte order Spark compares terms in
-        g = rows.toPandas().groupby("term", sort=True)[["count", "sum_tf"]].sum()
+        g = rows.toPandas().groupby("term", sort=True).agg(
+            df=("count", "sum"), ttf=("sum_tf", "sum"), blocks=("count", "size")
+        )
         return (
             g.index.to_numpy(dtype=object),
-            g["count"].to_numpy(np.int64),
-            g["sum_tf"].to_numpy(np.int64),
+            g["df"].to_numpy(np.int64),
+            g["ttf"].to_numpy(np.int64),
+            g["blocks"].to_numpy(np.int64),
         )
 
     def to_tables(self) -> IndexTables:

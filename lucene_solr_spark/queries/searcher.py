@@ -43,8 +43,11 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 from lucene_solr_spark.index.builder import IndexTables
 from lucene_solr_spark.queries.query import (
@@ -123,6 +126,23 @@ FILTER_CACHE_SIZE = 512
 # per-term (docFreq, totalTermFreq): a few hundred bytes an entry, and
 # far more than one query's terms (expansions stop at 1024)
 STATS_CACHE_SIZE = 65536
+
+
+def local_frame(spark: SparkSession, data: pd.DataFrame | None, schema: str) -> DataFrame:
+    """``data`` (None: no rows) as a DataFrame of the DDL ``schema`` that
+    is a LocalRelation: built from an Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default), so its ``collect()`` — and a select, filter or limit over
+    it — is served on the driver and fires no Spark job.  A frame from
+    ``createDataFrame([...])`` is RDD-backed and fires one.  Values
+    round-trip exactly: float32 and double scores keep their bits."""
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    if data is None or data.empty:
+        table = arrow.empty_table()
+    else:
+        table = pa.Table.from_pandas(data[struct.names], schema=arrow, preserve_index=False)
+    return spark.createDataFrame(table, struct)
 
 
 class LRU(OrderedDict):
@@ -317,23 +337,21 @@ class IndexSearcher:
         ).limit(n)
 
     def _local_result(self, rows: list) -> DataFrame:
-        """(doc_id, score) rows → a LocalRelation DataFrame.  VALUES
-        compiles to LocalTableScan, whose collect() is served driver-
-        side with no tasks — a cache hit costs no Spark job (the DocList
-        in Solr is likewise a plain in-memory slice).  Score literals
-        round-trip exactly: each value is already a float32/double, and
-        the shortest repr re-parses to the identical value."""
-        spark = self.tables.postings.sparkSession
-        typ = "FLOAT" if self._f32 else "DOUBLE"
-        if not rows:
-            return spark.createDataFrame(
-                [], f"doc_id long, score {'float' if self._f32 else 'double'}"
-            )
-        vals = ", ".join(
-            f"({int(r['doc_id'])}L, CAST({float(r['score'])!r} AS {typ}))"
-            for r in rows
+        """(doc_id, score) rows → a LocalRelation DataFrame, whose
+        collect() is served driver-side with no tasks — a cache hit costs
+        no Spark job (the DocList in Solr is likewise a plain in-memory
+        slice)."""
+        return local_frame(
+            self.tables.postings.sparkSession,
+            pd.DataFrame(
+                {"doc_id": [r["doc_id"] for r in rows], "score": [r["score"] for r in rows]}
+            ),
+            self._scored_schema,
         )
-        return spark.sql(f"SELECT * FROM VALUES {vals} AS t(doc_id, score)")
+
+    @property
+    def _scored_schema(self) -> str:
+        return f"doc_id long, score {'float' if self._f32 else 'double'}"
 
     def search_after(
         self, query: Query | str, after_score: float, after_doc: int, k: int = 10
@@ -360,28 +378,33 @@ class IndexSearcher:
         postings jobs while its plan is built, so a batch costs about
         what its queries cost run singly.  ``SegmentSearcher`` sends
         every term, exact phrase and flat boolean query of the batch,
-        tagged with its query id, through ONE fused kernel call (one
-        job, then the per-query ranking), and only the rest take the
-        plan path.  Per-query top-k keeps the HitQueue tie-break."""
+        tagged with its query id, through ONE fused kernel call, and
+        only the rest take the plan path.  Per-query top-k keeps the
+        HitQueue tie-break."""
         from pyspark.sql import Window
 
-        parts = self._batch_parts(
+        ranked, parts = self._batch_parts(
             {qid: self._rewritten(q) for qid, q in queries.items()}, k
         )
-        union = reduce(DataFrame.unionByName, parts)
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        return (
-            union.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
+        if parts:
+            w = Window.partitionBy("query_id").orderBy(
+                F.col("score").desc(), F.col("doc_id").asc()
+            )
+            ranked.append(
+                reduce(DataFrame.unionByName, parts)
+                .withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") <= k)
+                .drop("_rn")
+            )
+        return reduce(DataFrame.unionByName, ranked)
 
-    def _batch_parts(self, queries: dict[str, Query], k: int) -> list[DataFrame]:
-        """(query_id, doc_id, score) frames holding at least each
-        rewritten query's top ``k``."""
-        return [
+    def _batch_parts(
+        self, queries: dict[str, Query], k: int
+    ) -> tuple[list[DataFrame], list[DataFrame]]:
+        """(query_id, doc_id, score) frames of the rewritten queries: those
+        that hold exactly each of their queries' top ``k``, and those
+        that hold at least it and still need the per-query ranking."""
+        return [], [
             self._exec(q, 1.0).select(F.lit(qid).alias("query_id"), "doc_id", "score")
             for qid, q in queries.items()
         ]
@@ -439,12 +462,15 @@ class IndexSearcher:
             freq, norm_byte, length = (
                 int(row[0]["tf"]), int(row[0]["norm_byte"]), int(row[0]["length"])
             )
-            df_, _ = self.term_statistics([q.term])[q.term]
-            n = self.stats.doc_count
+            stats = self.term_statistics([q.term])[q.term]
+            df_, n = stats[0], self.stats.doc_count
             idf_v = (
                 float(idf32(df_, n)) if self.scoring == "lucene"
                 else bm25_idf(df_, n)
             )
+            # the query weight boost·idf of the mode's Similarity, as
+            # every scorer takes it
+            weight = self._sim.weight(self.bm25, n, boost, [stats])
             k1, b = self.bm25.k1, self.bm25.b
             if self.scoring == "lucene":
                 tf_norm = float(
@@ -452,7 +478,7 @@ class IndexSearcher:
                     / (np.float32(freq) + self._cache32[norm_byte & 0xFF])
                 )
                 score = float(
-                    np.float32(self.bm25.weight(idf_v, boost))
+                    np.float32(weight)
                     * np.float32(k1 + 1)
                     * np.float32(freq)
                     / (np.float32(freq) + self._cache32[norm_byte & 0xFF])
@@ -460,7 +486,7 @@ class IndexSearcher:
             else:
                 denom = freq + k1 * ((1 - b) + b * length / self._avgdl64)
                 tf_norm = freq / denom
-                score = boost * idf_v * (k1 + 1) * freq / denom
+                score = weight * (k1 + 1) * freq / denom
             return node(
                 score,
                 f"weight(content:{q.term} in {doc_id}) [BM25Similarity], product of:",
@@ -712,8 +738,9 @@ class IndexSearcher:
         return (lit.cast("float") if self._f32 else lit).alias("score")
 
     def _empty_scored(self) -> DataFrame:
-        spark = self.tables.postings.sparkSession
-        return spark.createDataFrame([], "doc_id long, score float" if self._f32 else "doc_id long, score double")
+        """No (doc_id, score) rows, as a LocalRelation: collecting it, or
+        a plan it empties, fires no Spark job."""
+        return local_frame(self.tables.postings.sparkSession, None, self._scored_schema)
 
     # cost estimate for conjunction ordering (rarest-first lead,
     # ConjunctionDISI.java:185)
@@ -1332,7 +1359,7 @@ class IndexSearcher:
         """Non-scoring doc-set execution → DataFrame(doc_id)."""
         if isinstance(q, MatchNoDocsQuery):
             spark = self.tables.postings.sparkSession
-            return spark.createDataFrame([], "doc_id long")
+            return local_frame(spark, None, "doc_id long")
         if isinstance(q, MatchAllDocsQuery):
             return self._live_norms.select("doc_id")
         if isinstance(q, (BoostQuery, ConstantScoreQuery)):
@@ -1353,7 +1380,7 @@ class IndexSearcher:
             terms = self._expand_terms(q)
             if not terms:
                 spark = self.tables.postings.sparkSession
-                return spark.createDataFrame([], "doc_id long")
+                return local_frame(spark, None, "doc_id long")
             return (
                 self._postings_for_terms(terms, bulk=True)
                 .select("doc_id")
@@ -1401,7 +1428,7 @@ class IndexSearcher:
                     )
             if base is None:
                 spark = self.tables.postings.sparkSession
-                return spark.createDataFrame([], "doc_id long")
+                return local_frame(spark, None, "doc_id long")
             for mn in must_nots:
                 ex = self._match(mn)
                 if self._cost(mn) <= BROADCAST_DOC_LIMIT:

@@ -17,11 +17,16 @@ Two plans answer a query:
   phrase (slop 0), and a flat BooleanQuery whose clauses are terms or
   exact phrases — MUST / FILTER / SHOULD / MUST_NOT,
   ``minimum_number_should_match`` and boosts — under the ``lucene`` and
-  ``exact`` scoring modes.  The encoded rows are persisted range-
-  partitioned by segment, so one ``isin`` over the query's terms, one
-  decode + score + top-k kernel per partition and a driver-side merge
-  by ``score DESC, doc_id ASC`` run as one Spark job, bit-identical to
-  the plan path.
+  ``exact`` scoring modes, bit-identical to the plan path.  One
+  ``isin`` over the query's terms selects its encoded block rows; where
+  the kernel runs follows from the term dictionary, which counts those
+  rows' blocks.  At most ``DRIVER_MAX_BLOCKS`` of them (every query of a
+  small index) come to the driver in one JVM-only Arrow collect, the
+  kernel runs there over every segment, and the ranked rows come back
+  as a LocalRelation: one Spark job, and no Python worker.  Past it, or
+  with no dictionary, the rows — persisted range-partitioned by
+  segment — run the kernel per partition in one narrow ``mapInPandas``
+  stage, merged by ``score DESC, doc_id ASC``.
 - **The plan path** (``IndexSearcher``'s relational algebra over
   decoded postings) answers everything else: other shapes (nested
   booleans, sloppy phrases, multi-term, spans, …), other scoring modes,
@@ -61,7 +66,12 @@ from lucene_solr_spark.queries.query import (
     TermRangeQuery,
 )
 from lucene_solr_spark.queries.searcher import LRU, MAX_EXPANSION_TERMS, IndexSearcher
-from lucene_solr_spark.queries.wand import Clause, TopKQuery, topk_by_partition
+from lucene_solr_spark.queries.wand import (
+    Clause,
+    TopKQuery,
+    topk_by_partition,
+    topk_on_driver,
+)
 
 _CACHE_MAX_TERMS = 8  # multi-term expansions decode in one pass instead
 # Σ manifest num_terms (one entry per (segment, term)) up to which the
@@ -70,6 +80,16 @@ _CACHE_MAX_TERMS = 8  # multi-term expansions decode in one pass instead
 DICTIONARY_MAX_TERMS = 2_000_000
 # encoded blocks (about 1 KB each) per partition of the persisted rows
 BLOCKS_PER_PARTITION = 65_536
+# encoded blocks of a query's terms up to which the fused kernel runs on
+# the driver, over one Arrow collect of the rows, instead of in a
+# mapInPandas stage.  The break-even, measured on a 4-core host
+# (local[4], perfbench corpus of 40,000 docs in 4 segments): the stage's
+# Python-worker round trip costs 0.35-0.45 s more than the 0.04-0.09 s
+# Arrow collect, and the driver kernel takes about 0.3 ms a block at
+# k=10 (0.05 ms exhaustive).  At 1,030 blocks the driver placement took
+# 0.35-0.43 s against 0.46-0.60 s for the stage; at 1,644 blocks,
+# 0.59-0.72 s against 0.67-0.76 s.
+DRIVER_MAX_BLOCKS = 1024
 
 
 class SegmentSearcher(IndexSearcher):
@@ -94,7 +114,7 @@ class SegmentSearcher(IndexSearcher):
         segs = sorted(man)
         self._segments = segs
         self._num_terms = sum(i.num_terms for i in man.values())
-        self._dictionary: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
+        self._dictionary: tuple[np.ndarray, ...] | None = None
         # the ENCODED block rows — compact (FOR/VByte binaries ≈ on-disk
         # index size), filtered columnar-in-memory per query with
         # pushdown-before-decode intact; MEMORY_AND_DISK persist degrades
@@ -125,9 +145,9 @@ class SegmentSearcher(IndexSearcher):
         )
 
     # ------------------------------------------------------ dictionary
-    def _term_dictionary(self) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-        """Sorted (term, df, ttf) arrays, loaded on first use; None when
-        the index is past ``DICTIONARY_MAX_TERMS``."""
+    def _term_dictionary(self) -> tuple[np.ndarray, ...] | None:
+        """Sorted (term, df, ttf, blocks) arrays, loaded on first use;
+        None when the index is past ``DICTIONARY_MAX_TERMS``."""
         if self._dictionary is None and self._num_terms <= DICTIONARY_MAX_TERMS:
             self._dictionary = self.index.term_stat_arrays(self._segments)
         return self._dictionary
@@ -136,12 +156,26 @@ class SegmentSearcher(IndexSearcher):
         d = self._term_dictionary()
         if d is None:
             return super().term_statistics(terms)
-        keys, df, ttf = d
-        at = np.searchsorted(keys, np.array(terms, dtype=object)) if len(terms) else []
+        _, df, ttf, _ = d
         return {
-            t: (int(df[i]), int(ttf[i])) if i < len(keys) and keys[i] == t else (0, 0)
-            for t, i in zip(terms, at)
+            t: (int(df[i]), int(ttf[i])) if i >= 0 else (0, 0)
+            for t, i in zip(terms, self._lookup(terms))
         }
+
+    def _lookup(self, terms: list[str]) -> list[int]:
+        """Each term's index in the held dictionary, -1 where it has none."""
+        keys = self._dictionary[0]
+        at = np.searchsorted(keys, np.array(terms, dtype=object)) if len(terms) else []
+        return [i if i < len(keys) and keys[i] == t else -1 for t, i in zip(terms, at)]
+
+    def _on_driver(self, terms: list[str]) -> bool:
+        """Whether the fused kernel over ``terms`` runs on the driver: the
+        held dictionary counts their blocks at most ``DRIVER_MAX_BLOCKS``.
+        Without a dictionary the kernel runs in a Spark stage."""
+        if self._term_dictionary() is None:
+            return False
+        blocks = self._dictionary[3]
+        return sum(int(blocks[i]) for i in self._lookup(terms) if i >= 0) <= DRIVER_MAX_BLOCKS
 
     def _expand_terms(self, q: Query) -> list[str]:
         d = self._term_dictionary()
@@ -202,19 +236,24 @@ class SegmentSearcher(IndexSearcher):
             )
         return Clause(occur, tuple(terms), offsets, weight)
 
-    def _fused(self, queries: dict[str, TopKQuery], k: int | None) -> DataFrame:
+    def _fused(self, queries: dict[str, TopKQuery], k: int | None) -> tuple[DataFrame, bool]:
+        """``(query_id, doc_id, score)`` of the fused kernel, and whether
+        it ran on the driver — whose frame holds each query's top ``k``
+        already ranked."""
         cache, avgdl = (None, self._avgdl64) if self.scoring == "exact" else (
             self._cache32, float(self._avgdl32)
         )
-        return topk_by_partition(
-            self._enc, queries, k, self.bm25.k1, self.bm25.b, cache, avgdl
-        )
+        on_driver = self._on_driver(sorted({t for q in queries.values() for t in q.terms}))
+        run = topk_on_driver if on_driver else topk_by_partition
+        return run(self._enc, queries, k, self.bm25.k1, self.bm25.b, cache, avgdl), on_driver
 
     def _top(self, q: Query, n: int) -> DataFrame:
         tq = self._topk_query(q)
         if tq is None:
             return super()._top(q, n)
-        return self._fused({"q": tq}, n).select("doc_id", "score").orderBy(
+        df, ranked = self._fused({"q": tq}, n)
+        df = df.select("doc_id", "score")
+        return df if ranked else df.orderBy(
             F.col("score").desc(), F.col("doc_id").asc()
         ).limit(n)
 
@@ -222,18 +261,23 @@ class SegmentSearcher(IndexSearcher):
         tq = self._topk_query(q)
         if tq is None:
             return super()._scored(q)
-        return self._fused({"q": tq}, None).select("doc_id", "score")
+        return self._fused({"q": tq}, None)[0].select("doc_id", "score")
 
-    def _batch_parts(self, queries: dict[str, Query], k: int) -> list[DataFrame]:
+    def _batch_parts(
+        self, queries: dict[str, Query], k: int
+    ) -> tuple[list[DataFrame], list[DataFrame]]:
         """Every covered query of the batch, tagged with its id, runs
         through ONE fused kernel call — one ``isin`` over all their
-        terms and one narrow stage that emits each partition's top-k per
-        query — so a batch of covered queries is one kernel job plus the
-        per-query ranking.  The rest take the plan path."""
+        terms, then each query's top-k on the driver, or each
+        partition's per query in one narrow stage that the per-query
+        ranking follows.  The rest take the plan path."""
         fused = {qid: tq for qid, q in queries.items() if (tq := self._topk_query(q))}
         rest = {qid: q for qid, q in queries.items() if qid not in fused}
-        parts = super()._batch_parts(rest, k) if rest else []
-        return ([self._fused(fused, k)] if fused else []) + parts
+        ranked, parts = super()._batch_parts(rest, k) if rest else ([], [])
+        if fused:
+            df, on_driver = self._fused(fused, k)
+            (ranked if on_driver else parts).append(df)
+        return ranked, parts
 
     # ------------------------------------------------------ plan path
     def _postings_for_terms(

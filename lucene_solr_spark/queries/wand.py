@@ -19,7 +19,14 @@ run top-k independently (the per-leaf scoring loop of
 IndexSearcher.search, IndexSearcher.java:640-655), each emitting its
 local top-k; the merge is ORDER BY score DESC, doc_id ASC LIMIT k —
 bit-identical to TopDocs.merge tie-breaks (search/TopDocs.java:209-260,
-HitQueue.java:76-81).
+HitQueue.java:76-81).  One function, :func:`topk_kernel`, runs the
+segments' top-k and their merge, in one of two places.  A query whose
+terms have few blocks (the caller counts them: ``SegmentSearcher`` from
+its term dictionary, ``wand_topk`` from its stats read, against
+``segment_searcher.DRIVER_MAX_BLOCKS``) runs it on the driver over one
+JVM-only Arrow collect of its block rows, since a Python worker's round
+trip costs more than such a kernel; any other runs it inside a Spark
+stage, per partition or per segment group.
 
 Within a segment: a boundary sweep over the union of block intervals
 processes elementary docID ranges in increasing-docID order, skipping
@@ -52,6 +59,7 @@ from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.segments import SegmentedIndex, collection_stats
 from lucene_solr_spark.queries.query import Occur
+from lucene_solr_spark.queries.searcher import local_frame
 from lucene_solr_spark.scoring.bm25 import BM25
 from lucene_solr_spark.scoring.similarities import SIMILARITIES
 
@@ -334,6 +342,14 @@ def _segment_topk(
     )
 
 
+def _wand_query(term_weights: dict[str, float]) -> TopKQuery:
+    """A disjunction of terms, each with its Similarity weight, as SHOULD
+    term clauses."""
+    return TopKQuery(tuple(
+        Clause(Occur.SHOULD, (t,), weight=w) for t, w in sorted(term_weights.items())
+    ))
+
+
 def _segment_wand(
     pdf: pd.DataFrame,
     term_weights: dict[str, float],
@@ -346,16 +362,54 @@ def _segment_wand(
     """Block-max WAND over one segment for a disjunction of terms, each
     with its Similarity weight: :func:`_segment_topk` of SHOULD term
     clauses."""
-    query = TopKQuery(tuple(
-        Clause(Occur.SHOULD, (t,), weight=w) for t, w in sorted(term_weights.items())
-    ))
-    return _segment_topk(pdf, query, k, k1, b, cache, avgdl)
+    return _segment_topk(pdf, _wand_query(term_weights), k, k1, b, cache, avgdl)
 
 
 def topk_columns(phrase: bool) -> list[str]:
     """The block columns the kernel reads (positions only for phrases)."""
     return ["segment", "term", "base_docid", "count", "max_docid", "max_tf",
             "docs_bin", "tfs_bin", "lens_bin", *(["pos_bin"] if phrase else [])]
+
+
+def _query_rows(rows: DataFrame, queries: dict[str, TopKQuery]) -> DataFrame:
+    """The block rows of the queries' terms: one ``isin`` for them all."""
+    terms = sorted({t for q in queries.values() for t in q.terms})
+    phrase = any(q.has_phrase for q in queries.values())
+    return rows.filter(F.col("term").isin(terms)).select(*topk_columns(phrase))
+
+
+def _topk_schema(cache: np.ndarray | None) -> str:
+    return f"query_id string, doc_id long, score {'double' if cache is None else 'float'}"
+
+
+def topk_kernel(
+    pdf: pd.DataFrame,
+    queries: dict[str, TopKQuery],
+    k: int | None,
+    k1: float,
+    b: float,
+    cache: np.ndarray | None,
+    avgdl: float,
+):
+    """The fused kernel over the block rows of whole segments: per
+    query, :func:`_segment_topk` of each segment, merged to the top
+    ``k`` by ``score DESC, doc_id ASC`` (TopDocs.merge) — or every match
+    when ``k`` is None — as ``(query_id, doc_id, score)`` frames.  Both
+    placements run it: once per partition inside a Spark stage
+    (:func:`topk_by_partition`), or once on the driver over every
+    segment (:func:`topk_on_driver`)."""
+    if pdf.empty:
+        return
+    segments = [g for _, g in pdf.groupby("segment", sort=False)]
+    for qid, q in queries.items():
+        out = pd.concat(
+            [_segment_topk(g, q, k, k1, b, cache, avgdl) for g in segments],
+            ignore_index=True,
+        )
+        if k is not None:
+            out = out.sort_values(["score", "doc_id"], ascending=[False, True]).head(k)
+        if len(out):
+            yield out.assign(query_id=qid)[["query_id", "doc_id", "score"]]
 
 
 def topk_by_partition(
@@ -371,28 +425,38 @@ def topk_by_partition(
     (every match when ``k`` is None), from block rows whose partitions
     each hold whole segments.  One ``isin`` over all the queries' terms
     filters the rows, so N queries run in one narrow Spark stage."""
-    terms = sorted({t for q in queries.values() for t in q.terms})
-    phrase = any(q.has_phrase for q in queries.values())
-    score_t = "double" if cache is None else "float"
-    src = rows.filter(F.col("term").isin(terms)).select(*topk_columns(phrase))
 
     def kernel(batches):
         frames = list(batches)
-        pdf = pd.concat(frames, ignore_index=True) if frames else None
-        if pdf is None or pdf.empty:
-            return
-        segments = [g for _, g in pdf.groupby("segment", sort=False)]
-        for qid, q in queries.items():
-            out = pd.concat(
-                [_segment_topk(g, q, k, k1, b, cache, avgdl) for g in segments],
-                ignore_index=True,
+        if frames:
+            yield from topk_kernel(
+                pd.concat(frames, ignore_index=True), queries, k, k1, b, cache, avgdl
             )
-            if k is not None and len(out) > k:
-                out = out.sort_values(["score", "doc_id"], ascending=[False, True]).head(k)
-            if len(out):
-                yield out.assign(query_id=qid)[["query_id", "doc_id", "score"]]
 
-    return src.mapInPandas(kernel, schema=f"query_id string, doc_id long, score {score_t}")
+    return _query_rows(rows, queries).mapInPandas(kernel, schema=_topk_schema(cache))
+
+
+def topk_on_driver(
+    rows: DataFrame,
+    queries: dict[str, TopKQuery],
+    k: int | None,
+    k1: float,
+    b: float,
+    cache: np.ndarray | None,
+    avgdl: float,
+) -> DataFrame:
+    """What :func:`topk_by_partition` answers, for a query small enough
+    that a Python worker costs more than its kernel: the queries' block
+    rows come to the driver in one JVM-only Arrow collect, the same
+    kernel runs there over every segment, and the result — each query's
+    top ``k`` already ranked, so it needs no ``orderBy`` — is a
+    LocalRelation, whose ``collect()`` fires no Spark job."""
+    pdf = _query_rows(rows, queries).toArrow().to_pandas()
+    out = list(topk_kernel(pdf, queries, k, k1, b, cache, avgdl))
+    return local_frame(
+        rows.sparkSession, pd.concat(out, ignore_index=True) if out else None,
+        _topk_schema(cache),
+    )
 
 
 def wand_topk(
@@ -417,13 +481,14 @@ def wand_topk(
     against the DuckDB oracle.  The bound logic is identical; only the
     scoring kernel changes.
     """
-    spark = index.spark
+    from lucene_solr_spark.queries import segment_searcher
+
     uniq = sorted(set(terms))
     # one manifest read: term stats, collection stats (summed from the
     # SegmentInfos, no data scan) and block rows all come from that commit
     man = index.manifest()
     segs = sorted(man)
-    found, dfs, ttfs = index.term_stat_arrays(segs, uniq)
+    found, dfs, ttfs, blocks = index.term_stat_arrays(segs, uniq)
     cs = collection_stats(man.values())
     doc_count, sum_len = cs.doc_count, cs.sum_total_term_freq
     bm25 = BM25(k1=k1, b=b)
@@ -440,7 +505,13 @@ def wand_topk(
     }
     score_t = "double" if exact else "float"
     if not weights:
-        return spark.createDataFrame([], f"doc_id long, score {score_t}")
+        return local_frame(index.spark, None, f"doc_id long, score {score_t}")
+    if blocks.sum() <= segment_searcher.DRIVER_MAX_BLOCKS:
+        # the stats read counted the blocks exactly: a small query runs
+        # the kernel on the driver (one more JVM-only read), no stage
+        return topk_on_driver(
+            index.postings(segs), {"q": _wand_query(weights)}, k, k1, b, cache, float(avgdl)
+        ).select("doc_id", "score")
 
     # term-pruned block rows ONLY — norms ride inside each block's
     # lens_bin payload, so the shuffle into the per-segment WAND groups

@@ -44,3 +44,21 @@ def test_explain_structure(searcher):
     descs = [d["description"] for d in ex["details"]]
     assert any(d.startswith("idf") for d in descs)
     assert any(d.startswith("tf") for d in descs)
+
+
+@pytest.mark.parametrize("mode", ["lucene", "exact"])
+@pytest.mark.parametrize("boost", [3.0, 0.5])
+def test_explain_boosted_term_equals_search_score(mode_searcher, mode, boost):
+    """A boosted TermQuery's explanation takes its weight from the mode's
+    Similarity, as scoring does: the root value is the search score to
+    the bit."""
+    from lucene_solr_spark.queries.query import BoostQuery, TermQuery
+
+    searcher = mode_searcher(mode)
+    q = BoostQuery(TermQuery("window"), boost)
+    hits = searcher.search(q, k=5).collect()
+    assert hits
+    for r in hits:
+        ex = searcher.explain(q, r["doc_id"])
+        assert ex["value"] == r["score"], (r["doc_id"], ex)
+        assert ex["details"][0]["value"] == boost

@@ -1,8 +1,10 @@
 """The fused per-segment top-k kernel of SegmentSearcher against the plan
 path it replaces for term, flat boolean and exact phrase queries: the
 same ``(doc_id, repr(score))`` from ``search`` and ``docs``, in both
-BM25 modes, and the term dictionary's expansions against the Spark
-expansion."""
+BM25 modes and in both placements of the kernel (on the driver, the
+default for these small indexes, and in a mapInPandas stage, forced by
+``DRIVER_MAX_BLOCKS`` = 0), and the term dictionary's expansions against
+the Spark expansion."""
 
 from __future__ import annotations
 
@@ -80,6 +82,31 @@ def _rows(df):
     return [(r["doc_id"], repr(r["score"])) for r in df.collect()]
 
 
+def _in_stage(df) -> bool:
+    """Whether the fused kernel behind ``df`` runs in a Python stage."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan
+
+
+@pytest.fixture
+def in_stage(monkeypatch):
+    """Forces every fused query with a block into its mapInPandas stage."""
+    monkeypatch.setattr(ss, "DRIVER_MAX_BLOCKS", 0)
+
+
+def _placed(fused, q, stage: bool) -> tuple[list, list]:
+    """``search`` at k = 1, 10, 50 and ``docs`` of ``q``, each checked to
+    run in the placement asked for."""
+    tops = []
+    for k in (1, 10, 50):
+        df = fused.search(q, k=k, use_cache=False)
+        assert _in_stage(df) == stage, k
+        tops.append(_rows(df))
+    df = fused.docs(q)
+    assert _in_stage(df) == stage
+    return tops, sorted(_rows(df))
+
+
 @pytest.mark.parametrize("mode", ["lucene", "exact"])
 @pytest.mark.parametrize("shape", list(SHAPES))
 def test_fused_kernel_equals_plan_path(pair, shape, mode):
@@ -87,29 +114,105 @@ def test_fused_kernel_equals_plan_path(pair, shape, mode):
     q = SHAPES[shape]
     parsed = rewrite(fused._rewritten(q))
     assert fused._topk_query(parsed) is not None, "the plan path answered"
-    for k in (1, 10, 50):
-        got = _rows(fused.search(q, k=k, use_cache=False))
-        assert got == _rows(plan.search(q, k=k, use_cache=False)), k
-    got = sorted(_rows(fused.docs(q)))
+    tops, got = _placed(fused, q, stage=False)
+    for k, top in zip((1, 10, 50), tops):
+        assert top == _rows(plan.search(q, k=k, use_cache=False)), k
     assert got == sorted(_rows(plan.docs(q)))
     if not shape.startswith("df0"):
         assert got, "an empty result pins nothing"
 
 
+@pytest.mark.parametrize("mode", ["lucene", "exact"])
+@pytest.mark.parametrize("shape", list(SHAPES))
+def test_placements_are_bit_identical(pair, shape, mode, monkeypatch):
+    """The kernel on the driver and in its mapInPandas stage return the
+    same ``(doc_id, repr(score))`` rows for ``search`` and ``docs``."""
+    fused, _ = pair(mode)
+    q = SHAPES[shape]
+    driver = _placed(fused, q, stage=False)
+    monkeypatch.setattr(ss, "DRIVER_MAX_BLOCKS", 0)
+    assert _placed(fused, q, stage=True) == driver
+
+
+BATCH = {name: SHAPES[name] for name in ("term", "and", "or3", "phrase", "and-not", "df0-must")}
+BATCH["plan"] = "spark~1"  # not covered: takes the plan path in the same batch
+
+
+def _batch_rows(searcher, queries) -> dict[str, list]:
+    by_q: dict[str, list] = {}
+    for r in searcher.search_batch(queries, k=10).collect():
+        by_q.setdefault(r["query_id"], []).append((r["doc_id"], repr(r["score"])))
+    return {qid: sorted(rows, key=lambda t: (-float(t[1]), t[0])) for qid, rows in by_q.items()}
+
+
 def test_batch_equals_single_queries(pair):
     fused, _ = pair("lucene")
-    queries = {name: SHAPES[name] for name in ("term", "and", "or3", "phrase", "and-not")}
-    queries["plan"] = "spark~1"  # not covered: takes the plan path in the same batch
-    by_q: dict[str, list] = {}
-    for r in fused.search_batch(queries, k=10).collect():
-        by_q.setdefault(r["query_id"], []).append((r["doc_id"], repr(r["score"])))
-    for qid, q in queries.items():
-        solo = _rows(fused.search(q, k=10, use_cache=False))
-        got = sorted(by_q.get(qid, []), key=lambda t: (-float(t[1]), t[0]))
-        assert got == solo, qid
+    got = _batch_rows(fused, BATCH)
+    for qid, q in BATCH.items():
+        assert got.get(qid, []) == _rows(fused.search(q, k=10, use_cache=False)), qid
+
+
+@pytest.mark.parametrize("mode", ["lucene", "exact"])
+def test_batch_placements_are_bit_identical(pair, mode, monkeypatch):
+    """A batch of covered queries on the driver is one ranked
+    LocalRelation; in its stage, one kernel job plus the per-query
+    ranking.  Both give every query the same rows, alone or beside a
+    plan-path query."""
+    fused, _ = pair(mode)
+    covered = {qid: q for qid, q in BATCH.items() if qid != "plan"}
+    driver = {
+        "covered": _batch_rows(fused, covered),
+        "mixed": _batch_rows(fused, BATCH),
+    }
+    assert not _in_stage(fused.search_batch(covered, k=10))
+    monkeypatch.setattr(ss, "DRIVER_MAX_BLOCKS", 0)
+    assert _in_stage(fused.search_batch(covered, k=10))
+    assert {"covered": _batch_rows(fused, covered), "mixed": _batch_rows(fused, BATCH)} == driver
+    assert driver["covered"] == {qid: rows for qid, rows in driver["mixed"].items() if qid != "plan"}
+
+
+def test_query_past_the_bound_runs_in_a_stage(fused_index, monkeypatch):
+    """A query whose terms have more blocks than ``DRIVER_MAX_BLOCKS``
+    runs the mapInPandas stage; at the bound it runs on the driver —
+    for ``search``, ``docs``, ``search_batch`` and ``wand_topk``, whose
+    stats read counts the same blocks."""
+    from lucene_solr_spark.queries.wand import wand_topk
+
+    s = SegmentSearcher(fused_index)
+    terms = ["spark", "window"]
+    assert s._term_dictionary() is not None
+    blocks = sum(int(s._dictionary[3][i]) for i in s._lookup(terms))
+    assert blocks >= 2
+    for bound, stage in ((blocks, False), (blocks - 1, True)):
+        monkeypatch.setattr(ss, "DRIVER_MAX_BLOCKS", bound)
+        for df in (
+            s.search("+spark +window", k=10, use_cache=False),
+            s.docs("spark window"),
+            s.search_batch({"a": "spark", "b": "window"}, k=10),
+            wand_topk(fused_index, terms, k=10),
+        ):
+            assert _in_stage(df) == stage, bound
 
 
 TIES = ["alpha beta", "gamma", "delta", "alpha beta", "gamma", "alpha beta"]
+
+
+def _check_ties(spark, tmp_path, mode, stage):
+    idx = SegmentedIndex(spark, str(tmp_path))
+    idx.build(
+        spark.createDataFrame(list(enumerate(TIES)), "doc_id long, content string"),
+        num_segments=3,
+    )
+    assert len(idx.manifest()) == 3
+    fused, plan = SegmentSearcher(idx, scoring=mode), PlanSearcher(idx, scoring=mode)
+    assert fused._enc.rdd.getNumPartitions() == (3 if ss.BLOCKS_PER_PARTITION == 1 else 1)
+    for q in ("alpha", "alpha gamma", "+alpha +beta", '"alpha beta"'):
+        for k in (1, 2, 3):
+            df = fused.search(q, k=k, use_cache=False)
+            assert _in_stage(df) == stage
+            assert _rows(df) == _rows(plan.search(q, k=k, use_cache=False)), (q, k)
+        top = [d for d, _ in _rows(fused.search(q, k=3, use_cache=False))]
+        assert top == ([1, 4, 0] if "gamma" in q else [0, 3, 5])
 
 
 @pytest.mark.parametrize("blocks_per_partition", [1, ss.BLOCKS_PER_PARTITION])
@@ -118,23 +221,21 @@ def test_equal_scores_across_segments_keep_doc_order(
     spark, tmp_path, monkeypatch, mode, blocks_per_partition
 ):
     """Docs 0, 3 and 5 are the same text in three segments: equal scores
-    rank by doc_id (TopDocs.merge), in every k, whether the segments
+    rank by doc_id (TopDocs.merge), in every k, with the kernel on the
+    driver."""
+    monkeypatch.setattr(ss, "BLOCKS_PER_PARTITION", blocks_per_partition)
+    _check_ties(spark, tmp_path, mode, stage=False)
+
+
+@pytest.mark.parametrize("blocks_per_partition", [1, ss.BLOCKS_PER_PARTITION])
+@pytest.mark.parametrize("mode", ["lucene", "exact"])
+def test_equal_scores_across_segments_keep_doc_order_in_a_stage(
+    spark, tmp_path, monkeypatch, in_stage, mode, blocks_per_partition
+):
+    """The same ties with the kernel in its stage, whether the segments
     share a partition of the persisted rows or not."""
     monkeypatch.setattr(ss, "BLOCKS_PER_PARTITION", blocks_per_partition)
-    idx = SegmentedIndex(spark, str(tmp_path))
-    idx.build(
-        spark.createDataFrame(list(enumerate(TIES)), "doc_id long, content string"),
-        num_segments=3,
-    )
-    assert len(idx.manifest()) == 3
-    fused, plan = SegmentSearcher(idx, scoring=mode), PlanSearcher(idx, scoring=mode)
-    assert fused._enc.rdd.getNumPartitions() == (3 if blocks_per_partition == 1 else 1)
-    for q in ("alpha", "alpha gamma", "+alpha +beta", '"alpha beta"'):
-        for k in (1, 2, 3):
-            got = _rows(fused.search(q, k=k, use_cache=False))
-            assert got == _rows(plan.search(q, k=k, use_cache=False)), (q, k)
-        top = [d for d, _ in _rows(fused.search(q, k=3, use_cache=False))]
-        assert top == ([1, 4, 0] if "gamma" in q else [0, 3, 5])
+    _check_ties(spark, tmp_path, mode, stage=True)
 
 
 WORDS = [

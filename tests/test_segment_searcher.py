@@ -153,7 +153,9 @@ def test_searcher_keeps_its_commit_across_write_and_merge(spark, tmp_path):
 def test_warm_searcher_fires_one_job_per_query(spark, seg_index):
     """On a warm searcher a never-seen term, ``+a +b``, ``a b c`` and
     ``"a b"`` each run as one fused Spark job with no stats job, and a
-    batch of the four runs as one kernel job plus its per-query ranking."""
+    batch of the four runs as one kernel job plus its per-query ranking.
+    The phrase's result is empty: an empty result must not cost a job
+    of its own."""
     s = SegmentSearcher(seg_index)
     s.search("spark", use_cache=False).collect()  # loads the dictionary, co-locates the rows
     queries = {
@@ -170,18 +172,52 @@ def test_warm_searcher_fires_one_job_per_query(spark, seg_index):
     assert _jobs(spark, lambda: s.search_batch(batch, k=10).collect()) <= 2
 
 
+def test_driver_placed_results_collect_with_no_job(spark, seg_index):
+    """A small fused query runs its kernel on the driver while
+    ``search`` / ``docs`` builds its frame: the frame is a LocalRelation,
+    and collecting it fires no Spark job."""
+    s = SegmentSearcher(seg_index)
+    for q in ("window", "+table +query", "merge scan hash", '"spark window"'):
+        for df in (s.search(q, use_cache=False), s.docs(q)):
+            rows = []
+            assert _jobs(spark, lambda: rows.extend(df.collect())) == 0, q
+            assert rows, q
+
+
+def test_empty_results_collect_with_no_job(spark, seg_index, searcher):
+    """An empty result is a LocalRelation, not an RDD-backed frame:
+    collecting a cached empty ``+a +b`` (fused, and on the plan path),
+    an empty plan-path ``docs`` or an empty ``wand_topk`` fires no job."""
+    from lucene_solr_spark.queries.wand import wand_topk
+
+    for s in (SegmentSearcher(seg_index), searcher):
+        q = "+spark +zzqqxx"
+        assert s.search(q).collect() == []  # fills the query result cache
+        df = s.search(q)
+        assert _jobs(spark, df.collect) == 0
+        assert df.schema == s._empty_scored().schema
+    df = searcher.docs("zzqqxx")
+    assert _jobs(spark, df.collect) == 0
+    df = wand_topk(seg_index, ["zzqqxx"], k=10)
+    assert _jobs(spark, df.collect) == 0
+
+
 def test_wand_stats_round_is_one_single_stage_read(spark, seg_index):
-    """``wand_topk`` reads its term statistics in one job with one stage
-    (the blocks' term counts, summed on the driver), not a groupBy."""
+    """``wand_topk`` reads its term statistics in one single-stage job
+    (the blocks' term counts, summed on the driver, not a groupBy); a
+    query that small then reads its blocks to the driver in one more, so
+    the whole ``wand_topk(...).collect()`` is at most two jobs, each of
+    one stage — no shuffle."""
     from lucene_solr_spark.queries.wand import wand_topk
 
     sc = spark.sparkContext
     group = f"count-jobs-{next(_groups)}"
     sc.setJobGroup(group, group)
     try:
-        wand_topk(seg_index, ["spark", "window"], k=10)
+        wand_topk(seg_index, ["spark", "window"], k=10).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 1
-    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 1
+    assert 1 <= len(jobs) <= 2
+    for j in jobs:
+        assert len(sc.statusTracker().getJobInfo(j).stageIds) == 1
