@@ -12,7 +12,7 @@ on-disk index queryable at 10^12 docs.
 
 Two plans answer a query:
 
-- **The fused per-segment kernel** (``queries/wand.py``) answers
+- **The fused block-max top-k kernel** (``queries/wand.py``) answers
   ``search``, ``docs`` and ``search_batch`` for a term query, an exact
   phrase (slop 0), and a flat BooleanQuery whose clauses are terms or
   exact phrases — MUST / FILTER / SHOULD / MUST_NOT,
@@ -21,12 +21,12 @@ Two plans answer a query:
   ``isin`` over the query's terms selects its encoded block rows; where
   the kernel runs follows from the term dictionary, which counts those
   rows' blocks.  At most ``DRIVER_MAX_BLOCKS`` of them (every query of a
-  small index) come to the driver in one JVM-only Arrow collect, the
-  kernel runs there over every segment, and the ranked rows come back
+  small index) come to the driver in one JVM-only Arrow collect, one
+  kernel call runs there over every segment, and the ranked rows come back
   as a LocalRelation: one Spark job, and no Python worker.  Past it, or
   with no dictionary, the rows — persisted range-partitioned by
-  segment — run the kernel per partition in one narrow ``mapInPandas``
-  stage, merged by ``score DESC, doc_id ASC``.
+  segment — run one kernel call per partition in one narrow
+  ``mapInPandas`` stage, merged by ``score DESC, doc_id ASC``.
 - **The plan path** (``IndexSearcher``'s relational algebra over
   decoded postings) answers everything else: other shapes (nested
   booleans, sloppy phrases, multi-term, spans, …), other scoring modes,
@@ -82,14 +82,13 @@ DICTIONARY_MAX_TERMS = 2_000_000
 BLOCKS_PER_PARTITION = 65_536
 # encoded blocks of a query's terms up to which the fused kernel runs on
 # the driver, over one Arrow collect of the rows, instead of in a
-# mapInPandas stage.  The break-even, measured on a 4-core host
-# (local[4], perfbench corpus of 40,000 docs in 4 segments): the stage's
-# Python-worker round trip costs 0.35-0.45 s more than the 0.04-0.09 s
-# Arrow collect, and the driver kernel takes about 0.3 ms a block at
-# k=10 (0.05 ms exhaustive).  At 1,030 blocks the driver placement took
-# 0.35-0.43 s against 0.46-0.60 s for the stage; at 1,644 blocks,
-# 0.59-0.72 s against 0.67-0.76 s.
-DRIVER_MAX_BLOCKS = 1024
+# mapInPandas stage, where a Python worker's fixed round trip outweighs
+# the driver kernel's 0.06-0.09 ms a block.  Measured on a 4-core host
+# (local[4], perfbench corpus of 40,000 docs in 4 segments, k=10, median
+# of 5 searches), the driver placement took 0.30 s against 0.59 s for
+# the stage at 1,030 blocks, 0.36 s against 0.61 s at 1,939 blocks, and
+# 0.50 s against 0.68 s at 4,006 blocks.
+DRIVER_MAX_BLOCKS = 4096
 
 
 class SegmentSearcher(IndexSearcher):
@@ -118,17 +117,9 @@ class SegmentSearcher(IndexSearcher):
         # the ENCODED block rows — compact (FOR/VByte binaries ≈ on-disk
         # index size), filtered columnar-in-memory per query with
         # pushdown-before-decode intact; MEMORY_AND_DISK persist degrades
-        # gracefully when the index outgrows memory.  Range-partitioned
-        # by segment, so each partition holds whole segments and the
-        # fused kernel needs no shuffle (the partitioning runs once, on
-        # first use).  Every task of a query pays a fixed Python-worker
-        # cost, so a small index takes fewer partitions than segments.
-        parts = max(1, min(
-            len(segs),
-            index.spark.sparkContext.defaultParallelism,
-            -(-sum(i.num_blocks for i in man.values()) // BLOCKS_PER_PARTITION),
-        ))
-        self._enc = index.postings(segs).repartitionByRange(parts, "segment").persist()
+        # gracefully when the index outgrows memory.  The partitioning
+        # runs once, on first use.
+        self._enc = encoded_rows(index, man).persist()
         # per-term and per-expansion DECODED postings (scoring-independent),
         # populated on first touch by the plan path
         self._dec = LRU(256)
@@ -297,6 +288,19 @@ class SegmentSearcher(IndexSearcher):
             return self._exp.get(tuple(sorted(terms)), decoded(terms))
         parts = [self._dec.get(t, decoded([t])) for t in terms]
         return reduce(lambda a, b: a.unionByName(b), parts)
+
+
+def encoded_rows(index: SegmentedIndex, man: dict) -> DataFrame:
+    """The encoded block rows of the commit ``man``, range-partitioned by
+    segment, so each partition holds whole segments and the fused kernel
+    needs no shuffle.  Every task of a query pays a fixed Python-worker
+    cost, so a small index takes fewer partitions than segments."""
+    parts = max(1, min(
+        len(man),
+        index.spark.sparkContext.defaultParallelism,
+        -(-sum(i.num_blocks for i in man.values()) // BLOCKS_PER_PARTITION),
+    ))
+    return index.postings(sorted(man)).repartitionByRange(parts, "segment")
 
 
 def _unboost(q: Query, boost: float) -> tuple[Query, float]:

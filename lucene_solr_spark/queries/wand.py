@@ -1,6 +1,6 @@
-"""Per-segment top-k over the segmented block-encoded index: block-max
-WAND, and the one kernel behind ``wand_topk`` and ``SegmentSearcher``'s
-term, flat boolean and exact phrase queries.
+"""Block-max WAND top-k over the segmented block-encoded index: the one
+kernel behind ``wand_topk`` and ``SegmentSearcher``'s term, flat boolean
+and exact phrase queries.
 
 The reference 7.0 has NO WAND (verified: no WANDScorer/impacts in
 search/ — SURVEY §4.2); this exceeds it, per the north star.  The
@@ -14,30 +14,35 @@ doubles as the upper-bound source:
 norm byte, since cache[n] = k1·((1−b)+b·NORM_TABLE[n]/avgdl) ≥ k1·(1−b)).
 An exact phrase is bounded by weight·(k1+1), the limit of freq/(freq+c).
 
-Execution model: each docID lives in exactly one segment, so segments
-run top-k independently (the per-leaf scoring loop of
-IndexSearcher.search, IndexSearcher.java:640-655), each emitting its
-local top-k; the merge is ORDER BY score DESC, doc_id ASC LIMIT k —
+Execution model: each docID lives in exactly one segment, so one kernel
+call takes the block rows of any number of segments (the per-leaf
+loop of IndexSearcher.search, IndexSearcher.java:640-655, with its
+TopDocs.merge folded in) and ranks by ``score DESC, doc_id ASC`` —
 bit-identical to TopDocs.merge tie-breaks (search/TopDocs.java:209-260,
-HitQueue.java:76-81).  One function, :func:`topk_kernel`, runs the
-segments' top-k and their merge, in one of two places.  A query whose
-terms have few blocks (the caller counts them: ``SegmentSearcher`` from
-its term dictionary, ``wand_topk`` from its stats read, against
+HitQueue.java:76-81).  Segments whose docID ranges interleave (after a
+merge of non-adjacent segments) only put two of a term's blocks over
+one docID range; the larger bound still bounds every doc there.
+:func:`topk_kernel` runs it in one of two places.  A query whose terms
+have few blocks (the caller counts them: ``SegmentSearcher`` from its
+term dictionary, ``wand_topk`` from its stats read, against
 ``segment_searcher.DRIVER_MAX_BLOCKS``) runs it on the driver over one
 JVM-only Arrow collect of its block rows, since a Python worker's round
 trip costs more than such a kernel; any other runs it inside a Spark
-stage, per partition or per segment group.
+stage, once per partition of whole segments.
 
-Within a segment: a boundary sweep over the union of block intervals
-processes elementary docID ranges in increasing-docID order, skipping
-every range that no doc in it can match (a required clause or too few
-SHOULD clauses have no block there) or whose Σ clause upper bounds ≤
-the current heap threshold — safe at equality *because* docIDs only
-increase: a later doc scoring exactly θ loses the tie-break to the
-incumbent (SURVEY §7 hard part e).  Blocks are only FOR/VByte-decoded
-when their range survives (the two-phase cheap-approximation /
-expensive-verify split, search/TwoPhaseIterator.java), a few ranges'
-blocks per decoder call.
+The kernel is whole-array numpy, two rounds over the elementary docID
+intervals that the blocks' boundaries cut.  An interval no doc in it
+can match (a required clause or too few SHOULD clauses have no block
+there) is never read.  Round 1 scores the ``SEED_INTERVALS`` intervals
+with the highest Σ clause upper bound; the k-th best score among their
+docs is θ.  Round 2 scores every other interval whose bound is ≥ θ and
+skips those strictly below it.  The test is strict because intervals
+are not taken in docID order: a round-2 doc scoring exactly θ may have a
+lower docID than a round-1 doc and win its tie (SURVEY §7 hard part e).
+Each round decodes the blocks over its intervals in one FOR/VByte
+decoder call (the two-phase cheap-approximation / expensive-verify
+split, search/TwoPhaseIterator.java).  ``k=None``, or a negative
+weight, is one round with θ = −∞.
 
 Scoring replays the Spark plan path of ``IndexSearcher`` bit for bit:
 per-clause float32 kernel (BM25Similarity.java:241-254), MUST clauses
@@ -49,7 +54,6 @@ same in double with raw field lengths.
 
 from __future__ import annotations
 
-import heapq
 from dataclasses import dataclass
 
 import numpy as np
@@ -63,9 +67,8 @@ from lucene_solr_spark.queries.searcher import local_frame
 from lucene_solr_spark.scoring.bm25 import BM25
 from lucene_solr_spark.scoring.similarities import SIMILARITIES
 
-# newly active blocks one decoder call takes: the blocks of the current
-# range plus those of the next surviving ranges, up to this many
-DECODE_BATCH_BLOCKS = 8
+# intervals of highest upper bound that round 1 scores to set θ
+SEED_INTERVALS = 8
 _POS_KEY = np.int64(1) << 33  # (doc, position) key stride; positions < 2^31
 
 
@@ -104,7 +107,7 @@ def _empty(ft) -> pd.DataFrame:
                          "score": pd.Series([], dtype=ft)})
 
 
-def _segment_topk(
+def _topk(
     pdf: pd.DataFrame,
     query: TopKQuery,
     k: int | None,
@@ -113,8 +116,9 @@ def _segment_topk(
     cache: np.ndarray | None,
     avgdl: float = 1.0,
 ) -> pd.DataFrame:
-    """One segment's block rows → its top-k ``(doc_id, score)`` for
-    ``query``, or every match when ``k`` is None.
+    """Block rows → the top-k ``(doc_id, score)`` for ``query``, ranked
+    by ``score DESC, doc_id ASC``, or every match when ``k`` is None.
+    The rows may come from any number of segments.
 
     ``cache`` is the 256-entry byte315 norm cache (float32 lucene mode);
     ``cache=None`` switches to EXACT double scoring where the block's
@@ -122,7 +126,7 @@ def _segment_topk(
     denominator is computed directly as k1·((1−b) + b·dl/avgdl) — same
     bound logic, no quantization.
 
-    Norms come from each block's own ``lens_bin`` payload — the group
+    Norms come from each block's own ``lens_bin`` payload — the kernel
     receives ONLY term-pruned block rows, never the norms table (the
     per-leaf .nvd locality of Lucene70NormsFormat.java:37).
     """
@@ -135,23 +139,20 @@ def _segment_topk(
     clauses = query.clauses
     if k is not None and k <= 0:
         return _empty(ft)
-    pdf = (
-        pdf[pdf["term"].isin(query.terms)]
-        .sort_values(["term", "base_docid"])
-        .reset_index(drop=True)
-    )
+    pdf = pdf[pdf["term"].isin(query.terms)]
     if pdf.empty:
         return _empty(ft)
-    # the block table: one entry per block, in (term, base_docid) order
+    # the block table: one entry per block
     tix = np.searchsorted(terms, pdf["term"].to_numpy(object))
     lo_b = pdf["base_docid"].to_numpy(np.int64)
     hi_b = pdf["max_docid"].to_numpy(np.int64)
     cnt = pdf["count"].to_numpy(np.int64)
     mtf = pdf["max_tf"].to_numpy(np.float64)
-    cols = {c: pdf[c].to_numpy() for c in ("term", "docs_bin", "tfs_bin", "lens_bin")}
     phrase = query.has_phrase
-    if phrase:
-        cols["pos_bin"] = pdf["pos_bin"].to_numpy()
+    cols = {
+        c: pdf[c].to_numpy()
+        for c in ("term", "docs_bin", "tfs_bin", "lens_bin", *(["pos_bin"] if phrase else []))
+    }
     ctix = [np.searchsorted(terms, list(c.terms)) for c in clauses]
     # weight·(k1+1) per clause, in the scoring precision
     wv = [ft(c.weight) * ft(k1 + 1) for c in clauses]
@@ -161,53 +162,55 @@ def _segment_topk(
     min_should = query.msm if any(required) else max(query.msm, 1)
     prune = k is not None and all(c.weight >= 0 for c, s in zip(clauses, scoring) if s)
 
-    decoded: list = [None] * len(pdf)  # (docs, tf, length, pos offsets, positions)
+    # elementary intervals from all block boundaries; per interval, which
+    # terms have a block there and each term's block-max bound factor
+    bounds = np.unique(np.concatenate([lo_b, hi_b + 1]))
+    n_iv, n_t = len(bounds) - 1, len(terms)
+    si = np.searchsorted(bounds, lo_b)
+    ei = np.searchsorted(bounds, hi_b + 1)
+    blk = np.repeat(np.arange(len(lo_b)), ei - si)
+    cell = postings.concat_ranges(si, ei - si) * n_t + tix[blk]
+    act = np.zeros(n_iv * n_t, bool)
+    act[cell] = True
+    unit = np.zeros(n_iv * n_t)
+    np.maximum.at(unit, cell, (mtf / (mtf + k1 * (1.0 - b)))[blk])
+    act, unit = act.reshape(n_iv, n_t), unit.reshape(n_iv, n_t)
+    cact = np.stack([act[:, ct].all(axis=1) for ct in ctix], axis=1)
+    possible = cact[:, required].all(axis=1)
+    if any(should):
+        possible &= cact[:, should].sum(axis=1) >= min_should
+    # ×(1 + 1e-6) guards float32 rounding
+    ub = np.zeros(n_iv)
+    for c, clause in enumerate(clauses):
+        if scoring[c]:
+            per = 1.0 if clause.offsets is not None else unit[:, ctix[c][0]]
+            ub += np.where(cact[:, c], float(wv[c]) * per * (1.0 + 1e-6), 0.0)
 
-    def decode(blocks: list[int]) -> None:
+    def evaluate(keep: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Every doc that matches in the intervals ``keep`` marks, with its
+        score: one decode of the blocks that overlap them."""
+        at = np.concatenate(([0], np.cumsum(keep)))
+        blocks = np.flatnonzero(at[ei] > at[si])
+        if not blocks.size:
+            return np.zeros(0, np.int64), np.zeros(0, ft)
         dec = postings.decode_blocks(
             lo_b[blocks], cnt[blocks], cols["docs_bin"][blocks], cols["tfs_bin"][blocks],
             pos_bin=cols["pos_bin"][blocks] if phrase else None,
             lens_bin=cols["lens_bin"][blocks], terms=cols["term"][blocks],
         )
-        ends = np.cumsum(cnt[blocks])
-        for j, a, z in zip(blocks, (ends - cnt[blocks]).tolist(), ends.tolist()):
-            po = dec.pos_offsets[a : z + 1] if phrase else None
-            decoded[j] = (
-                dec.doc_id[a:z], dec.tf[a:z], dec.length[a:z],
-                None if po is None else po - po[0],
-                None if po is None else dec.positions[po[0] : po[-1]],
-            )
-
-    def evaluate(blocks, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
-        """Every doc in [lo, hi] that matches, with its score, from the
-        decoded ``blocks``."""
-        part = []
-        for j in blocks:
-            d = decoded[j][0]
-            a, z = np.searchsorted(d, lo, "left"), np.searchsorted(d, hi, "right")
-            if a < z:
-                part.append((j, int(a), int(z)))
-        if not part:
-            return np.zeros(0, np.int64), np.zeros(0, ft)
-        g_doc = np.concatenate([decoded[j][0][a:z] for j, a, z in part])
-        g_term = np.concatenate([np.full(z - a, tix[j]) for j, a, z in part])
-        g_tf = np.concatenate([decoded[j][1][a:z] for j, a, z in part])
-        docs, inv = np.unique(g_doc, return_inverse=True)
+        sel = np.flatnonzero(keep[np.searchsorted(bounds, dec.doc_id, "right") - 1])
+        g_term = tix[blocks][dec.block[sel]]
+        g_tf = dec.tf[sel]
+        docs, inv = np.unique(dec.doc_id[sel], return_inverse=True)
         n = docs.size
         length = np.zeros(n, np.int64)
-        length[inv] = np.concatenate([decoded[j][2][a:z] for j, a, z in part])
+        length[inv] = dec.length[sel]
         norm = (
             k1 * ((1.0 - b) + b * length.astype(np.float64) / avgdl) if exact
             else cache[encode_norm(length) & 0xFF]
         )
         if phrase:
-            g_pos = [decoded[j][4][decoded[j][3][a] : decoded[j][3][z]] for j, a, z in part]
-            g_pos_at = np.cumsum([0] + [p.size for p in g_pos])[:-1]
-            g_pos_start = np.concatenate([
-                at + decoded[j][3][a:z] - decoded[j][3][a]
-                for at, (j, a, z) in zip(g_pos_at, part)
-            ])
-            g_pos = np.concatenate(g_pos)
+            g_pos, g_pos_start = dec.positions, dec.pos_offsets[sel]
 
         def freq_of(c: int, clause: Clause) -> np.ndarray:
             f = np.zeros(n, np.int64)
@@ -258,88 +261,24 @@ def _segment_topk(
             total = sh
         return docs[ok], total[ok]
 
-    if not prune:
-        blocks = list(range(len(pdf)))
-        decode(blocks)
-        docs, scores = evaluate(blocks, int(lo_b.min()), int(hi_b.max()))
-        if k is not None:
-            top = np.lexsort((docs, -scores.astype(np.float64)))[:k]
-            docs, scores = docs[top], scores[top]
-        return pd.DataFrame({"doc_id": pd.Series(docs, dtype="int64"),
-                             "score": pd.Series(scores, dtype=ft)})
-
-    # elementary intervals from all block boundaries; per interval, which
-    # terms have a block there and each term's block-max bound factor
-    bounds = np.unique(np.concatenate([lo_b, hi_b + 1]))
-    n_iv = len(bounds) - 1
-    si = np.searchsorted(bounds, lo_b)
-    ei = np.searchsorted(bounds, hi_b + 1)
-    act = np.zeros((n_iv, len(terms)), bool)
-    unit = np.zeros((n_iv, len(terms)))
-    bound = mtf / (mtf + k1 * (1.0 - b))
-    for j, (s, e, t) in enumerate(zip(si.tolist(), ei.tolist(), tix.tolist())):
-        act[s:e, t] = True
-        np.maximum(unit[s:e, t], bound[j], out=unit[s:e, t])
-    cact = np.stack([act[:, ct].all(axis=1) for ct in ctix], axis=1)
-    possible = cact[:, required].all(axis=1)
-    if any(should):
-        possible &= cact[:, should].sum(axis=1) >= min_should
-    # ×(1 + 1e-6) guards float32 rounding
-    ub = np.zeros(n_iv)
-    for c, clause in enumerate(clauses):
-        if scoring[c]:
-            per = 1.0 if clause.offsets is not None else unit[:, ctix[c][0]]
-            ub += np.where(cact[:, c], float(wv[c]) * per * (1.0 + 1e-6), 0.0)
-    by_start = np.argsort(si, kind="stable")
-    start_sorted = si[by_start]
-
-    add_ev: list[list[int]] = [[] for _ in range(n_iv + 1)]
-    rem_ev: list[list[int]] = [[] for _ in range(n_iv + 1)]
-    for j, (s, e) in enumerate(zip(si.tolist(), ei.tolist())):
-        add_ev[s].append(j)
-        rem_ev[e].append(j)
-    heap: list[tuple] = []  # (score, -doc_id), size ≤ k
-
-    def theta() -> float:
-        return float(heap[0][0]) if len(heap) == k else -np.inf
-
-    active: dict[int, None] = {}  # insertion-ordered set of block numbers
-    for i in range(n_iv):
-        for j in rem_ev[i]:
-            del active[j]
-        for j in add_ev[i]:
-            active[j] = None
-        if not possible[i] or ub[i] <= theta():
-            continue  # equality-safe: later docIDs lose ties (HitQueue)
-        new = [j for j in active if decoded[j] is None]
-        if new:
-            # the next blocks to enter a surviving range share this call
-            ahead = by_start[np.searchsorted(start_sorted, i, "right"):]
-            s_ahead = si[ahead]
-            live = possible[s_ahead] & (ub[s_ahead] > theta())
-            new += [j for j in ahead[live].tolist() if decoded[j] is None][
-                : max(0, DECODE_BATCH_BLOCKS - len(new))
-            ]
-            decode(new)
-        docs, sc = evaluate(active, int(bounds[i]), int(bounds[i + 1]) - 1)
-        # θ only grows, so docs strictly below the current threshold can
-        # never enter the heap — drop them before the Python heap loop
-        if len(heap) == k:
-            keep = sc >= heap[0][0]
-            docs, sc = docs[keep], sc[keep]
-        for doc, s in zip(docs.tolist(), sc.tolist()):
-            item = (ft(s), -doc)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-    out = sorted(heap, key=lambda x: (-float(x[0]), -x[1]))
-    return pd.DataFrame(
-        {
-            "doc_id": pd.Series([-d for _, d in out], dtype="int64"),
-            "score": pd.Series([s for s, _ in out], dtype=ft),
-        }
-    )
+    # round 1 scores the SEED_INTERVALS highest-bound intervals; their
+    # k-th best score θ skips every interval bounded strictly below it
+    found, theta, keep = [], -np.inf, possible
+    if prune:
+        seed = np.flatnonzero(possible)
+        seed = seed[np.argsort(-ub[seed], kind="stable")[:SEED_INTERVALS]]
+        first = np.zeros(n_iv, bool)
+        first[seed] = True
+        found.append(evaluate(first))
+        if found[0][1].size >= k:
+            theta = float(np.partition(found[0][1], -k)[-k])
+        keep = possible & ~first & (ub >= theta)
+    found.append(evaluate(keep))
+    docs = np.concatenate([d for d, _ in found])
+    scores = np.concatenate([s for _, s in found])
+    top = np.lexsort((docs, -scores.astype(np.float64)))[:k]
+    return pd.DataFrame({"doc_id": pd.Series(docs[top], dtype="int64"),
+                         "score": pd.Series(scores[top], dtype=ft)})
 
 
 def _wand_query(term_weights: dict[str, float]) -> TopKQuery:
@@ -350,32 +289,15 @@ def _wand_query(term_weights: dict[str, float]) -> TopKQuery:
     ))
 
 
-def _segment_wand(
-    pdf: pd.DataFrame,
-    term_weights: dict[str, float],
-    cache: np.ndarray | None,
-    k: int,
-    k1: float,
-    b: float,
-    avgdl: float = 1.0,
-) -> pd.DataFrame:
-    """Block-max WAND over one segment for a disjunction of terms, each
-    with its Similarity weight: :func:`_segment_topk` of SHOULD term
-    clauses."""
-    return _segment_topk(pdf, _wand_query(term_weights), k, k1, b, cache, avgdl)
-
-
-def topk_columns(phrase: bool) -> list[str]:
-    """The block columns the kernel reads (positions only for phrases)."""
-    return ["segment", "term", "base_docid", "count", "max_docid", "max_tf",
-            "docs_bin", "tfs_bin", "lens_bin", *(["pos_bin"] if phrase else [])]
-
-
 def _query_rows(rows: DataFrame, queries: dict[str, TopKQuery]) -> DataFrame:
-    """The block rows of the queries' terms: one ``isin`` for them all."""
+    """The block rows of the queries' terms, one ``isin`` for them all,
+    with the columns the kernel reads (positions only for phrases)."""
     terms = sorted({t for q in queries.values() for t in q.terms})
     phrase = any(q.has_phrase for q in queries.values())
-    return rows.filter(F.col("term").isin(terms)).select(*topk_columns(phrase))
+    return rows.filter(F.col("term").isin(terms)).select(
+        "term", "base_docid", "count", "max_docid", "max_tf",
+        "docs_bin", "tfs_bin", "lens_bin", *(["pos_bin"] if phrase else []),
+    )
 
 
 def _topk_schema(cache: np.ndarray | None) -> str:
@@ -391,23 +313,16 @@ def topk_kernel(
     cache: np.ndarray | None,
     avgdl: float,
 ):
-    """The fused kernel over the block rows of whole segments: per
-    query, :func:`_segment_topk` of each segment, merged to the top
-    ``k`` by ``score DESC, doc_id ASC`` (TopDocs.merge) — or every match
-    when ``k`` is None — as ``(query_id, doc_id, score)`` frames.  Both
-    placements run it: once per partition inside a Spark stage
+    """The fused kernel: per query, :func:`_topk` over all the block rows
+    it is given — of one segment or many, since each docID lives in one
+    segment — as ``(query_id, doc_id, score)`` frames.  Both placements
+    run it: once per partition inside a Spark stage
     (:func:`topk_by_partition`), or once on the driver over every
     segment (:func:`topk_on_driver`)."""
     if pdf.empty:
         return
-    segments = [g for _, g in pdf.groupby("segment", sort=False)]
     for qid, q in queries.items():
-        out = pd.concat(
-            [_segment_topk(g, q, k, k1, b, cache, avgdl) for g in segments],
-            ignore_index=True,
-        )
-        if k is not None:
-            out = out.sort_values(["score", "doc_id"], ascending=[False, True]).head(k)
+        out = _topk(pdf, q, k, k1, b, cache, avgdl)
         if len(out):
             yield out.assign(query_id=qid)[["query_id", "doc_id", "score"]]
 
@@ -506,25 +421,15 @@ def wand_topk(
     score_t = "double" if exact else "float"
     if not weights:
         return local_frame(index.spark, None, f"doc_id long, score {score_t}")
+    query = ({"q": _wand_query(weights)}, k, k1, b, cache, float(avgdl))
     if blocks.sum() <= segment_searcher.DRIVER_MAX_BLOCKS:
         # the stats read counted the blocks exactly: a small query runs
         # the kernel on the driver (one more JVM-only read), no stage
-        return topk_on_driver(
-            index.postings(segs), {"q": _wand_query(weights)}, k, k1, b, cache, float(avgdl)
-        ).select("doc_id", "score")
-
-    # term-pruned block rows ONLY — norms ride inside each block's
-    # lens_bin payload, so the shuffle into the per-segment WAND groups
-    # is O(matching blocks), independent of collection size
-    posts = index.postings(segs).filter(F.col("term").isin(list(weights))).select(
-        *topk_columns(False)
-    )
-
-    def kernel(pdf):
-        return _segment_wand(pdf, weights, cache, k, k1, b, avgdl=float(avgdl))
-
-    local = posts.groupBy("segment").applyInPandas(
-        kernel, schema=f"doc_id long, score {score_t}"
-    )
+        return topk_on_driver(index.postings(segs), *query).select("doc_id", "score")
+    # past it, the same kernel in one narrow stage over the rows as a
+    # searcher partitions them (whole segments per partition), then
     # TopDocs.merge: global k with the HitQueue tie-break
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    top = topk_by_partition(segment_searcher.encoded_rows(index, man), *query)
+    return top.select("doc_id", "score").orderBy(
+        F.col("score").desc(), F.col("doc_id").asc()
+    ).limit(k)

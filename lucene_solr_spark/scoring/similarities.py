@@ -418,7 +418,7 @@ class Similarity:
     searcher materializes once as ``_c32`` on its cached postings.
     ``weight(bm25, doc_count, boost, stats)``, set on the TF-IDF
     records, is the query weight their kernels scale by, so a scorer
-    outside Spark (the per-segment top-k kernel) takes the same one."""
+    outside Spark (the fused block-max top-k kernel) takes the same one."""
 
     f32: bool
     score: Callable[..., Column]

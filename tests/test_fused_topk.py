@@ -238,6 +238,45 @@ def test_equal_scores_across_segments_keep_doc_order_in_a_stage(
     _check_ties(spark, tmp_path, mode, stage=True)
 
 
+@pytest.fixture(scope="module")
+def interleaved(spark, tmp_path_factory):
+    """30 docs in 3 segments (docs 0–9, 10–19, 20–29), then segments 0 and
+    2 merged into segment 10, whose docID range straddles segment 1.
+    "common" is in every doc, i % 3 + 1 times; "edge" in docs 0 and 29."""
+    rows = [
+        (i, "common " * (i % 3 + 1) + f"w{i}" + (" edge" if i in (0, 29) else ""))
+        for i in range(30)
+    ]
+    idx = SegmentedIndex(spark, str(tmp_path_factory.mktemp("interleaved")))
+    idx.build(spark.createDataFrame(rows, "doc_id long, content string"), num_segments=3)
+    idx.merge([0, 2], 10)
+    return idx
+
+
+INTERLEAVED = ["common", "common edge", "+common +w17", "+common -edge", '"common common"', "w5 w25 edge"]
+
+
+@pytest.mark.parametrize("stage", [False, True])
+@pytest.mark.parametrize("mode", ["lucene", "exact"])
+def test_interleaved_segments_equal_plan_path(interleaved, monkeypatch, mode, stage):
+    """One kernel call spans segments whose docID ranges interleave: its
+    ``search`` at k = 1, 10, 50 and ``docs`` equal the plan path's, on
+    the driver and in the stage."""
+    man = interleaved.manifest()
+    assert sorted(man) == [1, 10]
+    assert man[10].min_docid < man[1].min_docid < man[1].max_docid < man[10].max_docid
+    if stage:
+        monkeypatch.setattr(ss, "DRIVER_MAX_BLOCKS", 0)
+    fused = SegmentSearcher(interleaved, scoring=mode)
+    plan = PlanSearcher(interleaved, scoring=mode)
+    for q in INTERLEAVED:
+        tops, got = _placed(fused, q, stage)
+        for k, top in zip((1, 10, 50), tops):
+            assert top == _rows(plan.search(q, k=k, use_cache=False)), (q, k)
+        assert got == sorted(_rows(plan.docs(q))), q
+        assert got, q
+
+
 WORDS = [
     "apple", "apply", "apricot", "banana", "band", "bandana", "café", "cafés",
     "caff", "naïve", "naive", "日本", "日本語", "zebra", "ζeta", "ωmega",

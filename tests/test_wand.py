@@ -78,7 +78,7 @@ def test_wand_actually_skips_blocks(monkeypatch):
 
     import lucene_solr_spark.codecs.postings as cp
     from lucene_solr_spark.codecs.postings import encode_posting_blocks
-    from lucene_solr_spark.queries.wand import _segment_wand
+    from lucene_solr_spark.queries.wand import _topk, _wand_query
     from lucene_solr_spark.scoring.bm25 import BM25, encode_norm, idf as idf32
 
     # rare term: 3 docs at the START of the docID space, tf=40 (huge score)
@@ -115,6 +115,6 @@ def test_wand_actually_skips_blocks(monkeypatch):
         "common": float(bm25.weight(idf32(2000, n))),
     }
     cache = bm25.cache(np.float32(50.0))
-    out = _segment_wand(pdf, weights, cache, k=1, k1=1.2, b=0.75)
+    out = _topk(pdf, _wand_query(weights), 1, 1.2, 0.75, cache)
     assert len(out) == 1 and out["doc_id"].iloc[0] == 0
     assert calls["n"] < n_blocks, (calls, n_blocks)
