@@ -137,10 +137,8 @@ def _topk(
     ft = np.float64 if exact else np.float32  # the scoring precision
     terms = np.array(query.terms, dtype=object)
     clauses = query.clauses
-    if k is not None and k <= 0:
-        return _empty(ft)
     pdf = pdf[pdf["term"].isin(query.terms)]
-    if pdf.empty:
+    if pdf.empty or (k is not None and k <= 0):
         return _empty(ft)
     # the block table: one entry per block
     tix = np.searchsorted(terms, pdf["term"].to_numpy(object))

@@ -253,7 +253,9 @@ def interleaved(spark, tmp_path_factory):
     return idx
 
 
-INTERLEAVED = ["common", "common edge", "+common +w17", "+common -edge", '"common common"', "w5 w25 edge"]
+INTERLEAVED = [
+    "common", "common edge", "+common +w17", "+common -edge", '"common common"', "w5 w25 edge",
+]
 
 
 @pytest.mark.parametrize("stage", [False, True])

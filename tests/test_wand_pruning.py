@@ -2,8 +2,8 @@
 (no Spark), the fused kernel's top k equals the first k rows of every
 match ranked by ``score DESC, doc_id ASC``, for random flat queries in
 both scoring modes.  A smaller ``b`` tightens the block-max bounds, so
-more blocks are skipped.  Docs share a few texts, so equal scores sit on both
-sides of the round-1 / round-2 split and at the k-th place."""
+more blocks are skipped.  Docs share a few texts, so equal scores sit
+on both sides of the round-1 / round-2 split and at the k-th place."""
 
 from __future__ import annotations
 
@@ -25,9 +25,9 @@ def hand_encoded(
     seed: int, num_docs: int = 3000, num_segments: int = 4, texts: int = 25, rare: int = 5
 ):
     """``(block rows, avgdl)`` of ``num_docs`` docs, each one of ``texts``
-    short random texts over a skewed vocabulary or of ``rare`` others, in ``num_segments``
-    segments of consecutive docIDs, after which the first and the third
-    merge into one whose docID range straddles the second."""
+    short random texts over a skewed vocabulary or of ``rare`` others, in
+    ``num_segments`` segments of consecutive docIDs, after which the first
+    and the third merge into one whose docID range straddles the second."""
     rng = np.random.default_rng(seed)
     p = 1.0 / np.arange(1, len(VOCAB) + 1)
     pool = [rng.choice(VOCAB, size=rng.integers(1, 10), p=p / p.sum()) for _ in range(texts)]
@@ -52,7 +52,7 @@ def hand_encoded(
                 positions=np.concatenate([pos for _, pos in hits]),
                 doc_lens=np.array([pool[text_of[d]].size for d, _ in hits]),
             ):
-                rows.append({**rec, "term": term, "segment": int(seg)})
+                rows.append({**rec, "term": term})
     avgdl = float(np.mean([pool[t].size for t in text_of]))
     return pd.DataFrame(rows), avgdl
 
@@ -62,7 +62,9 @@ def random_query(rng: np.random.Generator) -> TopKQuery:
     random occurs, weights and ``msm``."""
     clauses = []
     for _ in range(rng.integers(1, 5)):
-        occur = rng.choice([Occur.MUST, Occur.FILTER, Occur.SHOULD, Occur.MUST_NOT], p=[0.3, 0.1, 0.5, 0.1])
+        occur = rng.choice(
+            [Occur.MUST, Occur.FILTER, Occur.SHOULD, Occur.MUST_NOT], p=[0.3, 0.1, 0.5, 0.1]
+        )
         scored = occur in (Occur.MUST, Occur.SHOULD)
         weight = float(np.float32(rng.uniform(0.1, 3.0))) if scored else 0.0
         if rng.random() < 0.3:
