@@ -256,9 +256,16 @@ class SegmentInfo:
 class SegmentedIndex:
     """Directory layout:
 
-    ``<dir>/postings/segment=<id>/*.parquet``  encoded block rows
-    ``<dir>/norms/segment=<id>/*.parquet``     (doc_id, length, norm_byte)
-    ``<dir>/manifest/segment-<id>.json``       commit point per segment
+    ``<dir>/data/segment=<id>/*.parquet``  one segment's rows, each
+        tagged by ``kind`` (``SEGMENT_ROWS_SCHEMA``): 0 an encoded
+        posting block, 1 a document's norm (doc_id, length, norm_byte),
+        2 the segment's one summary row, which the commit gate reads
+    ``<dir>/manifest/segment-<id>.json``   commit point per segment
+
+    Spark reads the data directory with its known schema
+    (:meth:`postings`, :meth:`norms`); a ``SegmentSearcher`` under its
+    byte budget reads a segment's block rows with pyarrow straight from
+    ``<dir>/data/segment=<id>/``.
     """
 
     def __init__(self, spark: SparkSession, path: str) -> None:

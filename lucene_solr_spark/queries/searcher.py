@@ -305,19 +305,15 @@ class IndexSearcher:
         served without touching the index.  ``use_cache=False`` bypasses
         both lookup and insert (the NO_CHECK_QCACHE flag)."""
         q = self._rewritten(query)
-
-        def top(n: int) -> DataFrame:
-            return self._top(q, n)
-
         if not use_cache:
-            return top(k)
+            return self._top(q, k)
         window = (
             QUERY_RESULT_WINDOW
             if k < QUERY_RESULT_WINDOW
             else ((k - 1) // QUERY_RESULT_WINDOW + 1) * QUERY_RESULT_WINDOW
         )
         rows, dfs = self._qr_cache.get(
-            (repr(q), window), lambda: (top(window).collect(), {})
+            (repr(q), window), lambda: (self._top_rows(q, window), {})
         )
         if k not in dfs:
             dfs[k] = self._local_result(rows[:k])
@@ -335,6 +331,11 @@ class IndexSearcher:
         return self._exec(q, boost=1.0).orderBy(
             F.col("score").desc(), F.col("doc_id").asc()
         ).limit(n)
+
+    def _top_rows(self, q: Query, n: int) -> list:
+        """The collected ``(doc_id, score)`` rows of ``_top(q, n)``: what
+        the queryResultCache holds."""
+        return self._top(q, n).collect()
 
     def _local_result(self, rows: list) -> DataFrame:
         """(doc_id, score) rows → a LocalRelation DataFrame, whose

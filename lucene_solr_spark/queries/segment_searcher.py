@@ -10,6 +10,14 @@ blocks are FOR/VByte-decoded, inside one vectorized kernel.  A query
 never decodes postings it does not touch, which is what makes the
 on-disk index queryable at 10^12 docs.
 
+A commit small enough (``STORE_MAX_BYTES``, estimated from the
+manifest) is held on the driver as a block store: per segment, its
+encoded block rows as one Arrow table sorted by ``(term, base_docid)``,
+with each term's row range (:class:`SegmentBlocks`: the terms index →
+terms dictionary → postings file pointers of BlockTreeTermsReader).
+pyarrow reads it from the commit's parquet files on the first lookup,
+with no Spark job, so opening still fires none.
+
 Two plans answer a query:
 
 - **The fused block-max top-k kernel** (``queries/wand.py``) answers
@@ -17,13 +25,14 @@ Two plans answer a query:
   phrase (slop 0), and a flat BooleanQuery whose clauses are terms or
   exact phrases — MUST / FILTER / SHOULD / MUST_NOT,
   ``minimum_number_should_match`` and boosts — under the ``lucene`` and
-  ``exact`` scoring modes, bit-identical to the plan path.  One
-  ``isin`` over the query's terms selects its encoded block rows; where
-  the kernel runs follows from the term dictionary, which counts those
-  rows' blocks.  At most ``DRIVER_MAX_BLOCKS`` of them (every query of a
-  small index) come to the driver in one JVM-only Arrow collect, one
-  kernel call runs there over every segment, and the ranked rows come back
-  as a LocalRelation: one Spark job, and no Python worker.  Past it, or
+  ``exact`` scoring modes, bit-identical to the plan path.  Where the
+  kernel runs follows from the term dictionary, which counts the
+  query's blocks.  At most ``DRIVER_MAX_BLOCKS`` of them (every query of
+  a small index) run on the driver: a ``searchsorted`` and a ``take``
+  per held segment give the rows, one kernel call ranks them over every
+  segment, and the ranked rows become a LocalRelation — no Spark job,
+  and no Python worker.  Past the store's budget the same rows come in
+  one JVM-only Arrow collect of an ``isin`` instead.  Past the bound, or
   with no dictionary, the rows — persisted range-partitioned by
   segment — run one kernel call per partition in one narrow
   ``mapInPandas`` stage, merged by ``score DESC, doc_id ASC``.
@@ -33,25 +42,36 @@ Two plans answer a query:
   ``count`` and ``explain``.
 
 Term statistics come from a term dictionary held on the driver — sorted
-``(term, df, ttf)`` arrays read once, on the first lookup, from the
-blocks' metadata (the BlockTree terms index ``.tip`` is held on the heap
-the same way) — so a query fires no stats job.  Prefix and term-range
-expansion are ``searchsorted`` ranges over it.  An index with more than
-``DICTIONARY_MAX_TERMS`` (segment, term) entries keeps the per-query
-stats collect and the Spark expansion instead.
+``(term, df, ttf, blocks)`` arrays, summed from the block store, or past
+its budget read once from the blocks' metadata (the BlockTree terms
+index ``.tip`` is held on the heap the same way) — so a query fires no
+stats job.  Prefix and term-range expansion are ``searchsorted`` ranges
+over it.  An index with more than ``DICTIONARY_MAX_TERMS`` (segment,
+term) entries keeps the per-query stats collect and the Spark expansion
+instead.
 """
 
 from __future__ import annotations
 
+import os
+from collections.abc import Iterable
+from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
+from lucene_solr_spark.codecs.postings import concat_ranges
 from lucene_solr_spark.index.builder import IndexTables
 from lucene_solr_spark.index.segments import (
+    SEGMENT_ROWS_SCHEMA,
     SegmentedIndex,
+    SegmentInfo,
     collection_stats,
     decode_postings,
 )
@@ -65,12 +85,19 @@ from lucene_solr_spark.queries.query import (
     TermQuery,
     TermRangeQuery,
 )
-from lucene_solr_spark.queries.searcher import LRU, MAX_EXPANSION_TERMS, IndexSearcher
+from lucene_solr_spark.queries.searcher import (
+    LRU,
+    MAX_EXPANSION_TERMS,
+    IndexSearcher,
+    local_frame,
+)
 from lucene_solr_spark.queries.wand import (
     Clause,
     TopKQuery,
+    collect_rows,
+    kernel_columns,
     topk_by_partition,
-    topk_on_driver,
+    topk_frame,
 )
 
 _CACHE_MAX_TERMS = 8  # multi-term expansions decode in one pass instead
@@ -81,14 +108,105 @@ DICTIONARY_MAX_TERMS = 2_000_000
 # encoded blocks (about 1 KB each) per partition of the persisted rows
 BLOCKS_PER_PARTITION = 65_536
 # encoded blocks of a query's terms up to which the fused kernel runs on
-# the driver, over one Arrow collect of the rows, instead of in a
-# mapInPandas stage, where a Python worker's fixed round trip outweighs
-# the driver kernel's 0.06-0.09 ms a block.  Measured on a 4-core host
-# (local[4], perfbench corpus of 40,000 docs in 4 segments, k=10, median
-# of 5 searches), the driver placement took 0.30 s against 0.59 s for
-# the stage at 1,030 blocks, 0.36 s against 0.61 s at 1,939 blocks, and
-# 0.50 s against 0.68 s at 4,006 blocks.
-DRIVER_MAX_BLOCKS = 4096
+# the driver instead of in a mapInPandas stage, where a Python worker's
+# fixed round trip (about 0.4 s) outweighs the driver kernel's
+# 0.06-0.09 ms a block.  Measured over the block store on a 4-core host
+# (local[4], perfbench corpus of 40,000 docs in 4 segments, k=10, a
+# disjunction of the terms with most blocks, median of 7 searches), the
+# driver took 0.11 s against 0.40 s for the stage at 1,997 blocks,
+# 0.28-0.31 s against 0.44 s at 5,824, 0.40-0.47 s against 0.52 s at
+# 7,787, 0.64-0.65 s against 0.80 s at 9,707, and 1.09-1.13 s against
+# 1.07 s at 11,642 (372 terms).  Past the store's budget the driver also
+# pays a collect of the rows.
+DRIVER_MAX_BLOCKS = 8192
+# estimated bytes of a commit's encoded block rows up to which a
+# searcher holds them on the driver (see SegmentBlocks); past it, each
+# driver-placed query collects its rows in a Spark job
+STORE_MAX_BYTES = 256 << 20
+# the block columns the store holds, and the columns it reads with
+# their types in the commit's parquet files (SEGMENT_ROWS_SCHEMA)
+_HELD = [
+    "term", "base_docid", "count", "max_docid", "max_tf", "sum_tf",
+    "docs_bin", "tfs_bin", "lens_bin", "pos_bin",
+]
+_ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "string": pa.string(), "binary": pa.binary()}
+_FILE_TYPES = dict(f.split() for f in SEGMENT_ROWS_SCHEMA.split(", "))
+_READ_SCHEMA = pa.schema([(c, _ARROW_TYPES[_FILE_TYPES[c]]) for c in ("kind", *_HELD)])
+
+
+def held_bytes(infos: Iterable[SegmentInfo]) -> int:
+    """The driver bytes a block store of segments ``infos`` takes,
+    estimated from their manifest rows: about 64 a block (its metadata,
+    offsets and term) plus the payloads, at most about 4 a posting (doc
+    gap, tf, length) and 2 a token (position).  On the perfbench corpus
+    the estimate is 1.2× the Arrow size at 2,000 docs and 1.4× at 40,000."""
+    return sum(64 * i.num_blocks + 4 * i.num_postings + 2 * i.sum_len for i in infos)
+
+
+@dataclass(frozen=True)
+class SegmentBlocks:
+    """One segment's encoded block rows held on the driver: ``rows``
+    sorted by ``(term, base_docid)``, the segment's distinct ``terms`` in
+    sorted order, and ``rows[starts[i]:starts[i + 1]]`` the blocks of
+    ``terms[i]`` (BlockTreeTermsReader's terms dictionary → postings
+    file pointers)."""
+
+    rows: pa.Table
+    terms: np.ndarray
+    starts: np.ndarray
+
+    @classmethod
+    def read(cls, index: SegmentedIndex, segment: int) -> "SegmentBlocks":
+        """The segment's block rows, read by pyarrow from its parquet
+        files on the driver: no Spark job."""
+        path = os.path.join(index._data_dir, f"segment={segment}")
+        if os.path.isdir(path):
+            rows = ds.dataset(path, schema=_READ_SCHEMA, format="parquet").to_table(
+                columns=_HELD, filter=pc.field("kind") == 0
+            )
+        else:
+            rows = _READ_SCHEMA.empty_table().select(_HELD)
+        rows = rows.sort_by([("term", "ascending"), ("base_docid", "ascending")])
+        # Arrow sorts strings by UTF-8 bytes, which is code-point order,
+        # the order numpy compares Python strings in
+        term = rows.column("term").to_numpy(zero_copy_only=False)
+        first = np.flatnonzero(term[1:] != term[:-1]) + 1
+        starts = np.concatenate(([0], first, [len(term)])) if len(term) else np.zeros(1, np.int64)
+        return cls(rows, term[starts[:-1]], starts)
+
+    def sums(self, col: str) -> np.ndarray:
+        """Per term, the sum of ``col`` over its blocks."""
+        v = self.rows.column(col).to_numpy().astype(np.int64)
+        return np.add.reduceat(v, self.starts[:-1]) if len(v) else v
+
+    def take(self, terms: np.ndarray) -> pa.Table:
+        """The block rows of the sorted ``terms``, term by term."""
+        at = np.searchsorted(self.terms, terms)
+        ok = at < len(self.terms)
+        ok[ok] = self.terms[at[ok]] == terms[ok]
+        at = at[ok]
+        return self.rows.take(concat_ranges(self.starts[at], self.starts[at + 1] - self.starts[at]))
+
+
+def _dictionary_of(store: list[SegmentBlocks]) -> tuple[np.ndarray, ...]:
+    """(term, df, ttf, blocks) summed over the held segments, sorted by
+    term: what ``SegmentedIndex.term_stat_arrays`` reads, with no read."""
+    if not store:
+        none = np.zeros(0, np.int64)
+        return np.zeros(0, object), none, none, none
+    keys, inv = np.unique(np.concatenate([s.terms for s in store]), return_inverse=True)
+
+    def total(per: list[np.ndarray]) -> np.ndarray:
+        out = np.zeros(len(keys), np.int64)
+        np.add.at(out, inv, np.concatenate(per))
+        return out
+
+    return (
+        keys,
+        total([s.sums("count") for s in store]),
+        total([s.sums("sum_tf") for s in store]),
+        total([np.diff(s.starts) for s in store]),
+    )
 
 
 class SegmentSearcher(IndexSearcher):
@@ -97,8 +215,8 @@ class SegmentSearcher(IndexSearcher):
     manifest once, and the encoded rows, norms, term stats and collection
     stats all come from that read, so a later build, merge or
     ``write_encoded`` changes nothing this searcher scores with.  Opening
-    fires no Spark job; every frame persists on first use, and all state
-    is the searcher's own."""
+    fires no Spark job; the block store fills and every frame persists
+    on first use, and all state is the searcher's own."""
 
     def __init__(
         self,
@@ -113,7 +231,11 @@ class SegmentSearcher(IndexSearcher):
         segs = sorted(man)
         self._segments = segs
         self._num_terms = sum(i.num_terms for i in man.values())
+        self._held_bytes = held_bytes(man.values())
         self._dictionary: tuple[np.ndarray, ...] | None = None
+        # the block store: segment id → its SegmentBlocks, filled with the
+        # dictionary when the commit is under STORE_MAX_BYTES
+        self._store: dict[int, SegmentBlocks] | None = None
         # the ENCODED block rows — compact (FOR/VByte binaries ≈ on-disk
         # index size), filtered columnar-in-memory per query with
         # pushdown-before-decode intact; MEMORY_AND_DISK persist degrades
@@ -137,10 +259,16 @@ class SegmentSearcher(IndexSearcher):
 
     # ------------------------------------------------------ dictionary
     def _term_dictionary(self) -> tuple[np.ndarray, ...] | None:
-        """Sorted (term, df, ttf, blocks) arrays, loaded on first use;
-        None when the index is past ``DICTIONARY_MAX_TERMS``."""
+        """Sorted (term, df, ttf, blocks) arrays, loaded on first use —
+        summed from the block store, which fills then, or past
+        ``STORE_MAX_BYTES`` read from the blocks' metadata; None when the
+        index is past ``DICTIONARY_MAX_TERMS``."""
         if self._dictionary is None and self._num_terms <= DICTIONARY_MAX_TERMS:
-            self._dictionary = self.index.term_stat_arrays(self._segments)
+            if self._held_bytes <= STORE_MAX_BYTES:
+                self._store = {s: SegmentBlocks.read(self.index, s) for s in self._segments}
+                self._dictionary = _dictionary_of(list(self._store.values()))
+            else:
+                self._dictionary = self.index.term_stat_arrays(self._segments)
         return self._dictionary
 
     def term_statistics(self, terms: list[str]) -> dict[str, tuple[int, int]]:
@@ -227,47 +355,87 @@ class SegmentSearcher(IndexSearcher):
             )
         return Clause(occur, tuple(terms), offsets, weight)
 
-    def _fused(self, queries: dict[str, TopKQuery], k: int | None) -> tuple[DataFrame, bool]:
-        """``(query_id, doc_id, score)`` of the fused kernel, and whether
-        it ran on the driver — whose frame holds each query's top ``k``
-        already ranked."""
+    def _fused(
+        self, queries: dict[str, TopKQuery], k: int | None
+    ) -> pd.DataFrame | DataFrame:
+        """``(query_id, doc_id, score)`` of the fused kernel: on the
+        driver, a pandas frame of each query's top ``k`` already ranked;
+        in its stage, the lazy frame of each partition's top ``k``."""
         cache, avgdl = (None, self._avgdl64) if self.scoring == "exact" else (
             self._cache32, float(self._avgdl32)
         )
-        on_driver = self._on_driver(sorted({t for q in queries.values() for t in q.terms}))
-        run = topk_on_driver if on_driver else topk_by_partition
-        return run(self._enc, queries, k, self.bm25.k1, self.bm25.b, cache, avgdl), on_driver
+        run = (queries, k, self.bm25.k1, self.bm25.b, cache, avgdl)
+        terms = sorted({t for q in queries.values() for t in q.terms})
+        if not self._on_driver(terms):
+            return topk_by_partition(self._enc, *run)
+        return topk_frame(self._driver_rows(terms, queries), *run)
+
+    def _driver_rows(self, terms: list[str], queries: dict[str, TopKQuery]) -> pd.DataFrame:
+        """The block rows of ``terms`` on the driver: a ``searchsorted``
+        and a ``take`` per held segment, or past the store's budget one
+        Spark collect."""
+        if self._store is None:
+            return collect_rows(self._enc, queries)
+        keys = np.array(terms, dtype=object)
+        cols = kernel_columns(any(q.has_phrase for q in queries.values()))
+        parts = [s.take(keys).select(cols) for s in self._store.values()]
+        return pa.concat_tables(parts).to_pandas() if parts else pd.DataFrame(columns=cols)
+
+    def _as_frame(self, found: pd.DataFrame | DataFrame, query_id: bool = False) -> DataFrame:
+        """A ``_fused`` result as ``([query_id,] doc_id, score)``: the
+        driver's rows as a LocalRelation, whose ``collect()`` fires no
+        Spark job, or the stage's frame."""
+        schema = ("query_id string, " if query_id else "") + self._scored_schema
+        if isinstance(found, pd.DataFrame):
+            return local_frame(self.index.spark, found, schema)
+        return found if query_id else found.select("doc_id", "score")
+
+    def _top_frame(self, found: pd.DataFrame | DataFrame, n: int) -> DataFrame:
+        df = self._as_frame(found)
+        return df if isinstance(found, pd.DataFrame) else df.orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        ).limit(n)
 
     def _top(self, q: Query, n: int) -> DataFrame:
         tq = self._topk_query(q)
         if tq is None:
             return super()._top(q, n)
-        df, ranked = self._fused({"q": tq}, n)
-        df = df.select("doc_id", "score")
-        return df if ranked else df.orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        ).limit(n)
+        return self._top_frame(self._fused({"q": tq}, n), n)
+
+    def _top_rows(self, q: Query, n: int) -> list:
+        """A driver-placed query's ranked rows go to the queryResultCache
+        as the kernel returned them: no LocalRelation, no collect."""
+        tq = self._topk_query(q)
+        if tq is None:
+            return super()._top_rows(q, n)
+        found = self._fused({"q": tq}, n)
+        if not isinstance(found, pd.DataFrame):
+            return self._top_frame(found, n).collect()
+        return [
+            Row(doc_id=int(d), score=float(s)) for d, s in zip(found["doc_id"], found["score"])
+        ]
 
     def _scored(self, q: Query) -> DataFrame:
         tq = self._topk_query(q)
         if tq is None:
             return super()._scored(q)
-        return self._fused({"q": tq}, None)[0].select("doc_id", "score")
+        return self._as_frame(self._fused({"q": tq}, None))
 
     def _batch_parts(
         self, queries: dict[str, Query], k: int
     ) -> tuple[list[DataFrame], list[DataFrame]]:
         """Every covered query of the batch, tagged with its id, runs
-        through ONE fused kernel call — one ``isin`` over all their
-        terms, then each query's top-k on the driver, or each
-        partition's per query in one narrow stage that the per-query
-        ranking follows.  The rest take the plan path."""
+        through ONE fused kernel call over all their terms' rows — each
+        query's top-k on the driver, or each partition's per query in
+        one narrow stage that the per-query ranking follows.  The rest
+        take the plan path."""
         fused = {qid: tq for qid, q in queries.items() if (tq := self._topk_query(q))}
         rest = {qid: q for qid, q in queries.items() if qid not in fused}
         ranked, parts = super()._batch_parts(rest, k) if rest else ([], [])
         if fused:
-            df, on_driver = self._fused(fused, k)
-            (ranked if on_driver else parts).append(df)
+            found = self._fused(fused, k)
+            df = self._as_frame(found, query_id=True)
+            (ranked if isinstance(found, pd.DataFrame) else parts).append(df)
         return ranked, parts
 
     # ------------------------------------------------------ plan path

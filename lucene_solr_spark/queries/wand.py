@@ -25,10 +25,12 @@ one docID range; the larger bound still bounds every doc there.
 :func:`topk_kernel` runs it in one of two places.  A query whose terms
 have few blocks (the caller counts them: ``SegmentSearcher`` from its
 term dictionary, ``wand_topk`` from its stats read, against
-``segment_searcher.DRIVER_MAX_BLOCKS``) runs it on the driver over one
-JVM-only Arrow collect of its block rows, since a Python worker's round
-trip costs more than such a kernel; any other runs it inside a Spark
-stage, once per partition of whole segments.
+``segment_searcher.DRIVER_MAX_BLOCKS``) runs it on the driver, since a
+Python worker's round trip costs more than such a kernel:
+:func:`topk_frame` takes the rows as pandas, from the searcher's block
+store (no Spark job) or from one JVM-only Arrow collect
+(:func:`collect_rows`).  Any other runs it inside a Spark stage, once
+per partition of whole segments.
 
 The kernel is whole-array numpy, two rounds over the elementary docID
 intervals that the blocks' boundaries cut.  An interval no doc in it
@@ -287,19 +289,30 @@ def _wand_query(term_weights: dict[str, float]) -> TopKQuery:
     ))
 
 
-def _query_rows(rows: DataFrame, queries: dict[str, TopKQuery]) -> DataFrame:
-    """The block rows of the queries' terms, one ``isin`` for them all,
-    with the columns the kernel reads (positions only for phrases)."""
-    terms = sorted({t for q in queries.values() for t in q.terms})
-    phrase = any(q.has_phrase for q in queries.values())
-    return rows.filter(F.col("term").isin(terms)).select(
+def kernel_columns(phrase: bool) -> list[str]:
+    """The block columns the kernel reads: positions only for phrases."""
+    return [
         "term", "base_docid", "count", "max_docid", "max_tf",
         "docs_bin", "tfs_bin", "lens_bin", *(["pos_bin"] if phrase else []),
-    )
+    ]
+
+
+def _query_rows(rows: DataFrame, queries: dict[str, TopKQuery]) -> DataFrame:
+    """The block rows of the queries' terms, one ``isin`` for them all,
+    with the columns the kernel reads."""
+    terms = sorted({t for q in queries.values() for t in q.terms})
+    phrase = any(q.has_phrase for q in queries.values())
+    return rows.filter(F.col("term").isin(terms)).select(*kernel_columns(phrase))
 
 
 def _topk_schema(cache: np.ndarray | None) -> str:
     return f"query_id string, doc_id long, score {'double' if cache is None else 'float'}"
+
+
+def collect_rows(rows: DataFrame, queries: dict[str, TopKQuery]) -> pd.DataFrame:
+    """The queries' block rows on the driver, in one JVM-only Arrow
+    collect (no Python worker)."""
+    return _query_rows(rows, queries).toArrow().to_pandas()
 
 
 def topk_kernel(
@@ -316,7 +329,7 @@ def topk_kernel(
     segment — as ``(query_id, doc_id, score)`` frames.  Both placements
     run it: once per partition inside a Spark stage
     (:func:`topk_by_partition`), or once on the driver over every
-    segment (:func:`topk_on_driver`)."""
+    segment (:func:`topk_frame`)."""
     if pdf.empty:
         return
     for qid, q in queries.items():
@@ -349,27 +362,26 @@ def topk_by_partition(
     return _query_rows(rows, queries).mapInPandas(kernel, schema=_topk_schema(cache))
 
 
-def topk_on_driver(
-    rows: DataFrame,
+def topk_frame(
+    pdf: pd.DataFrame,
     queries: dict[str, TopKQuery],
     k: int | None,
     k1: float,
     b: float,
     cache: np.ndarray | None,
     avgdl: float,
-) -> DataFrame:
+) -> pd.DataFrame:
     """What :func:`topk_by_partition` answers, for a query small enough
-    that a Python worker costs more than its kernel: the queries' block
-    rows come to the driver in one JVM-only Arrow collect, the same
-    kernel runs there over every segment, and the result — each query's
-    top ``k`` already ranked, so it needs no ``orderBy`` — is a
-    LocalRelation, whose ``collect()`` fires no Spark job."""
-    pdf = _query_rows(rows, queries).toArrow().to_pandas()
+    that a Python worker costs more than its kernel: the kernel over the
+    block rows ``pdf`` on the driver, every segment in one call, as one
+    ``(query_id, doc_id, score)`` frame that holds each query's top
+    ``k`` already ranked, so it needs no ``orderBy``."""
     out = list(topk_kernel(pdf, queries, k, k1, b, cache, avgdl))
-    return local_frame(
-        rows.sparkSession, pd.concat(out, ignore_index=True) if out else None,
-        _topk_schema(cache),
-    )
+    if out:
+        return pd.concat(out, ignore_index=True)
+    return _empty(np.float64 if cache is None else np.float32).assign(
+        query_id=pd.Series([], dtype=object)
+    )[["query_id", "doc_id", "score"]]
 
 
 def wand_topk(
@@ -423,7 +435,8 @@ def wand_topk(
     if blocks.sum() <= segment_searcher.DRIVER_MAX_BLOCKS:
         # the stats read counted the blocks exactly: a small query runs
         # the kernel on the driver (one more JVM-only read), no stage
-        return topk_on_driver(index.postings(segs), *query).select("doc_id", "score")
+        top = topk_frame(collect_rows(index.postings(segs), query[0]), *query)
+        return local_frame(index.spark, top, f"doc_id long, score {score_t}")
     # past it, the same kernel in one narrow stage over the rows as a
     # searcher partitions them (whole segments per partition), then
     # TopDocs.merge: global k with the HitQueue tie-break

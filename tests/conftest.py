@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import itertools
 import sys
 from pathlib import Path
 
@@ -74,3 +75,23 @@ def assert_rank_identical(spark_df, oracle_topk, tol=1e-9):
     for (gd, gs), (wd, ws) in zip(got, oracle_topk):
         assert gd == wd, (got, oracle_topk)
         assert abs(gs - ws) < tol, (gd, gs, ws)
+
+
+_job_groups = itertools.count()
+
+
+def job_ids(spark, fn) -> list[int]:
+    """The ids of the Spark jobs ``fn()`` fires, in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_jobs(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` fires."""
+    return len(job_ids(spark, fn))

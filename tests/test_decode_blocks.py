@@ -208,12 +208,9 @@ def small_index(spark, tmp_path_factory):
     return path
 
 
-@pytest.mark.parametrize("what", sorted(CORRUPTIONS))
-def test_check_index_counts_a_corrupt_block(spark, small_index, tmp_path, what):
-    """"beta" (docs 0 and 2, tfs 2 and 3) gets one corruption written
-    into its block row; check_index reports it instead of raising."""
-    from lucene_solr_spark.index.segments import SegmentedIndex
-
+def _corrupt_copy(small_index: str, tmp_path, what: str) -> str:
+    """A copy of ``small_index`` whose "beta" block row (docs 0 and 2,
+    tfs 2 and 3) has the corruption ``what`` written into it."""
     path = str(tmp_path / "idx")
     shutil.copytree(small_index, path)
     (part,) = [
@@ -227,4 +224,27 @@ def test_check_index_counts_a_corrupt_block(spark, small_index, tmp_path, what):
     pq.write_table(pa.Table.from_pylist(rows, schema=table.schema), part)
     crc = os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc")
     os.remove(crc)  # the Hadoop checksum of the old bytes
+    return path
+
+
+@pytest.mark.parametrize("what", sorted(CORRUPTIONS))
+def test_check_index_counts_a_corrupt_block(spark, small_index, tmp_path, what):
+    """check_index reports a corrupt "beta" block instead of raising."""
+    from lucene_solr_spark.index.segments import SegmentedIndex
+
+    path = _corrupt_copy(small_index, tmp_path, what)
     assert SegmentedIndex(spark, path).check_index()["problems"] == ["1 corrupt blocks"]
+
+
+@pytest.mark.parametrize("what", sorted(CORRUPTIONS))
+def test_block_store_raises_on_a_corrupt_block(spark, small_index, tmp_path, what):
+    """A searcher's block store holds the corrupt "beta" block as it is
+    on disk, and the driver kernel's decode of it raises, naming it."""
+    from lucene_solr_spark.index.segments import SegmentedIndex
+    from lucene_solr_spark.queries.segment_searcher import SegmentSearcher
+
+    s = SegmentSearcher(SegmentedIndex(spark, _corrupt_copy(small_index, tmp_path, what)))
+    assert s.search("alpha", use_cache=False).collect()  # no beta block is decoded
+    assert s._store is not None
+    with pytest.raises(ValueError, match=f"of term 'beta': .*{CORRUPTIONS[what][1]}"):
+        s.search('"beta beta"', use_cache=False)

@@ -1,14 +1,17 @@
 """The fused per-segment top-k kernel of SegmentSearcher against the plan
 path it replaces for term, flat boolean and exact phrase queries: the
 same ``(doc_id, repr(score))`` from ``search`` and ``docs``, in both
-BM25 modes and in both placements of the kernel (on the driver, the
-default for these small indexes, and in a mapInPandas stage, forced by
-``DRIVER_MAX_BLOCKS`` = 0), and the term dictionary's expansions against
-the Spark expansion."""
+BM25 modes and in every placement of the kernel — on the driver over
+the block store (the default for these small indexes), on the driver
+over one collect of the query's rows (a commit past ``STORE_MAX_BYTES``,
+forced by a budget of 0), and in a mapInPandas stage (forced by
+``DRIVER_MAX_BLOCKS`` = 0) — and the term dictionary's expansions
+against the Spark expansion."""
 
 from __future__ import annotations
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.segments import SegmentedIndex
@@ -78,6 +81,25 @@ def pair(fused_index):
     return get
 
 
+@pytest.fixture(scope="module")
+def collected(fused_index):
+    """Per mode, a searcher whose commit is past the block store's
+    budget: its driver-placed queries collect their rows in a Spark job."""
+    made = {}
+
+    def get(mode):
+        if mode not in made:
+            s = SegmentSearcher(fused_index, scoring=mode)
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(ss, "STORE_MAX_BYTES", 0)
+                assert s._term_dictionary() is not None
+            assert s._store is None
+            made[mode] = s
+        return made[mode]
+
+    return get
+
+
 def _rows(df):
     return [(r["doc_id"], repr(r["score"])) for r in df.collect()]
 
@@ -124,14 +146,17 @@ def test_fused_kernel_equals_plan_path(pair, shape, mode):
 
 @pytest.mark.parametrize("mode", ["lucene", "exact"])
 @pytest.mark.parametrize("shape", list(SHAPES))
-def test_placements_are_bit_identical(pair, shape, mode, monkeypatch):
-    """The kernel on the driver and in its mapInPandas stage return the
-    same ``(doc_id, repr(score))`` rows for ``search`` and ``docs``."""
+def test_placements_are_bit_identical(pair, collected, shape, mode, monkeypatch):
+    """The kernel on the driver over the block store, on the driver over
+    a collect of the query's rows, and in its mapInPandas stage return
+    the same ``(doc_id, repr(score))`` rows for ``search`` and ``docs``."""
     fused, _ = pair(mode)
     q = SHAPES[shape]
-    driver = _placed(fused, q, stage=False)
+    store = _placed(fused, q, stage=False)
+    assert fused._store is not None
+    assert _placed(collected(mode), q, stage=False) == store
     monkeypatch.setattr(ss, "DRIVER_MAX_BLOCKS", 0)
-    assert _placed(fused, q, stage=True) == driver
+    assert _placed(fused, q, stage=True) == store
 
 
 BATCH = {name: SHAPES[name] for name in ("term", "and", "or3", "phrase", "and-not", "df0-must")}
@@ -153,11 +178,11 @@ def test_batch_equals_single_queries(pair):
 
 
 @pytest.mark.parametrize("mode", ["lucene", "exact"])
-def test_batch_placements_are_bit_identical(pair, mode, monkeypatch):
+def test_batch_placements_are_bit_identical(pair, collected, mode, monkeypatch):
     """A batch of covered queries on the driver is one ranked
-    LocalRelation; in its stage, one kernel job plus the per-query
-    ranking.  Both give every query the same rows, alone or beside a
-    plan-path query."""
+    LocalRelation, from the block store or from a collect; in its stage,
+    one kernel job plus the per-query ranking.  All give every query the
+    same rows, alone or beside a plan-path query."""
     fused, _ = pair(mode)
     covered = {qid: q for qid, q in BATCH.items() if qid != "plan"}
     driver = {
@@ -165,6 +190,10 @@ def test_batch_placements_are_bit_identical(pair, mode, monkeypatch):
         "mixed": _batch_rows(fused, BATCH),
     }
     assert not _in_stage(fused.search_batch(covered, k=10))
+    assert {
+        "covered": _batch_rows(collected(mode), covered),
+        "mixed": _batch_rows(collected(mode), BATCH),
+    } == driver
     monkeypatch.setattr(ss, "DRIVER_MAX_BLOCKS", 0)
     assert _in_stage(fused.search_batch(covered, k=10))
     assert {"covered": _batch_rows(fused, covered), "mixed": _batch_rows(fused, BATCH)} == driver
@@ -213,6 +242,7 @@ def _check_ties(spark, tmp_path, mode, stage):
             assert _rows(df) == _rows(plan.search(q, k=k, use_cache=False)), (q, k)
         top = [d for d, _ in _rows(fused.search(q, k=3, use_cache=False))]
         assert top == ([1, 4, 0] if "gamma" in q else [0, 3, 5])
+    assert (fused._store is not None) == (ss.STORE_MAX_BYTES > 0)
 
 
 @pytest.mark.parametrize("blocks_per_partition", [1, ss.BLOCKS_PER_PARTITION])
@@ -236,6 +266,96 @@ def test_equal_scores_across_segments_keep_doc_order_in_a_stage(
     share a partition of the persisted rows or not."""
     monkeypatch.setattr(ss, "BLOCKS_PER_PARTITION", blocks_per_partition)
     _check_ties(spark, tmp_path, mode, stage=True)
+
+
+@pytest.mark.parametrize("mode", ["lucene", "exact"])
+def test_equal_scores_across_segments_keep_doc_order_over_a_collect(
+    spark, tmp_path, monkeypatch, mode
+):
+    """The same ties with the commit past the block store's budget: the
+    driver kernel over one collect of the query's rows."""
+    monkeypatch.setattr(ss, "STORE_MAX_BYTES", 0)
+    _check_ties(spark, tmp_path, mode, stage=False)
+
+
+@pytest.mark.parametrize("mode", ["lucene", "exact"])
+def test_store_budget_of_zero_collects_the_same_answers(spark, pair, collected, mode):
+    """Past the budget, the dictionary is read from the blocks' metadata
+    and each driver-placed query collects its rows in one Spark job; the
+    held dictionary, the term statistics and every answer are the same
+    as the block store's, which fires no job."""
+    fused, _ = pair(mode)
+    past = collected(mode)
+    terms = ["spark", "window", "data", "zzqqxx", "the"]
+    assert past.term_statistics(terms) == fused.term_statistics(terms)
+    for a, b in zip(past._term_dictionary(), fused._term_dictionary()):
+        assert a.dtype == b.dtype and a.tolist() == b.tolist()
+    for name in ("term", "and", "or3", "phrase"):
+        q = SHAPES[name]
+        for s, jobs in ((fused, 0), (past, 1)):
+            assert count_jobs(spark, lambda: s.search(q, k=10, use_cache=False).collect()) == jobs
+        assert _rows(past.search(q, k=10, use_cache=False)) == _rows(
+            fused.search(q, k=10, use_cache=False)
+        )
+
+
+@pytest.mark.parametrize("stage", [False, True])
+@pytest.mark.parametrize("mode", ["lucene", "exact"])
+def test_cached_search_holds_the_kernel_rows(fused_index, monkeypatch, mode, stage):
+    """A cached ``search`` keeps the kernel's ranked rows (a driver-placed
+    query hands them to the query result cache without a LocalRelation
+    of its own): the same ``(doc_id, repr(score))`` as an uncached one,
+    at every k of the window, on the driver and in the stage."""
+    if stage:
+        monkeypatch.setattr(ss, "DRIVER_MAX_BLOCKS", 0)
+    s = SegmentSearcher(fused_index, scoring=mode)
+    for name in ("term", "and", "or3", "boosted", "phrase", "df0-must"):
+        q = SHAPES[name]
+        for k in (1, 10, 20, 50):
+            want = _rows(s.search(q, k=k, use_cache=False))
+            assert _rows(s.search(q, k=k)) == want, (name, k)
+            assert _rows(s.search(q, k=k)) == want, (name, k)  # a cache hit
+    assert len(s._qr_cache) == 6 * 2  # windows of 20 and 60
+
+
+TEXTS = [
+    "alpha beta", "beta gamma", "alpha gamma delta",
+    "omega alpha", "omega beta omega", "gamma omega",
+]
+
+
+def test_store_fills_from_its_own_commit(spark, tmp_path):
+    """Searchers opened before a ``write_encoded`` of a new segment, and
+    before a merge, fill their block stores at their first query, after
+    both: each holds exactly its own commit's segments, and answers with
+    the plan path's rows, scores and statistics over that commit."""
+    idx = SegmentedIndex(spark, str(tmp_path))
+    idx.build(
+        spark.createDataFrame(list(enumerate(TEXTS[:4])), "doc_id long, content string"),
+        num_segments=2,
+    )
+    before = SegmentSearcher(idx), PlanSearcher(idx)
+    idx.write_encoded(
+        spark.createDataFrame(
+            [(i, TEXTS[i], 2) for i in (4, 5)], "doc_id long, content string, segment int"
+        ),
+        expected_segments=[2],
+    )
+    after_write = SegmentSearcher(idx), PlanSearcher(idx)
+    idx.merge([0, 1, 2], new_segment=3)
+    after_merge = SegmentSearcher(idx), PlanSearcher(idx)
+    queries = ["omega", "alpha beta", "+gamma +omega", '"omega beta"']
+    terms = ["alpha", "beta", "gamma", "omega", "delta", "zzqqxx"]
+    answers = []
+    for (held, plan), segments in ((before, [0, 1]), (after_write, [0, 1, 2]), (after_merge, [3])):
+        assert held._store is None
+        got = {q: _rows(held.search(q, k=10, use_cache=False)) for q in queries}
+        assert sorted(held._store) == segments
+        assert got == {q: _rows(plan.search(q, k=10, use_cache=False)) for q in queries}
+        assert held.term_statistics(terms) == IndexSearcher.term_statistics(plan, terms)
+        answers.append(got)
+    assert answers[0] != answers[1] == answers[2]
+    assert all(answers[2].values())
 
 
 @pytest.fixture(scope="module")

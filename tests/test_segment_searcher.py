@@ -3,9 +3,8 @@ searcher, plus pushdown-before-decode plan checks."""
 
 from __future__ import annotations
 
-import itertools
-
 import pytest
+from conftest import count_jobs, job_ids
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.segments import SegmentedIndex, collection_stats
@@ -73,27 +72,12 @@ def test_expansion_cache_keys_by_terms_not_hash(seg_searcher):
     assert {r["term"] for r in got.select("term").distinct().collect()} == {"window"}
 
 
-_groups = itertools.count()
-
-
-def _jobs(spark, fn) -> int:
-    """The Spark jobs ``fn()`` fires, counted in a job group of its own."""
-    sc = spark.sparkContext
-    group = f"count-jobs-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_open_and_block_reads_fire_no_spark_job(spark, seg_index):
     """The data directory is read with its known schema (a bare read
     infers it in a job) and the collection stats come from the manifest,
     so opening a searcher over a 6-segment index fires no job."""
-    assert _jobs(spark, seg_index.postings) == 0
-    assert _jobs(spark, lambda: SegmentSearcher(SegmentedIndex(spark, seg_index.path))) == 0
+    assert count_jobs(spark, seg_index.postings) == 0
+    assert count_jobs(spark, lambda: SegmentSearcher(SegmentedIndex(spark, seg_index.path))) == 0
 
 
 TEXTS = [
@@ -150,14 +134,16 @@ def test_searcher_keeps_its_commit_across_write_and_merge(spark, tmp_path):
     assert {q: _hits(after_merge, q) for q in queries} == written != want
 
 
-def test_warm_searcher_fires_one_job_per_query(spark, seg_index):
-    """On a warm searcher a never-seen term, ``+a +b``, ``a b c`` and
-    ``"a b"`` each run as one fused Spark job with no stats job, and a
-    batch of the four runs as one kernel job plus its per-query ranking.
-    The phrase's result is empty: an empty result must not cost a job
-    of its own."""
+def test_searcher_fires_no_job_per_query(spark, seg_index):
+    """The first search fills the block store from the commit's files
+    with no Spark job; after it, a never-seen term, ``+a +b``, ``a b c``
+    and ``"a b"`` each run the fused kernel over the store with no job,
+    through the query result cache or not, and so does a batch of the
+    four.  The phrase's result is empty: an empty result must not cost a
+    job of its own."""
     s = SegmentSearcher(seg_index)
-    s.search("spark", use_cache=False).collect()  # loads the dictionary, co-locates the rows
+    assert count_jobs(spark, lambda: s.search("spark", use_cache=False).collect()) == 0
+    assert s._store is not None
     queries = {
         "term": "window",
         "and": "+table +query",
@@ -166,10 +152,11 @@ def test_warm_searcher_fires_one_job_per_query(spark, seg_index):
     }
     for kind, q in queries.items():
         terms = q.replace('"', "").replace("+", "").split()
-        assert _jobs(spark, lambda: s.term_statistics(terms)) == 0, kind
-        assert _jobs(spark, lambda: s.search(q, use_cache=False).collect()) <= 1, kind
+        assert count_jobs(spark, lambda: s.term_statistics(terms)) == 0, kind
+        assert count_jobs(spark, lambda: s.search(q, use_cache=False).collect()) == 0, kind
+        assert count_jobs(spark, lambda: s.search(q).collect()) == 0, kind
     batch = {k: q.upper() for k, q in queries.items()}  # never-seen queries
-    assert _jobs(spark, lambda: s.search_batch(batch, k=10).collect()) <= 2
+    assert count_jobs(spark, lambda: s.search_batch(batch, k=10).collect()) == 0
 
 
 def test_driver_placed_results_collect_with_no_job(spark, seg_index):
@@ -180,7 +167,7 @@ def test_driver_placed_results_collect_with_no_job(spark, seg_index):
     for q in ("window", "+table +query", "merge scan hash", '"spark window"'):
         for df in (s.search(q, use_cache=False), s.docs(q)):
             rows = []
-            assert _jobs(spark, lambda: rows.extend(df.collect())) == 0, q
+            assert count_jobs(spark, lambda: rows.extend(df.collect())) == 0, q
             assert rows, q
 
 
@@ -194,12 +181,12 @@ def test_empty_results_collect_with_no_job(spark, seg_index, searcher):
         q = "+spark +zzqqxx"
         assert s.search(q).collect() == []  # fills the query result cache
         df = s.search(q)
-        assert _jobs(spark, df.collect) == 0
+        assert count_jobs(spark, df.collect) == 0
         assert df.schema == s._empty_scored().schema
     df = searcher.docs("zzqqxx")
-    assert _jobs(spark, df.collect) == 0
+    assert count_jobs(spark, df.collect) == 0
     df = wand_topk(seg_index, ["zzqqxx"], k=10)
-    assert _jobs(spark, df.collect) == 0
+    assert count_jobs(spark, df.collect) == 0
 
 
 def test_wand_stats_round_is_one_single_stage_read(spark, seg_index):
@@ -210,14 +197,7 @@ def test_wand_stats_round_is_one_single_stage_read(spark, seg_index):
     one stage — no shuffle."""
     from lucene_solr_spark.queries.wand import wand_topk
 
-    sc = spark.sparkContext
-    group = f"count-jobs-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        wand_topk(seg_index, ["spark", "window"], k=10).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    jobs = job_ids(spark, lambda: wand_topk(seg_index, ["spark", "window"], k=10).collect())
     assert 1 <= len(jobs) <= 2
     for j in jobs:
-        assert len(sc.statusTracker().getJobInfo(j).stageIds) == 1
+        assert len(spark.sparkContext.statusTracker().getJobInfo(j).stageIds) == 1
