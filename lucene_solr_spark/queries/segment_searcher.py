@@ -16,7 +16,8 @@ encoded block rows as one Arrow table sorted by ``(term, base_docid)``,
 with each term's row range (:class:`SegmentBlocks`: the terms index →
 terms dictionary → postings file pointers of BlockTreeTermsReader).
 pyarrow reads it from the commit's parquet files on the first lookup,
-with no Spark job, so opening still fires none.
+with no Spark job, so opening still fires none.  Searchers that hold the
+same segment files share one copy of them.
 
 Two plans answer a query:
 
@@ -43,17 +44,18 @@ Two plans answer a query:
 
 Term statistics come from a term dictionary held on the driver — sorted
 ``(term, df, ttf, blocks)`` arrays, summed from the block store, or past
-its budget read once from the blocks' metadata (the BlockTree terms
-index ``.tip`` is held on the heap the same way) — so a query fires no
-stats job.  Prefix and term-range expansion are ``searchsorted`` ranges
-over it.  An index with more than ``DICTIONARY_MAX_TERMS`` (segment,
-term) entries keeps the per-query stats collect and the Spark expansion
-instead.
+its budget from a pyarrow read of the blocks' ``term, count, sum_tf``
+alone (the BlockTree terms index ``.tip`` is held on the heap the same
+way) — so a query fires no stats job.  Prefix and term-range expansion
+are ``searchsorted`` ranges over it.  An index with more than
+``DICTIONARY_MAX_TERMS`` (segment, term) entries keeps the per-query
+stats collect and the Spark expansion instead.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 from collections.abc import Iterable
 from dataclasses import dataclass
 from functools import reduce
@@ -65,6 +67,8 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 from lucene_solr_spark.codecs.postings import concat_ranges
 from lucene_solr_spark.index.builder import IndexTables
@@ -116,22 +120,33 @@ BLOCKS_PER_PARTITION = 65_536
 # driver took 0.11 s against 0.40 s for the stage at 1,997 blocks,
 # 0.28-0.31 s against 0.44 s at 5,824, 0.40-0.47 s against 0.52 s at
 # 7,787, 0.64-0.65 s against 0.80 s at 9,707, and 1.09-1.13 s against
-# 1.07 s at 11,642 (372 terms).  Past the store's budget the driver also
-# pays a collect of the rows.
+# 1.07 s at 11,642 (372 terms).  The placements that also pay a collect
+# of the rows, a searcher past the store's budget and ``wand_topk``, won
+# 14 of 16 paired medians of 7 near the bound, by less: at 5,824 blocks
+# 0.45-0.62 s against 0.57-0.67 s for the stage (wand_topk 0.65-0.82 s
+# against 0.77-0.83 s), at 7,787 blocks 0.68-0.71 s against 0.71-0.80 s
+# (wand_topk 0.72-0.91 s against 0.76-0.94 s).
 DRIVER_MAX_BLOCKS = 8192
-# estimated bytes of a commit's encoded block rows up to which a
-# searcher holds them on the driver (see SegmentBlocks); past it, each
-# driver-placed query collects its rows in a Spark job
+# estimated bytes (held_bytes) of a commit's encoded block rows up to
+# which a searcher holds them on the driver (see SegmentBlocks); past it,
+# each driver-placed query collects its rows in a Spark job.  One copy
+# serves every searcher over the same segment files.  On the 40,000-doc
+# perfbench corpus the estimate is 22 MB, the Arrow tables 15.5 MB, and a
+# first fill grew the driver process by 39-53 MB (pyarrow's pool keeps
+# the read buffers).  The 256 MB itself is not tied to a measured
+# driver memory limit.
 STORE_MAX_BYTES = 256 << 20
-# the block columns the store holds, and the columns it reads with
-# their types in the commit's parquet files (SEGMENT_ROWS_SCHEMA)
+# the block columns the store holds, and those the term dictionary sums
 _HELD = [
     "term", "base_docid", "count", "max_docid", "max_tf", "sum_tf",
     "docs_bin", "tfs_bin", "lens_bin", "pos_bin",
 ]
-_ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "string": pa.string(), "binary": pa.binary()}
-_FILE_TYPES = dict(f.split() for f in SEGMENT_ROWS_SCHEMA.split(", "))
-_READ_SCHEMA = pa.schema([(c, _ARROW_TYPES[_FILE_TYPES[c]]) for c in ("kind", *_HELD)])
+_STATS = ["term", "count", "sum_tf"]
+# (segment directory, its files' names, sizes and mtimes) → the
+# SegmentBlocks held from those files, shared by every searcher that holds
+# them (a ``lucene`` and an ``exact`` searcher over one commit, or two
+# commits that share a segment); an entry goes with its last searcher
+_SHARED: weakref.WeakValueDictionary = weakref.WeakValueDictionary()
 
 
 def held_bytes(infos: Iterable[SegmentInfo]) -> int:
@@ -156,17 +171,30 @@ class SegmentBlocks:
     starts: np.ndarray
 
     @classmethod
-    def read(cls, index: SegmentedIndex, segment: int) -> "SegmentBlocks":
-        """The segment's block rows, read by pyarrow from its parquet
-        files on the driver: no Spark job."""
-        path = os.path.join(index._data_dir, f"segment={segment}")
+    def held(cls, path: str) -> "SegmentBlocks":
+        """The block rows of the segment directory ``path``, read once
+        for every searcher that holds the same files."""
+        path = os.path.realpath(path)
+        files = tuple(sorted(
+            (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(path)
+        )) if os.path.isdir(path) else ()
+        blocks = _SHARED.get((path, files))
+        if blocks is None:
+            blocks = _SHARED[(path, files)] = cls.read(path, _HELD)
+        return blocks
+
+    @classmethod
+    def read(cls, path: str, columns: list[str]) -> "SegmentBlocks":
+        """The ``columns`` of the block rows in the segment directory
+        ``path``, read by pyarrow on the driver: no Spark job."""
+        schema = to_arrow_schema(_parse_datatype_string(SEGMENT_ROWS_SCHEMA))
         if os.path.isdir(path):
-            rows = ds.dataset(path, schema=_READ_SCHEMA, format="parquet").to_table(
-                columns=_HELD, filter=pc.field("kind") == 0
+            rows = ds.dataset(path, schema=schema, format="parquet").to_table(
+                columns=columns, filter=pc.field("kind") == 0
             )
         else:
-            rows = _READ_SCHEMA.empty_table().select(_HELD)
-        rows = rows.sort_by([("term", "ascending"), ("base_docid", "ascending")])
+            rows = schema.empty_table().select(columns)
+        rows = rows.sort_by([(c, "ascending") for c in ("term", "base_docid") if c in columns])
         # Arrow sorts strings by UTF-8 bytes, which is code-point order,
         # the order numpy compares Python strings in
         term = rows.column("term").to_numpy(zero_copy_only=False)
@@ -189,8 +217,8 @@ class SegmentBlocks:
 
 
 def _dictionary_of(store: list[SegmentBlocks]) -> tuple[np.ndarray, ...]:
-    """(term, df, ttf, blocks) summed over the held segments, sorted by
-    term: what ``SegmentedIndex.term_stat_arrays`` reads, with no read."""
+    """(term, df, ttf, blocks) summed over the segments ``store``,
+    sorted by term."""
     if not store:
         none = np.zeros(0, np.int64)
         return np.zeros(0, object), none, none, none
@@ -216,7 +244,8 @@ class SegmentSearcher(IndexSearcher):
     stats all come from that read, so a later build, merge or
     ``write_encoded`` changes nothing this searcher scores with.  Opening
     fires no Spark job; the block store fills and every frame persists
-    on first use, and all state is the searcher's own."""
+    on first use.  All state is the searcher's own, but for the store's
+    segments, which searchers holding the same files share."""
 
     def __init__(
         self,
@@ -259,16 +288,20 @@ class SegmentSearcher(IndexSearcher):
 
     # ------------------------------------------------------ dictionary
     def _term_dictionary(self) -> tuple[np.ndarray, ...] | None:
-        """Sorted (term, df, ttf, blocks) arrays, loaded on first use —
-        summed from the block store, which fills then, or past
-        ``STORE_MAX_BYTES`` read from the blocks' metadata; None when the
-        index is past ``DICTIONARY_MAX_TERMS``."""
+        """Sorted (term, df, ttf, blocks) arrays, loaded on first use and
+        summed from the commit's block rows: from the block store, which
+        fills then, or past ``STORE_MAX_BYTES`` from a read of their
+        ``term, count, sum_tf`` alone; None when the index is past
+        ``DICTIONARY_MAX_TERMS``."""
         if self._dictionary is None and self._num_terms <= DICTIONARY_MAX_TERMS:
+            dirs = {s: os.path.join(self.index._data_dir, f"segment={s}") for s in self._segments}
             if self._held_bytes <= STORE_MAX_BYTES:
-                self._store = {s: SegmentBlocks.read(self.index, s) for s in self._segments}
+                self._store = {s: SegmentBlocks.held(d) for s, d in dirs.items()}
                 self._dictionary = _dictionary_of(list(self._store.values()))
             else:
-                self._dictionary = self.index.term_stat_arrays(self._segments)
+                self._dictionary = _dictionary_of(
+                    [SegmentBlocks.read(d, _STATS) for d in dirs.values()]
+                )
         return self._dictionary
 
     def term_statistics(self, terms: list[str]) -> dict[str, tuple[int, int]]:

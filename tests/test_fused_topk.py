@@ -10,6 +10,8 @@ against the Spark expansion."""
 
 from __future__ import annotations
 
+import gc
+
 import pytest
 from conftest import count_jobs
 from pyspark.sql import functions as F
@@ -280,16 +282,18 @@ def test_equal_scores_across_segments_keep_doc_order_over_a_collect(
 
 @pytest.mark.parametrize("mode", ["lucene", "exact"])
 def test_store_budget_of_zero_collects_the_same_answers(spark, pair, collected, mode):
-    """Past the budget, the dictionary is read from the blocks' metadata
-    and each driver-placed query collects its rows in one Spark job; the
-    held dictionary, the term statistics and every answer are the same
-    as the block store's, which fires no job."""
+    """Past the budget, the dictionary is summed from a read of the
+    blocks' ``term, count, sum_tf`` alone, and each driver-placed query
+    collects its rows in one Spark job; the held dictionary (also
+    against the Spark read of the same sums), the term statistics and
+    every answer are the same as the block store's, which fires no job."""
     fused, _ = pair(mode)
     past = collected(mode)
     terms = ["spark", "window", "data", "zzqqxx", "the"]
     assert past.term_statistics(terms) == fused.term_statistics(terms)
-    for a, b in zip(past._term_dictionary(), fused._term_dictionary()):
-        assert a.dtype == b.dtype and a.tolist() == b.tolist()
+    spark_read = fused.index.term_stat_arrays(fused._segments)
+    for a, b, c in zip(past._term_dictionary(), fused._term_dictionary(), spark_read):
+        assert a.dtype == b.dtype and a.tolist() == b.tolist() == c.tolist()
     for name in ("term", "and", "or3", "phrase"):
         q = SHAPES[name]
         for s, jobs in ((fused, 0), (past, 1)):
@@ -322,6 +326,49 @@ TEXTS = [
     "alpha beta", "beta gamma", "alpha gamma delta",
     "omega alpha", "omega beta omega", "gamma omega",
 ]
+
+
+def _texts(spark, docs):
+    return spark.createDataFrame([(i, TEXTS[i]) for i in docs], "doc_id long, content string")
+
+
+def test_searchers_share_a_segment_store_while_its_files_are_the_same(spark, tmp_path):
+    """A ``lucene`` and an ``exact`` searcher over one commit hold one
+    copy of each segment's block rows, and a searcher over a later commit
+    shares the segments it did not change.  A rebuild writes new files,
+    which a searcher opened after it reads afresh; a copy goes with the
+    last searcher holding it.  Filling a store or a past-budget
+    dictionary fires no Spark job."""
+    idx = SegmentedIndex(spark, str(tmp_path))
+    idx.build(_texts(spark, range(4)), num_segments=2)
+    lucene, exact = SegmentSearcher(idx), SegmentSearcher(idx, scoring="exact")
+    assert [count_jobs(spark, s._term_dictionary) for s in (lucene, exact)] == [0, 0]
+    assert sorted(lucene._store) == [0, 1]
+    assert all(exact._store[i] is lucene._store[i] for i in (0, 1))
+    idx.write_encoded(
+        spark.createDataFrame([(4, TEXTS[4], 2)], "doc_id long, content string, segment int"),
+        expected_segments=[2],
+    )
+    later = SegmentSearcher(idx)
+    later._term_dictionary()
+    assert [later._store[i] is lucene._store[i] for i in (0, 1)] == [True, True]
+    idx.build(_texts(spark, range(4)), num_segments=2, resume=False)
+    rebuilt, plan = SegmentSearcher(idx), PlanSearcher(idx)
+    rebuilt._term_dictionary()
+    assert not any(rebuilt._store[i] is lucene._store[i] for i in (0, 1))
+    assert _rows(rebuilt.search("omega beta", use_cache=False)) == _rows(
+        plan.search("omega beta", use_cache=False)
+    )
+    old = {id(lucene._store[i]) for i in (0, 1)}
+    assert old <= {id(v) for v in ss._SHARED.values()}
+    del lucene, exact, later
+    gc.collect()
+    assert not old & {id(v) for v in ss._SHARED.values()}
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(ss, "STORE_MAX_BYTES", 0)
+        past = SegmentSearcher(idx)
+        assert count_jobs(spark, past._term_dictionary) == 0
+    assert past._store is None
 
 
 def test_store_fills_from_its_own_commit(spark, tmp_path):
